@@ -10,7 +10,7 @@ against *these rules*, restated once here and implemented three times:
 1. :mod:`..oracle` — single-process pure-Python golden extractor
    (the analog of ``scripts/inference_kie.py:process_image``).
 2. :mod:`..operators.mention_detect` — the vectorized Spark detector
-   (``mapInPandas`` over Arrow batches, no per-row Python).
+   (``mapInArrow`` over Arrow record batches, no per-row Python).
 3. The DuckDB ``oracle_sql()`` strings in ``__spark_entry__.py``.
 
 Tokenization: split on single spaces (reference cells are already

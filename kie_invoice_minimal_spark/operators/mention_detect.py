@@ -9,9 +9,10 @@ token with the deterministic rule set in :mod:`..functions.rules`.
 
 Two interchangeable implementations, tested for equality:
 
-- :func:`detect_mentions_arrow` — ``mapInPandas``: whole-Arrow-batch numpy/
-  pandas ops, zero per-row Python (the north rule's required surface; this is
-  what the flagship pipeline uses).  The model-scoring analog slot: any
+- :func:`detect_mentions_arrow` — ``mapInArrow``: pyarrow compute kernels
+  and numpy over whole record batches, zero per-row Python and no pandas
+  conversion (the north rule's required surface; this is what the flagship
+  pipeline uses).  The model-scoring analog slot: any
   learned detector (a real NER model) would drop into this same UDF body.
 - :func:`detect_mentions_native` — pure JVM column expressions
   (posexplode + higher-order functions), whole-stage-codegen friendly; the
@@ -31,7 +32,6 @@ from __future__ import annotations
 from collections.abc import Iterator
 
 import numpy as np
-import pandas as pd
 import pyarrow as pa
 import pyarrow.compute as pc
 
@@ -68,27 +68,28 @@ _NAMES = pa.array(sorted(rules.NAME_GAZETTEER))
 # Python/SQL forms in rules.py
 _DATE_PAT = rules.DATE_RE_SQL
 _WEIGHT_PAT = rules.WEIGHT_RE_SQL
+_LABELS = pa.array(
+    [rules.OTHER, "MFG_LABEL", "EXP_LABEL", "WEIGHT_LABEL", "MFG", "EXP", "WEIGHT", "BRAND", "NAME"]
+)
 
 
-def _classify_batch(df: pd.DataFrame) -> pd.DataFrame:
-    """Vectorized rule classifier over one Arrow batch of turns.
+def _classify_batch(batch: pa.RecordBatch) -> pa.RecordBatch:
+    """Vectorized rule classifier over one Arrow batch of turns
+    ``(conv_id, turn_idx, text)`` -> the ``mentions`` columns.
 
     Tokenization, lowering, set membership and regex all run in pyarrow
     compute kernels (C++); the segment arithmetic for positions/spans is
-    numpy.  No Python loop over rows or tokens.
+    numpy.  Outputs are ``pc.take`` gathers over the input columns and the
+    label table — no Python loop over rows or tokens, no pandas.
     """
-    if df.empty:
-        return pd.DataFrame(
-            {f.name: pd.Series(dtype="object") for f in MENTION_SCHEMA.fields}
-        )
     # null text = no content (never the string 'None')
-    texts = pa.array(df["text"].fillna("").astype(str), type=pa.string())
+    texts = pc.fill_null(batch.column("text").cast(pa.string()), "")
     sp = pc.split_pattern(texts, " ")
     flat = pc.list_flatten(sp)
     counts = pc.list_value_length(sp).to_numpy().astype(np.int64)
 
     n = int(counts.sum())
-    starts = np.concatenate(([0], np.cumsum(counts[:-1]))).astype(np.int64)
+    starts = np.cumsum(counts) - counts
     pos = np.arange(n, dtype=np.int64) - np.repeat(starts, counts)
 
     # char spans: within-turn cumsum of (len+1) = global cumsum - segment base
@@ -111,7 +112,8 @@ def _classify_batch(df: pd.DataFrame) -> pd.DataFrame:
     prev_mfg = np.concatenate(([False], is_mfg_l[:-1])) & (pos > 0)
     prev_exp = np.concatenate(([False], is_exp_l[:-1])) & (pos > 0)
 
-    label = np.select(
+    # first match wins; codes index _LABELS, 0 = OTHER
+    code = np.select(
         [
             is_mfg_l,
             is_exp_l,
@@ -123,44 +125,33 @@ def _classify_batch(df: pd.DataFrame) -> pd.DataFrame:
             is_brand,
             is_name,
         ],
-        [
-            "MFG_LABEL",
-            "EXP_LABEL",
-            "WEIGHT_LABEL",
-            "MFG",
-            "EXP",
-            rules.OTHER,
-            "WEIGHT",
-            "BRAND",
-            "NAME",
-        ],
-        default=rules.OTHER,
+        [1, 2, 3, 4, 5, 0, 6, 7, 8],
+        default=0,
     )
-    keep = label != rules.OTHER
-    surface = flat.to_numpy(zero_copy_only=False)
-    return pd.DataFrame(
-        {
-            "conv_id": np.repeat(df["conv_id"].to_numpy(), counts)[keep],
-            "turn_idx": np.repeat(
-                df["turn_idx"].to_numpy().astype(np.int32), counts
-            )[keep],
-            "pos": pos[keep].astype(np.int32),
-            "span_start": span_start[keep].astype(np.int32),
-            "span_end": (span_start + tok_len)[keep].astype(np.int32),
-            "surface": surface[keep],
-            "mention_type": label[keep],
-        }
+    keep = np.flatnonzero(code)
+    row = np.repeat(np.arange(batch.num_rows), counts)[keep]
+    return pa.RecordBatch.from_arrays(
+        [
+            pc.take(batch.column("conv_id"), row),
+            pc.take(batch.column("turn_idx"), row).cast(pa.int32()),
+            pa.array(pos[keep], pa.int32()),
+            pa.array(span_start[keep], pa.int32()),
+            pa.array((span_start + tok_len)[keep], pa.int32()),
+            pc.take(flat, keep),
+            pc.take(_LABELS, code[keep]),
+        ],
+        names=MENTION_SCHEMA.fieldNames(),
     )
 
 
 def detect_mentions_arrow(transcripts: DataFrame) -> DataFrame:
-    """Mention detection as a ``mapInPandas`` over Arrow batches."""
+    """Mention detection as a ``mapInArrow`` over Arrow record batches."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield _classify_batch(pdf)
+    def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        for batch in batches:
+            yield _classify_batch(batch)
 
-    return transcripts.select("conv_id", "turn_idx", "text").mapInPandas(
+    return transcripts.select("conv_id", "turn_idx", "text").mapInArrow(
         run, schema=MENTION_SCHEMA_DDL
     )
 

@@ -2,8 +2,8 @@
 Arrow-batched UDFs.
 
 Image/audio/video payloads are opaque ``binary`` columns; decode /
-feature-extract / resize / frame-sample run as vectorized pandas UDFs over
-``mapInPandas``.  The decode libraries (PIL/ffmpeg) are NOT in this
+feature-extract / resize / frame-sample run as vectorized Arrow UDFs over
+``mapInArrow``.  The decode libraries (PIL/ffmpeg) are NOT in this
 container, so the byte->pixels step is a clearly-marked deterministic fake
 (`_fake_decode`) behind the same schema/partitioning/batch shape a real
 decoder would use — swap `_fake_decode` for the real library call and
@@ -20,7 +20,8 @@ from __future__ import annotations
 from collections.abc import Iterator
 
 import numpy as np
-import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -55,13 +56,13 @@ def mm_decode_metadata(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select("doc_id", "text")
     payloads = with_payload(docs).select("doc_id", "payload")
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            n = pdf["payload"].map(len).to_numpy(dtype=np.int64)
+    def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        for batch in batches:
+            n = pc.binary_length(batch.column("payload")).cast(pa.int64()).to_numpy()
             meta = _fake_decode(n)
-            yield pd.DataFrame(
+            yield pa.RecordBatch.from_pydict(
                 {
-                    "doc_id": pdf["doc_id"].astype("int64"),
+                    "doc_id": batch.column("doc_id").cast(pa.int64()),
                     "n_bytes": n,
                     "width": meta["width"],
                     "height": meta["height"],
@@ -69,7 +70,7 @@ def mm_decode_metadata(spark: SparkSession, sf_dir: str) -> DataFrame:
                 }
             )
 
-    return payloads.mapInPandas(run, schema=MEDIA_META_SCHEMA)
+    return payloads.mapInArrow(run, schema=MEDIA_META_SCHEMA)
 
 
 # DuckDB twin of the deterministic fake — proves the Spark-side plumbing

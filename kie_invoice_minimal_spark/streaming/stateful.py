@@ -8,7 +8,7 @@ emit an updated summary row per conversation per trigger.
 
 This is the ``applyInPandasWithState`` pattern: grouped by conv_id, state =
 (n_turns_seen, n_mentions, max_turn_idx), batch-vectorized update (the
-detector's numpy classifier runs on the whole group batch), timeout-free.
+detector's Arrow classifier runs on the whole group batch), timeout-free.
 
 Scale notes: state size is O(active conversations) and each value is three
 ints; group key = conv_id so the shuffle matches the batch pipeline's
@@ -20,6 +20,7 @@ from __future__ import annotations
 from collections.abc import Iterable, Iterator
 
 import pandas as pd
+import pyarrow as pa
 
 from pyspark.sql import DataFrame
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
@@ -44,8 +45,10 @@ def _update(
         n_turns += len(pdf)
         if len(pdf):
             max_turn = max(max_turn, int(pdf["turn_idx"].max()))
-            mentions = _classify_batch(pdf[["conv_id", "turn_idx", "text"]])
-            n_mentions += len(mentions)
+            turns = pa.RecordBatch.from_pandas(
+                pdf[["conv_id", "turn_idx", "text"]], preserve_index=False
+            )
+            n_mentions += _classify_batch(turns).num_rows
     state.update((n_turns, n_mentions, max_turn))
     yield pd.DataFrame(
         {

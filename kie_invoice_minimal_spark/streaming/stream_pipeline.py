@@ -116,8 +116,8 @@ def run_stream_to_memory(
 def streaming_triples(transcripts: DataFrame, gap: str = "30 minutes") -> DataFrame:
     """Streaming form of the flagship triple materialization: a
     conversation's triples FINALIZE when the conversation goes quiet — a
-    session window per (conv_id, mention_type) with the same deterministic
-    sorted in-group concat as ``triples.materialize_triples``.  Append-mode
+    session window per (conv_id, mention_type) with the same
+    (turn_idx, pos)-ordered ' '-join as ``triples.materialize_triples``.  Append-mode
     output: each (subj, pred, obj) row is emitted exactly once, when the
     watermark passes the session end (the streaming analog of "the
     document is fully received" in the reference's request loop).

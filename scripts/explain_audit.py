@@ -40,7 +40,7 @@ def plan_of(df) -> str:
 def audit(name: str, plan: str) -> list[str]:
     flags = []
     n_exchange = len(re.findall(r"\bExchange\b", plan))
-    n_arrow = len(re.findall(r"ArrowEvalPython|MapInPandas|FlatMapGroupsInPandas", plan))
+    n_arrow = len(re.findall(r"ArrowEvalPython|MapInPandas|MapInArrow|FlatMapGroupsInPandas", plan))
     if "BatchEvalPython" in plan:
         flags.append("ROW-AT-A-TIME PYTHON UDF (BatchEvalPython) — forbidden")
     if re.search(r"ReadSchema: struct<.{400,}", plan):
@@ -56,7 +56,7 @@ def table_row(name: str, plan: str) -> str:
     n_exchange = len(re.findall(r"^\(\d+\) Exchange", plan, re.M))
     n_arrow = len(
         re.findall(
-            r"^\(\d+\) (?:ArrowEvalPython|MapInPandas|FlatMapGroupsInPandas)",
+            r"^\(\d+\) (?:ArrowEvalPython|MapInPandas|MapInArrow|FlatMapGroupsInPandas)",
             plan,
             re.M,
         )

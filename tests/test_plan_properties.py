@@ -54,7 +54,8 @@ def test_no_row_at_a_time_python_anywhere(spark):
 
 
 def test_flagship_native_single_exchange(spark):
-    """The flagship keeps exactly ONE data shuffle (the triple groupBy).
+    """The flagship keeps exactly ONE data shuffle (the triples'
+    repartition on (subj, pred)).
     A keyless RoundRobinPartitioning exchange is additionally allowed:
     that is sources/scan.spread_scan's adaptive scan fan-out, which only
     exists when the input file is too small for the scan to parallelize
@@ -67,6 +68,21 @@ def test_flagship_native_single_exchange(spark):
         f"flagship should have exactly one data shuffle (+ optional "
         f"adaptive spread), saw {n_ex} exchanges ({n_spread} round-robin)"
     )
+
+
+def test_flagship_arrow_is_one_arrow_boundary_per_step(spark):
+    """The Arrow flagship runs the detector and the triple run join as
+    mapInArrow over one hash exchange: no pandas conversion, no
+    collect_list aggregate."""
+    from kie_invoice_minimal_spark.plans.pipeline import extract_triples_df
+    from kie_invoice_minimal_spark.sources.transcripts import synth_transcripts
+
+    plan = _plan(extract_triples_df(synth_transcripts(spark, 200), engine="arrow"))
+    nodes = re.findall(r"^\(\d+\) (\w+)", plan, re.M)
+    hashed = re.findall(r"^Arguments: hashpartitioning", plan, re.M)
+    assert nodes.count("Exchange") == len(hashed) == 1, plan
+    assert nodes.count("MapInArrow") == 2, nodes
+    assert "MapInPandas" not in nodes and "ObjectHashAggregate" not in nodes, nodes
 
 
 def test_mention_scan_prunes_columns(spark):

@@ -10,7 +10,7 @@ from kie_invoice_minimal_spark.functions.rules import classify_token
 from kie_invoice_minimal_spark.operators.mention_detect import _classify_batch
 from kie_invoice_minimal_spark.oracle import detect_mentions
 
-import pandas as pd
+import pyarrow as pa
 
 TOKENS = st.sampled_from(
     [
@@ -26,7 +26,7 @@ TEXTS = st.lists(TOKENS, min_size=0, max_size=12).map(" ".join)
 @settings(max_examples=60, deadline=None)
 @given(st.lists(TEXTS, min_size=1, max_size=8))
 def test_batch_classifier_matches_oracle(texts):
-    pdf = pd.DataFrame(
+    batch = pa.RecordBatch.from_pydict(
         {
             "conv_id": [f"c{i}" for i in range(len(texts))],
             "turn_idx": list(range(len(texts))),
@@ -36,9 +36,12 @@ def test_batch_classifier_matches_oracle(texts):
     got = sorted(
         map(
             tuple,
-            _classify_batch(pdf)[
-                ["conv_id", "turn_idx", "pos", "span_start", "span_end", "surface", "mention_type"]
-            ].itertuples(index=False),
+            (
+                r.values()
+                for r in _classify_batch(batch)
+                .select(["conv_id", "turn_idx", "pos", "span_start", "span_end", "surface", "mention_type"])
+                .to_pylist()
+            ),
         )
     )
     want = sorted(
