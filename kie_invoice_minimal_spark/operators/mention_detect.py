@@ -9,11 +9,14 @@ token with the deterministic rule set in :mod:`..functions.rules`.
 
 Two interchangeable implementations, tested for equality:
 
-- :func:`detect_mentions_arrow` — ``mapInArrow``: pyarrow compute kernels
-  and numpy over whole record batches, zero per-row Python and no pandas
-  conversion (the north rule's required surface; this is what the flagship
-  pipeline uses).  The model-scoring analog slot: any
-  learned detector (a real NER model) would drop into this same UDF body.
+- :func:`detect_mentions_arrow` — ``mapInArrow`` over :func:`_classify_batch`:
+  pyarrow compute kernels and numpy over whole record batches, zero per-row
+  Python and no pandas conversion (the north rule's required surface).  The
+  Arrow flagship (``plans/pipeline.extract_triples_df``) calls
+  ``_classify_batch`` inside its one triple-join ``mapInArrow`` instead;
+  this map serves ``kg_mentions``, the staged pipeline and streaming.  The
+  model-scoring analog slot: any learned detector (a real NER model) would
+  drop into this same batch function.
 - :func:`detect_mentions_native` — pure JVM column expressions
   (posexplode + higher-order functions), whole-stage-codegen friendly; the
   fastest path when the rule set is expressible in SQL.

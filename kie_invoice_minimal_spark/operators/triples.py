@@ -2,21 +2,26 @@
 
 The reference's ``postprocess_write_info`` (``backend/kie/kie_utils.py:314-340``)
 builds, per document and per non-OTHER label, the ' '-join of all member
-texts in index order.  Here that is a sorted-run join emitting the
-``triples`` table ``(subj, pred, obj, conv_id)``: one hash exchange on
-``(subj, pred)``, a partition-local sort on ``(subj, pred, turn_idx, pos)``,
-then a ``mapInArrow`` kernel that cuts each sorted partition into key runs
-and ' '-joins every run with one pyarrow ``binary_join``.  The writer
-partitions by ``(pred, subj_bucket)`` with an explicit salt column for hot
-subjects (north rule: skew handled explicitly, not left to AQE alone).
+texts in index order.  Here that is a whole-subject Arrow join emitting the
+``triples`` table ``(subj, pred, obj, conv_id)``: one hash exchange on the
+subject, a partition-local sort that clusters it, then one ``mapInArrow``
+kernel that re-cuts the batch stream so every subject is whole in one batch,
+sorts that batch on ``(subj, pred, turn_idx, pos, surface)`` and ' '-joins
+every (subj, pred) run with one pyarrow ``binary_join``.  The flagship
+(``plans/pipeline.extract_triples_df``) runs the same kernel over turns keyed
+by conv_id with the detector inside it; :func:`materialize_triples` runs it
+over a ``mentions`` table.  The writer partitions by ``(pred, subj_bucket)``
+with an explicit salt column for hot subjects (north rule: skew handled
+explicitly, not left to AQE alone).
 
 Why not a groupBy: a conversation holds ~2 mentions per label, so a
 ``collect_list`` aggregate's partial step saves nothing and its object
-buffers fall back to sort-based aggregation anyway; here the sort is paid
-once and the join runs in C++ over whole Arrow batches.
+buffers fall back to sort-based aggregation anyway; here the join runs in
+C++ over whole Arrow batches and Spark only clusters the subject.
 
-Scale notes: the exchange keys on a high-cardinality composite — no skew
-(conversations are bounded).  Skew appears at WRITE time (hot predicate
+Scale notes: the exchange keys on the conversation, and conversations are
+bounded (≤ thousands of turns), so a re-cut batch is at most one Arrow batch
+plus one conversation.  Skew appears at WRITE time (hot predicate
 partitions, hot subjects); the salt splits a hot subject's rows across
 SALT_BUCKETS files within its partition so no single task owns a
 mega-partition.
@@ -24,7 +29,7 @@ mega-partition.
 
 from __future__ import annotations
 
-from collections.abc import Iterator
+from collections.abc import Callable, Iterator
 
 import numpy as np
 import pyarrow as pa
@@ -38,17 +43,20 @@ from ..functions.rules import OTHER
 SUBJ_BUCKETS = 64
 SALT_BUCKETS = 8
 
-_KEY = ["subj", "pred"]
+_KEY = ("subj", "pred")
+# the order the reference joins a label's texts in; ``surface`` closes it
+# so duplicate (turn_idx, pos) rows join deterministically
+_ORDER = [(c, "ascending") for c in (*_KEY, "turn_idx", "pos", "surface")]
 
 
-def _run_starts(batch: pa.RecordBatch) -> np.ndarray:
-    """Rows 1..n-1 whose (subj, pred) differs from the row before.  Null-safe:
-    ``not_equal`` is null when either side is null, so a null <-> non-null
-    change is made a boundary explicitly (null subjects form one group of
-    their own, as under SQL GROUP BY)."""
+def _run_starts(batch: pa.RecordBatch, key: tuple[str, ...]) -> np.ndarray:
+    """Rows 1..n-1 whose ``key`` columns differ from the row before.
+    Null-safe: ``not_equal`` is null when either side is null, so a
+    null <-> non-null change is made a boundary explicitly (null keys form
+    one group of their own, as under SQL GROUP BY)."""
     n = batch.num_rows
     change = np.zeros(n - 1, dtype=bool)
-    for name in _KEY:
+    for name in key:
         col = batch.column(name)
         cur, prev = col.slice(1), col.slice(0, n - 1)
         ne = pc.fill_null(pc.not_equal(cur, prev), False)
@@ -71,75 +79,88 @@ def _join_runs(surface: pa.Array, starts: np.ndarray, end: int) -> pa.Array:
     return pc.binary_join(runs, " ")
 
 
-def _triples_batch(key: pa.RecordBatch, obj: pa.Array) -> pa.RecordBatch:
-    subj, pred = key.columns
+def _whole_groups(batches: Iterator[pa.RecordBatch], key: str) -> Iterator[pa.RecordBatch]:
+    """Re-cut a batch stream clustered on ``key`` so that every key group
+    lies whole in exactly one output batch.  The group still open at a
+    batch's end is carried as chunks and concatenated once, when the key
+    changes; every row is copied once, so the carry stays linear."""
+    carry: list[pa.RecordBatch] = []  # the open group's rows
+    for b in batches:
+        if not b.num_rows:
+            continue
+        starts = _run_starts(b, (key,))
+        cut = int(starts[-1]) if len(starts) else 0  # the last group's start
+        if not cut and carry and carry[0].column(key)[:1].equals(b.column(key)[:1]):
+            carry.append(b)
+            continue
+        done = carry + [b.slice(0, cut)]
+        carry = [b.slice(cut)]
+        if sum(c.num_rows for c in done):
+            yield pa.Table.from_batches(done).combine_chunks().to_batches()[0]
+    if carry:
+        yield pa.Table.from_batches(carry).combine_chunks().to_batches()[0]
+
+
+def _join_sorted(m: pa.RecordBatch) -> pa.RecordBatch:
+    """(subj, pred, obj, conv_id), one row per (subj, pred) of ``m``, a batch
+    of (subj, pred, turn_idx, pos, surface) rows holding whole subjects in
+    any order: sort in-batch (nulls first, as Spark sorts), then ' '-join
+    every run of the key."""
+    m = m.take(pc.sort_indices(m, sort_keys=_ORDER, null_placement="at_start"))
+    starts = np.concatenate(([0], _run_starts(m, _KEY)))
+    subj, pred = m.select(_KEY).take(starts).columns
+    obj = _join_runs(m.column("surface"), starts, m.num_rows)
     return pa.RecordBatch.from_arrays(
         [subj, pred, obj, subj], names=["subj", "pred", "obj", "conv_id"]
     )
 
 
-def _close_carry(key: pa.RecordBatch, carry: list[pa.Array]) -> pa.RecordBatch:
-    surface = pa.concat_arrays(carry)
-    return _triples_batch(key, _join_runs(surface, np.zeros(1, np.int64), len(surface)))
+ToMentions = Callable[[pa.RecordBatch], pa.RecordBatch]
 
 
-def _triples_from_sorted(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-    """One triple per (subj, pred) run of a partition sorted by
-    (subj, pred, turn_idx, pos).  The run still open at a batch's end is
-    carried as surface chunks; the next batch compares only its first row
-    with the carried key, so each row is compared once and the carry is
-    concatenated once, when its run closes."""
-    key = None  # 1-row (subj, pred) batch of the open run
-    carry: list[pa.Array] = []  # its surfaces, one chunk per batch it spans
-    for b in batches:
-        n = b.num_rows
-        if n == 0:
-            continue
-        keys, surface = b.select(_KEY), b.column("surface")
-        starts = np.concatenate(([0], _run_starts(b)))
-        if key is not None and keys.slice(0, 1).equals(key):
-            head_end = starts[1] if len(starts) > 1 else n
-            carry.append(surface.slice(0, head_end))
-            starts = starts[1:]
-            if not len(starts):
-                continue
-        if key is not None:
-            yield _close_carry(key, carry)
-        done = starts[:-1]
-        if len(done):
-            yield _triples_batch(
-                keys.take(done), _join_runs(surface, done, starts[-1])
-            )
-        last = int(starts[-1])
-        key, carry = keys.slice(last, 1), [surface.slice(last)]
-    if key is not None:
-        yield _close_carry(key, carry)
+def _triples_kernel(
+    batches: Iterator[pa.RecordBatch], key: str, to_mentions: ToMentions
+) -> Iterator[pa.RecordBatch]:
+    """Triples from a batch stream clustered on the subject column ``key``:
+    re-cut into whole subjects, map each batch to (subj, pred, turn_idx,
+    pos, surface) rows with ``to_mentions``, join in-batch."""
+    for b in _whole_groups(batches, key):
+        m = to_mentions(b)
+        if m.num_rows:
+            yield _join_sorted(m)
 
 
-def materialize_triples(mentions: DataFrame, subj_col: str = "conv_id") -> DataFrame:
-    """(subj, pred, obj, conv_id): obj = surfaces ' '-joined in stable
-    (turn_idx, pos) order; conv_id repeats subj.  One shuffle (the
-    repartition on (subj, pred)), a partition-local sort, then the Arrow
-    run join.  ``surface`` closes the sort key so duplicate
-    (turn_idx, pos) rows still join in one deterministic order."""
-    subj_t = mentions.schema[subj_col].dataType.simpleString()
+def triples_by_group(rows: DataFrame, key: str, to_mentions: ToMentions) -> DataFrame:
+    """The plan behind both triple entry points: one hash exchange on the
+    subject column ``key``, a partition-local sort that clusters it, then
+    one ``mapInArrow`` running :func:`_triples_kernel`.  Every (subj, pred)
+    run is complete in the batch that joins it, so no state crosses
+    batches but the re-cut's carry."""
+    subj_t = rows.schema[key].dataType.simpleString()
+
+    def triples(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        return _triples_kernel(batches, key, to_mentions)
+
     return (
-        mentions.filter(F.col("mention_type") != OTHER)
-        # shuffle only what the join needs — span offsets stay behind
-        .select(
-            F.col(subj_col).alias("subj"),
-            F.col("mention_type").alias("pred"),
-            "turn_idx",
-            "pos",
-            "surface",
-        )
-        .repartition(*_KEY)
-        .sortWithinPartitions(*_KEY, "turn_idx", "pos", "surface")
-        .mapInArrow(
-            _triples_from_sorted,
-            f"subj {subj_t}, pred string, obj string, conv_id {subj_t}",
-        )
+        rows.repartition(key)
+        .sortWithinPartitions(key)
+        .mapInArrow(triples, f"subj {subj_t}, pred string, obj string, conv_id {subj_t}")
     )
+
+
+def materialize_triples(mentions: DataFrame) -> DataFrame:
+    """(subj, pred, obj, conv_id) from a ``mentions`` table: subj = conv_id,
+    obj = the label's surfaces ' '-joined in (turn_idx, pos, surface)
+    order, conv_id repeats subj.  One shuffle (the repartition on subj) of
+    only the columns the join needs, then the whole-subject Arrow join."""
+    keyed = mentions.filter(F.col("mention_type") != OTHER).select(
+        F.col("conv_id").alias("subj"),
+        F.col("mention_type").alias("pred"),
+        "turn_idx",
+        "pos",
+        "surface",
+    )
+    return triples_by_group(keyed, "subj", lambda b: b)
 
 
 def with_partition_keys(triples: DataFrame) -> DataFrame:

@@ -30,6 +30,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 from kie_invoice_minimal_spark.plans.entity_linking import alias_triples, link_entities  # noqa: E402
 from kie_invoice_minimal_spark.operators.mention_detect import detect_mentions_arrow, detect_mentions_native  # noqa: E402
 from kie_invoice_minimal_spark.operators.triples import materialize_triples, write_triples  # noqa: E402
+from kie_invoice_minimal_spark.plans.pipeline import extract_triples_df  # noqa: E402
 from kie_invoice_minimal_spark.session import get_spark  # noqa: E402
 from kie_invoice_minimal_spark.sources.transcripts import synth_transcripts  # noqa: E402
 
@@ -98,17 +99,23 @@ def main() -> None:
         # measures steady-state throughput (what a long-running cluster job
         # sees), not first-job setup.
         warm = synth_transcripts(spark, 20_000, partitions=args.partitions)
-        materialize_triples(detect(warm)).write.format("noop").mode("overwrite").save()
+        warm_triples = (
+            materialize_triples(detect(warm))
+            if args.link_entities
+            else extract_triples_df(warm, engine=args.engine)
+        )
+        warm_triples.write.format("noop").mode("overwrite").save()
 
-    mentions = detect(transcripts)
-    triples = materialize_triples(mentions)
     if args.link_entities:
+        mentions = detect(transcripts)
         emap = link_entities(mentions)
-        triples = triples.unionByName(
+        triples = materialize_triples(mentions).unionByName(
             alias_triples(emap).selectExpr(
                 "subj", "pred", "obj", "cast(null as string) as conv_id"
             )
         )
+    else:
+        triples = extract_triples_df(transcripts, engine=args.engine)
 
     walls = []
     n_triples = -1

@@ -54,8 +54,8 @@ def test_no_row_at_a_time_python_anywhere(spark):
 
 
 def test_flagship_native_single_exchange(spark):
-    """The flagship keeps exactly ONE data shuffle (the triples'
-    repartition on (subj, pred)).
+    """The flagship keeps exactly ONE data shuffle (materialize_triples'
+    repartition(subj)).
     A keyless RoundRobinPartitioning exchange is additionally allowed:
     that is sources/scan.spread_scan's adaptive scan fan-out, which only
     exists when the input file is too small for the scan to parallelize
@@ -71,9 +71,10 @@ def test_flagship_native_single_exchange(spark):
 
 
 def test_flagship_arrow_is_one_arrow_boundary_per_step(spark):
-    """The Arrow flagship runs the detector and the triple run join as
-    mapInArrow over one hash exchange: no pandas conversion, no
-    collect_list aggregate."""
+    """The Arrow flagship crosses into Python once: one hash exchange of
+    turns with no Python operator below it, then a sort on conv_id feeding
+    the single mapInArrow that detects and joins.  No pandas conversion,
+    no collect_list aggregate."""
     from kie_invoice_minimal_spark.plans.pipeline import extract_triples_df
     from kie_invoice_minimal_spark.sources.transcripts import synth_transcripts
 
@@ -81,8 +82,15 @@ def test_flagship_arrow_is_one_arrow_boundary_per_step(spark):
     nodes = re.findall(r"^\(\d+\) (\w+)", plan, re.M)
     hashed = re.findall(r"^Arguments: hashpartitioning", plan, re.M)
     assert nodes.count("Exchange") == len(hashed) == 1, plan
-    assert nodes.count("MapInArrow") == 2, nodes
+    assert nodes.count("MapInArrow") == 1, nodes
     assert "MapInPandas" not in nodes and "ObjectHashAggregate" not in nodes, nodes
+    below = nodes[: nodes.index("Exchange")]  # formatted ids number children first
+    assert not [n for n in below if re.search("Python|Arrow|Pandas", n)], nodes
+    m = re.search(r"^( *)\+- MapInArrow \(\d+\)\n\1   \+- Sort \((\d+)\)$", plan, re.M)
+    assert m, plan
+    assert re.search(
+        rf"^\({m.group(2)}\) Sort\n.*\nArguments: \[conv_id#\d+ ASC NULLS FIRST\]", plan, re.M
+    ), plan
 
 
 def test_mention_scan_prunes_columns(spark):
