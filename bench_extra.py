@@ -71,6 +71,10 @@ def main() -> None:
             fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
             walls.append(round(time.time() - t0, 3))
             spark.sparkContext.setJobDescription(None)
+        # queries leave localCheckpoint blocks behind, which GC does not
+        # release: unpersist them so the next query starts from clean storage
+        for rdd in spark.sparkContext._jsc.getPersistentRDDs().values():
+            rdd.unpersist(True)
         timings[name] = min(walls)
         samples[name] = walls
         print(f"  {name:32s} min={min(walls):7.3f}  samples={walls}", flush=True)

@@ -33,6 +33,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..session import observation_get
+
 MAX_ROUNDS = 25
 
 
@@ -133,7 +135,7 @@ def connected_components(edges: DataFrame, stats: dict | None = None) -> DataFra
         .observe(obs0, F.count(F.lit(1)).alias("n"))
         .localCheckpoint()
     )
-    n_input = int(obs0.get["n"])
+    n_input = int(observation_get(obs0)["n"])
     if n_input == 0:
         return spark.createDataFrame([], "node long, component long")
     # lazy over the initial checkpoint — rebuilt inside the final job's
@@ -158,7 +160,7 @@ def connected_components(edges: DataFrame, stats: dict | None = None) -> DataFra
         obs = _fingerprint_obs()
         cur = _small_star(_large_star(cur)).observe(obs, *_fp_cols()).localCheckpoint()
         rounds += 1
-        got = obs.get
+        got = observation_get(obs)
         fp = (int(got["n"]), int(got["h"]))
         if fp == prev_fp:
             break

@@ -10,10 +10,16 @@ callers override for cluster runs.
 from __future__ import annotations
 
 import os
+import time
 
-from pyspark.sql import SparkSession
+from pyspark.sql import Observation, SparkSession
 
 DEFAULT_SHUFFLE_PARTITIONS = 32
+
+# Longest wait for an Observation after its action returned.  The metrics
+# arrive through the asynchronous listener bus, normally within
+# milliseconds; a listener that never fires must fail the caller, not hang it.
+OBSERVATION_TIMEOUT_S = 300.0
 
 
 def get_spark(
@@ -75,3 +81,21 @@ def get_spark(
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     return builder.getOrCreate()
+
+
+def observation_get(obs: Observation) -> dict:
+    """``obs.get`` with a deadline: polls the JVM Observation's future and
+    raises ``TimeoutError`` after ``OBSERVATION_TIMEOUT_S`` instead of
+    blocking forever (``Observation.get`` itself waits without a bound)."""
+    future = obs._jo.future()
+    deadline = time.monotonic() + OBSERVATION_TIMEOUT_S
+    pause = 0.001
+    while not future.isCompleted():
+        if time.monotonic() >= deadline:
+            raise TimeoutError(
+                f"Observation not resolved after {OBSERVATION_TIMEOUT_S} s: "
+                "its action never ran or its listener never fired"
+            )
+        time.sleep(pause)
+        pause = min(2 * pause, 0.01)
+    return obs.get

@@ -16,7 +16,10 @@ file, which is the same commit protocol Iceberg gives us for free).
 
 Per-partition lineage: each stage's writer runs ``observe()`` row counters
 and records rows-per-output-partition, the "per-partition lineage + counter
-metrics" the north rule demands.
+metrics" the north rule demands.  The lineage and the schema come from the
+stored files' parquet footers, read on the driver (pyarrow, serially, from
+the local filesystem the class already assumes): neither a resume's loads
+nor a write's verification runs a Spark job.
 """
 
 from __future__ import annotations
@@ -28,8 +31,15 @@ import time
 from collections.abc import Callable
 from dataclasses import dataclass
 
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
+
+from ..session import observation_get
+
+# footer key under which Spark's parquet writer stores the row schema as JSON
+_SPARK_SCHEMA_KEY = b"org.apache.spark.sql.parquet.row.metadata"
 
 
 @dataclass
@@ -206,8 +216,31 @@ class CheckpointedPipeline:
             and st.get("stage_fn_fingerprint") == stage_fn_fingerprint(fn)
         )
 
+    def _footers(self, stage: str) -> dict[str, pq.FileMetaData]:
+        """Parquet footer of each data file in the stage's snapshot, keyed by
+        file name.  Names starting with ``_`` or ``.`` (``_SUCCESS``, CRC
+        files) are skipped, as Spark's file index skips them."""
+        d = self._data_dir(stage)
+        return {
+            n: pq.read_metadata(os.path.join(d, n))
+            for n in sorted(os.listdir(d))
+            if not n.startswith(("_", "."))
+        }
+
+    def _read(self, stage: str, footers: dict[str, pq.FileMetaData]) -> DataFrame:
+        """The snapshot as a DataFrame, its schema taken from the Spark schema
+        a footer carries, so Spark runs no schema-inference job."""
+        first = next(iter(footers.values()), None)
+        raw = (first.metadata or {}).get(_SPARK_SCHEMA_KEY) if first else None
+        if raw is None:
+            raise RuntimeError(
+                f"stage {stage}: snapshot has no parquet file with a Spark schema"
+            )
+        schema = StructType.fromJson(json.loads(raw))
+        return self.spark.read.schema(schema).parquet(self._data_dir(stage))
+
     def load(self, stage: str) -> DataFrame:
-        return self.spark.read.parquet(self._data_dir(stage))
+        return self._read(stage, self._footers(stage))
 
     def _write_stage(self, name: str, df: DataFrame) -> DataFrame:
         t_start = time.time()
@@ -219,25 +252,22 @@ class CheckpointedPipeline:
         df.observe(obs, F.count(F.lit(1)).alias("n_rows")).write.mode(
             "overwrite"
         ).parquet(out)
-        n_written = int(obs.get["n_rows"])
+        n_written = int(observation_get(obs)["n_rows"])
         t_written = time.time()
-        # per-partition lineage comes from reading the snapshot back — it
+        # per-partition lineage comes from the stored files' footers — it
         # describes the table AS STORED (what a resume will load), and the
         # observed write count cross-checks it: a mismatch means a torn or
-        # concurrently-modified snapshot, surfaced instead of trusted
-        back = self.spark.read.parquet(out)
-        lineage = {
-            os.path.basename(r.f): r.n
-            for r in back.groupBy(F.input_file_name().alias("f"))
-            .agg(F.count(F.lit(1)).alias("n"))
-            .collect()
-        }
+        # concurrently-modified snapshot, surfaced instead of trusted.
+        # Zero-row files are left out of the lineage.
+        footers = self._footers(name)
+        lineage = {f: m.num_rows for f, m in footers.items() if m.num_rows}
         n_stored = int(sum(lineage.values()))
         if n_stored != n_written:
             raise RuntimeError(
-                f"stage {name}: snapshot readback has {n_stored} rows but the "
+                f"stage {name}: snapshot footers hold {n_stored} rows but the "
                 f"write job observed {n_written} — torn snapshot"
             )
+        back = self._read(name, footers)
         state = {
             "stage": name,
             "status": "complete",
@@ -249,8 +279,8 @@ class CheckpointedPipeline:
             # per-stage wall time — the reference's @timer instrumentation
             # (backend_utils.py:30-40) lifted into the state record.
             # Split (r2 ADVICE): wall_write_sec is the stage's compute+write
-            # job alone; wall_verify_sec is the snapshot readback + lineage
-            # collect that resume-proofs it; wall_sec stays as the total for
+            # job alone; wall_verify_sec is the footer read + lineage
+            # check that resume-proofs it; wall_sec stays as the total for
             # backward compatibility with existing pipeline_state consumers.
             "wall_write_sec": round(t_written - t_start, 3),
             "wall_verify_sec": round(time.time() - t_written, 3),

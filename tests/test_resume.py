@@ -105,7 +105,7 @@ def test_torn_state_file_recomputes(spark, tmp_path):
 
 def test_observed_counter_in_state(spark, tmp_path):
     """Round-2 contract: every stage record carries the write-job Observation
-    counter and it equals the readback count."""
+    counter and it equals the stored (footer) row count."""
     root = str(tmp_path / "ckpt6")
     p = kg_pipeline(spark, root, _provider(200))
     p.run()
@@ -209,3 +209,136 @@ def test_changed_stage_fn_source_forces_recompute(spark, tmp_path):
     fn = eval("lambda sp, up: sp.range(1)")
     m1, m2 = stage_fn_fingerprint(fn), stage_fn_fingerprint(fn)
     assert m1 == m2 and m1.startswith("uninspectable-")
+
+
+def _group_jobs(spark, group):
+    """Job ids Spark ran under ``group`` (the listener bus is drained first:
+    the status store learns of jobs asynchronously)."""
+    sc = spark.sparkContext
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return list(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_loads_and_verification_run_no_spark_job(spark, tmp_path, monkeypatch):
+    """Snapshot schema and lineage come from the parquet footers: a resume
+    after ``invalidate("triples")`` runs Spark jobs only inside the triples
+    write (none for the 3 loads or the verification), and a resume of a
+    complete root runs none at all."""
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    sc = spark.sparkContext
+    root = str(tmp_path / "ckpt_jobs")
+    golden = _triples(kg_pipeline(spark, root, _provider(300)).run())
+    p = kg_pipeline(spark, root, _provider(300))
+    p.invalidate("triples")
+
+    write_parquet = DataFrameWriter.parquet
+
+    def tagged_write(self, *args, **kwargs):
+        sc.setJobGroup("ckpt-write", "snapshot write")
+        try:
+            return write_parquet(self, *args, **kwargs)
+        finally:
+            sc.setJobGroup("ckpt-rest", "loads and verification")
+
+    monkeypatch.setattr(DataFrameWriter, "parquet", tagged_write)
+    sc.setJobGroup("ckpt-rest", "loads and verification")
+    try:
+        out = p.run()
+        sc.setJobGroup("ckpt-complete", "resume of a complete root")
+        kg_pipeline(spark, root, _provider(300)).run()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert _group_jobs(spark, "ckpt-rest") == []
+    assert _group_jobs(spark, "ckpt-complete") == []
+    assert _group_jobs(spark, "ckpt-write")
+    assert _triples(out) == golden
+
+
+def _stage_no_rows(sp, up):
+    import pyspark.sql.functions as _F
+
+    return sp.range(4).filter("id < 0").select(
+        "id",
+        _F.col("id").cast("decimal(12,3)").alias("amount"),
+        _F.array(
+            _F.struct(_F.col("id").alias("k"), _F.current_timestamp().alias("ts"))
+        ).alias("events"),
+    )
+
+
+def test_empty_stage_lineage_and_schema(spark, tmp_path):
+    """A stage that returns 0 rows writes, verifies with an empty lineage,
+    and loads back (nested, decimal and timestamp columns included) with
+    the schema Spark's own inference gives the snapshot."""
+    from kie_invoice_minimal_spark.sources.checkpoints import (
+        CheckpointedPipeline,
+        Stage,
+    )
+
+    root = str(tmp_path / "ckpt_empty")
+    p = CheckpointedPipeline(spark, root, [Stage("rows", _stage_no_rows)])
+    back = p.run()["rows"]
+    st = p.state("rows")
+    assert st["n_rows"] == 0 and st["n_rows_observed"] == 0
+    assert st["partition_rows"] == {} and st["n_partitions"] == 0
+    inferred = spark.read.parquet(p._data_dir("rows")).schema
+    loaded = CheckpointedPipeline(spark, root, [Stage("rows", _stage_no_rows)])
+    for df in (back, loaded.run()["rows"]):
+        assert df.schema == inferred and df.schema.json() == inferred.json()
+        assert df.count() == 0
+
+
+def test_torn_snapshot_raises(spark, tmp_path, monkeypatch):
+    """A part file lost between the write and the verification leaves the
+    stored rows short of the write job's observed count: ``_write_stage``
+    raises and commits no state record."""
+    import os
+
+    import pyarrow.parquet as pq
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    from kie_invoice_minimal_spark.sources.checkpoints import (
+        CheckpointedPipeline,
+        Stage,
+    )
+
+    write_parquet = DataFrameWriter.parquet
+
+    def torn_write(self, path, *args, **kwargs):
+        write_parquet(self, path, *args, **kwargs)
+        victim = next(
+            n
+            for n in sorted(os.listdir(path))
+            if n.startswith("part-")
+            and pq.read_metadata(os.path.join(path, n)).num_rows
+        )
+        os.remove(os.path.join(path, victim))
+
+    monkeypatch.setattr(DataFrameWriter, "parquet", torn_write)
+    p = CheckpointedPipeline(
+        spark, str(tmp_path / "ckpt_torn"), [Stage("rows", _stage_rows_v1)]
+    )
+    with pytest.raises(RuntimeError, match="torn snapshot"):
+        p.run()
+    assert p.state("rows") is None
+
+
+def test_observation_wait_is_bounded(spark, monkeypatch):
+    """An Observation whose action never ran times out instead of blocking
+    forever; one whose action ran returns its metrics."""
+    import pyspark.sql.functions as _F
+    from pyspark.sql import Observation
+
+    from kie_invoice_minimal_spark import session
+
+    monkeypatch.setattr(session, "OBSERVATION_TIMEOUT_S", 0.2)
+    never = Observation()
+    spark.range(3).observe(never, _F.count(_F.lit(1)).alias("n"))
+    with pytest.raises(TimeoutError):
+        session.observation_get(never)
+
+    ran = Observation()
+    spark.range(3).observe(ran, _F.count(_F.lit(1)).alias("n")).collect()
+    assert session.observation_get(ran) == {"n": 3}
