@@ -1,57 +1,111 @@
-"""Iterative connected components over salted self-joins — SURVEY.md A9.
+"""Connected components of an edge list — SURVEY.md A9.
 
-The reference labels connected pixel blobs with one OpenCV call per image
-(``craft_utils.py:77-79``).  Lifted to corpus scale (cross-conversation
-alias resolution) nothing in Catalyst expresses the iteration, so this is
-the engine's one genuinely custom distributed algorithm: alternating
-**large-star / small-star** rounds (Kiveris et al., "Connected Components
-in MapReduce and Beyond") that converge to rooted stars in O(log n) rounds.
+The reference labels connected pixel blobs with one in-memory call per
+image (``craft_utils.py:77-79``).  Lifted to corpus scale (cross-conversation
+alias resolution, dup clusters, event pairs) the same labelling runs here.
+
+Contract: ``connected_components(edges)`` takes ``(u, v)`` integer columns
+and returns ``(node long, component long)``.  Edges with a null endpoint
+and self-loops are dropped and duplicates collapse.  Every endpoint of the
+remaining edges gets exactly one row, whose ``component`` is the minimum
+node id of its component (ids are compared as signed longs, so the
+negative ``xxhash64`` ids the callers use are fine).  Nodes without an
+edge get no row; empty input gives an empty frame.
+
+Two paths, chosen by the edge count the pre-loop job already observes:
+
+- **driver** (``n <= SMALL_GRAPH_EDGES``): the checkpointed edges are read
+  once with ``toArrow()`` and labelled by ``components_of`` in numpy, then
+  handed back through ``createDataFrame``.  Every graph the registry and
+  the pipelines build today is far below the gate, and on such graphs the
+  star loop below costs jobs, not data (``link_entities`` on the test
+  brand fixture: 26 jobs, against 8 here, 7 of them the pre-loop job that
+  computes blocking and the scorer).  The gate bounds driver memory, not
+  time: on one box the driver path stays the faster one at every measured
+  size (SCALE.md), while its working set grows with the graph (about 130
+  bytes per edge in the driver's Python process, toArrow table included).
+- **distributed** (above the gate): alternating large-star / small-star
+  rounds (Kiveris et al., "Connected Components in MapReduce and Beyond")
+  that converge to rooted stars in O(log n) rounds.
 
   large-star: per node u, m = min(u ∪ N(u)); re-hang every neighbor v > u
               onto m:  emit (v, m)
   small-star: orient edges to (hi, lo); per node u, m = min(u ∪ N<(u));
               emit (x, m) for x in N<(u) ∪ {u}, x != m
 
-Implementation notes (the scale story):
-- the per-node min is ONE hash aggregate: min is combinable, so Spark's
-  partial (map-side) aggregation pre-combines each map partition's rows
-  per key before the exchange — a hot hub (an alias appearing in millions
-  of conversations) ships at most one row per map partition to its
-  reducer, the same funneling bound the r1-r8 two-level salted version
-  bought with an extra shuffle per star per round (r9; explicit salting
-  stays reserved for non-combinable aggregations);
-- each round ends in localCheckpoint() to truncate lineage (an iterative
-  loop otherwise grows an unbounded plan tree);
-- convergence = edge-set fingerprint (count + xor-ish hash sum) unchanged;
-  the fingerprint rides the round's checkpoint job as an Observation
-  (r5: one action per round, previously checkpoint + a separate agg);
-- the shrinking edge list is re-coalesced by AQE each round.
+  The per-node min is one hash aggregate: min is combinable, so partial
+  (map-side) aggregation ships a hot hub at most one row per map partition.
+  Each round ends in ``localCheckpoint()`` to cut lineage, and the round's
+  convergence fingerprint (edge count + order-free hash sum) rides that
+  checkpoint job as an Observation, so a round is one action.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+import numpy as np
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
 from ..session import observation_get
 
 MAX_ROUNDS = 25
+# edge count up to which components are labelled on the driver: the
+# largest power of two whose measured driver working set (~130 B/edge,
+# SCALE.md) stays under 1 GiB, Spark's default spark.driver.maxResultSize
+SMALL_GRAPH_EDGES = 1 << 22
+
+
+def components_of(u: np.ndarray, v: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
+    """(nodes, component) for the undirected edges ``u[i] – v[i]`` (int64).
+
+    ``nodes`` holds every endpoint once, ascending; ``component[i]`` is the
+    minimum id in ``nodes[i]``'s component.  Ids are compacted to their
+    rank by ``np.unique``, so rank order is id order.  Each round hooks
+    every edge-crossing root onto the smaller root across the edge (a
+    scatter-min, so roots only ever move to smaller ranks and no cycle can
+    form), then pointer-jumps ``label = label[label]`` until every node
+    points at its root; edges whose ends already share a root drop out.
+    """
+    nodes, inv = np.unique(np.concatenate([u, v]), return_inverse=True)
+    a, b = inv[: len(u)], inv[len(u):]
+    label = np.arange(len(nodes))
+    while True:
+        la, lb = label[a], label[b]
+        cross = la != lb
+        if not cross.any():
+            return nodes, nodes[label]
+        a, b, la, lb = a[cross], b[cross], la[cross], lb[cross]
+        np.minimum.at(label, np.maximum(la, lb), np.minimum(la, lb))
+        while True:
+            nxt = label[label]
+            if np.array_equal(nxt, label):
+                break
+            label = nxt
+
+
+def _driver_components(cur: DataFrame, stats: dict | None) -> DataFrame:
+    """Label the checkpointed edge list ``cur`` on the driver (one job)."""
+    import pyarrow as pa
+
+    t = cur.toArrow()
+    nodes, comp = components_of(
+        t.column("u").to_numpy(), t.column("v").to_numpy()
+    )
+    if stats is not None:
+        stats["nodes"] = len(nodes)
+        stats["rounds"] = 0
+        # the converged star's edges: one per non-root node
+        stats["final_edges"] = int(np.count_nonzero(nodes != comp))
+    return cur.sparkSession.createDataFrame(
+        pa.table({"node": nodes, "component": comp})
+    )
 
 
 def _min_neighbor(edges: DataFrame, include_self: bool) -> DataFrame:
-    """min(v) per u — ONE hash aggregate (r9).
-
-    The r1-r8 version ran a two-level salted aggregation
-    (groupBy(u, salt).min -> groupBy(u).min) to protect hot hubs.  For a
-    COMBINABLE aggregate like min that second level is redundant: Spark's
-    partial (map-side) aggregation already pre-combines every map
-    partition's rows per key before the exchange, so a hub with millions
-    of in-edges ships at most one row PER MAP PARTITION to its reducer —
-    exactly the funneling bound the explicit salt provided, without the
-    extra shuffle (guide §2.3 "aggregate before you shuffle").  The salt
-    remains the right tool for non-combinable aggregations (collect_list
-    and friends); dropping it here removes one exchange per star per
-    round — 2 per CC round."""
+    """min(v) per u as ONE hash aggregate.  min is combinable, so Spark's
+    partial aggregation pre-combines each map partition's rows per key
+    before the exchange: a hub with millions of in-edges ships at most one
+    row per map partition to its reducer, without an explicit salt."""
     lvl1 = edges.groupBy("u").agg(F.min("v").alias("min_nbr"))
     if include_self:
         lvl1 = lvl1.withColumn("m", F.least("u", "min_nbr")).drop("min_nbr")
@@ -63,11 +117,9 @@ def _min_neighbor(edges: DataFrame, include_self: bool) -> DataFrame:
 def _large_star(edges: DataFrame) -> DataFrame:
     """Symmetrize; per u re-hang strictly-larger neighbors onto m.
 
-    The output .distinct() stays (r9 measured wash locally, kept for
-    scale): it dedupes band-collision duplicates before _small_star AND
-    its exchange is the one materialization all three small-star
-    consumers reuse — without it the re-hang join re-executes per
-    consumer."""
+    The output ``distinct()`` dedupes duplicate edges before _small_star,
+    and its exchange is the one materialization all three small-star
+    consumers reuse; without it the re-hang join re-executes per consumer."""
     sym = edges.select("u", "v").union(edges.select(F.col("v").alias("u"), F.col("u").alias("v")))
     mins = _min_neighbor(sym, include_self=True)
     return (
@@ -86,21 +138,9 @@ def _small_star(edges: DataFrame) -> DataFrame:
     mins = _min_neighbor(oriented, include_self=False)  # v < u always, so min over N< suffices
     withm = oriented.join(mins, "u")
     hang_nbrs = withm.select(F.col("v").alias("u"), F.col("m").alias("v"))
-    # no inner distinct on hang_self (r9): the union's trailing distinct
-    # already dedupes — the inner one only added a shuffle per round
+    # the union's trailing distinct also dedupes hang_self
     hang_self = withm.select("u", F.col("m").alias("v"))
     return hang_nbrs.union(hang_self).filter(F.col("u") != F.col("v")).distinct()
-
-
-def _fingerprint_obs() -> "Observation":
-    """Convergence fingerprint (edge count + order-free hash sum) attached
-    as an Observation so it rides the round's checkpoint job itself — one
-    job per round instead of checkpoint + separate fingerprint collect
-    (localCheckpoint fires the query-execution listener in pyspark 4.x,
-    so the observation resolves when the materialization finishes)."""
-    from pyspark.sql import Observation
-
-    return Observation()
 
 
 def _fp_cols() -> list[F.Column]:
@@ -113,21 +153,18 @@ def _fp_cols() -> list[F.Column]:
 
 
 def connected_components(edges: DataFrame, stats: dict | None = None) -> DataFrame:
-    """Edge list (u:long, v:long) -> assignments (node:long, component:long),
-    component = min node id of the component.  Covers every node appearing
-    in the edge list; singletons (no edges) are their own component by
-    definition and need no row here.
+    """Edge list (u, v) -> assignments (node:long, component:long); see the
+    module docstring for the contract and the two paths.
 
-    If ``stats`` is passed, it is filled with counter metrics
-    (rounds, final_edges, input_edges, nodes) — the per-stage counters the
-    north rule asks the pipeline to report.
+    If ``stats`` is passed, it is filled with counter metrics:
+    ``input_edges`` (filtered, deduped), ``nodes``, ``rounds`` (0 on the
+    driver path) and ``final_edges`` (edges of the converged star).
     """
     spark = edges.sparkSession
-    # one pre-loop job (r9): the input edge count rides the initial
-    # checkpoint as an Observation — previously the emptiness probe
-    # (isEmpty) and the nodes materialization were two additional eager
-    # jobs before the first round
-    obs0 = _fingerprint_obs()
+    # one pre-loop job: the input edge count rides the initial checkpoint
+    # as an Observation (localCheckpoint fires the query-execution
+    # listener, so it resolves when the job finishes)
+    obs0 = Observation()
     cur = (
         edges.select(F.col("u").cast("long"), F.col("v").cast("long"))
         .filter(F.col("u") != F.col("v"))
@@ -136,8 +173,14 @@ def connected_components(edges: DataFrame, stats: dict | None = None) -> DataFra
         .localCheckpoint()
     )
     n_input = int(observation_get(obs0)["n"])
+    if stats is not None:
+        stats["input_edges"] = n_input
     if n_input == 0:
+        if stats is not None:
+            stats.update(nodes=0, rounds=0, final_edges=0)
         return spark.createDataFrame([], "node long, component long")
+    if n_input <= SMALL_GRAPH_EDGES:
+        return _driver_components(cur, stats)
     # lazy over the initial checkpoint — rebuilt inside the final job's
     # roots anti-join instead of paying its own materialization
     nodes = (
@@ -147,7 +190,6 @@ def connected_components(edges: DataFrame, stats: dict | None = None) -> DataFra
     )
 
     if stats is not None:
-        stats["input_edges"] = n_input
         stats["nodes"] = nodes.count()
 
     prev_fp = None
@@ -155,9 +197,8 @@ def connected_components(edges: DataFrame, stats: dict | None = None) -> DataFra
     for _ in range(MAX_ROUNDS):
         # one checkpoint per round: the intra-round lineage (one star op) is
         # shallow; checkpointing after each star doubled materialization
-        # cost.  The convergence fingerprint rides the SAME job as an
-        # Observation (r5): one action per round, not two.
-        obs = _fingerprint_obs()
+        # cost.  The convergence fingerprint rides the same job.
+        obs = Observation()
         cur = _small_star(_large_star(cur)).observe(obs, *_fp_cols()).localCheckpoint()
         rounds += 1
         got = observation_get(obs)

@@ -610,12 +610,13 @@ WHERE len(list_intersect(a.sh, b.sh)) * {JACCARD_DEN}
 # --- dup clusters: the dedup end-game -------------------------------------------------
 
 def dd_dup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Duplicate CLUSTERS from the verified near-dup pairs: iterative
-    connected components (the same large-star/small-star operator the
-    entity-canonicalization stage uses) over the LSH->verify edge list,
+    """Duplicate CLUSTERS from the verified near-dup pairs: connected
+    components (the same operator the entity-canonicalization stage
+    uses) over the LSH->verify edge list,
     then keeper = min doc_id per cluster.  This is what a corpus dedup
     actually ships — a per-doc (cluster_id, is_keeper) assignment — and at
-    100 TB it inherits CC's hub-salting and per-round checkpointing.
+    100 TB it inherits CC's distributed star loop (hub-safe min aggregates,
+    per-round checkpoints).
 
     Output: one row per doc that appears in any dup pair; cluster_id is the
     min doc_id of the cluster (CC converges to min labels), is_keeper marks

@@ -2,7 +2,7 @@
 
 mentions --(blocking: MinHash bands)--> candidate pairs
          --(GCN scorer per Arrow batch)--> accepted match edges
-         --(iterative CC over salted self-joins)--> surface -> entity
+         --(connected components)--> surface -> entity
          --(join back)--> entity-resolved mentions + alias triples
 
 The reference resolves "which boxes are the same field" within one page via

@@ -6,9 +6,6 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from kie_invoice_minimal_spark.operators.connected_components import (
-    connected_components,
-)
 from kie_invoice_minimal_spark.operators.mention_detect import (
     MENTION_SCHEMA_DDL,
     merge_adjacent_mentions,
@@ -44,9 +41,20 @@ def test_merge_nonadjacent_same_type_not_merged(spark):
     assert len(rows) == 2 and all(r.n_tokens == 1 for r in rows)
 
 
-def test_cc_empty_edges(spark):
+def test_cc_empty_edges(spark, cc_both_paths):
     empty = spark.createDataFrame([], "u bigint, v bigint")
-    assert connected_components(empty).count() == 0
+    for path, got in cc_both_paths(empty).items():
+        assert got == set(), path
+
+
+def test_cc_self_loops_and_null_endpoints_only(spark, cc_both_paths):
+    """Nothing survives the u != v filter, so no node gets a row."""
+    edges = spark.createDataFrame(
+        [(1, 1), (None, 2), (3, None), (None, None), (4, 4), (1, 1)],
+        "u bigint, v bigint",
+    )
+    for path, got in cc_both_paths(edges).items():
+        assert got == set(), path
 
 
 def test_merge_different_types_adjacent_not_merged(spark):

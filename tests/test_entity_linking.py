@@ -26,25 +26,24 @@ def test_normalize_surface(spark):
     ]
 
 
-def test_cc_simple_graph(spark):
+def test_cc_simple_graph(spark, cc_both_paths):
     # components: {1,2,3,4}, {10,11}, {20} appears only via self-ref edge drop
     edges = spark.createDataFrame(
         [(1, 2), (2, 3), (3, 4), (10, 11), (20, 20)], "u long, v long"
     )
-    got = {
-        (r.node, r.component) for r in connected_components(edges).collect()
-    }
-    assert got == {(1, 1), (2, 1), (3, 1), (4, 1), (10, 10), (11, 10)}
+    for path, got in cc_both_paths(edges).items():
+        assert got == {(1, 1), (2, 1), (3, 1), (4, 1), (10, 10), (11, 10)}, path
 
 
-def test_cc_chain_and_star(spark):
+def test_cc_chain_and_star(spark, cc_both_paths):
     # long chain exercises multi-round convergence; star exercises hub skew
     chain = [(i, i + 1) for i in range(100, 140)]
     star = [(500, x) for x in range(501, 560)]
     edges = spark.createDataFrame(chain + star, "u long, v long")
-    assign = {r.node: r.component for r in connected_components(edges).collect()}
-    assert all(assign[i] == 100 for i in range(100, 141))
-    assert all(assign[x] == 500 for x in [500, *range(501, 560)])
+    for path, got in cc_both_paths(edges).items():
+        assign = dict(got)
+        assert all(assign[i] == 100 for i in range(100, 141)), path
+        assert all(assign[x] == 500 for x in [500, *range(501, 560)]), path
 
 
 @pytest.fixture(scope="module")
@@ -122,7 +121,7 @@ def test_block_size_cap(spark, brand_mentions):
     assert capped >= 0
 
 
-def test_cc_random_graph_vs_union_find(spark):
+def test_cc_random_graph_vs_union_find(spark, cc_both_paths):
     """Randomized CC vs a pure-Python union-find oracle."""
     import random
 
@@ -153,8 +152,8 @@ def test_cc_random_graph_vs_union_find(spark):
     want_assign = {x: want[find(x)] for x in touched}
 
     df = spark.createDataFrame(edges, "u long, v long")
-    got = {r.node: r.component for r in connected_components(df).collect()}
-    assert got == want_assign
+    for path, got in cc_both_paths(df).items():
+        assert dict(got) == want_assign, path
 
 
 def test_linking_at_cardinality(spark):
@@ -201,10 +200,10 @@ def test_linking_partitioning_invariance(spark, brand_mentions):
     assert a == b and len(a) > 0
 
 
-def test_cc_hub_stress_midsize(spark):
+def test_cc_hub_stress_midsize(spark, cc_both_paths):
     """Skew stress at test scale: 50k edges with a 20k-spoke hub plus 100
-    chains — the two-level salted min-agg must produce exact components
-    (the committed-test version of the 1.9M-edge measurement in SCALE.md)."""
+    chains — both paths must produce exact components (the committed-test
+    version of the 1.9M-edge distributed measurement in SCALE.md)."""
     hub = [(1, x) for x in range(2, 20_002)]
     chains = [
         (100_000 + c * 100 + i, 100_000 + c * 100 + i + 1)
@@ -212,8 +211,59 @@ def test_cc_hub_stress_midsize(spark):
         for i in range(30)
     ]
     edges = spark.createDataFrame(hub + chains, "u long, v long")
-    assign = {r.node: r.component for r in connected_components(edges).collect()}
-    assert all(assign[x] == 1 for x in range(1, 20_002))
-    for c in range(100):
-        base = 100_000 + c * 100
-        assert all(assign[base + i] == base for i in range(31))
+    for path, got in cc_both_paths(edges).items():
+        assign = dict(got)
+        assert len(assign) == 20_001 + 100 * 31, path
+        assert all(assign[x] == 1 for x in range(1, 20_002)), path
+        for c in range(100):
+            base = 100_000 + c * 100
+            assert all(assign[base + i] == base for i in range(31)), path
+
+
+def test_cc_gate_boundary(spark, monkeypatch):
+    """The driver path takes graphs of up to SMALL_GRAPH_EDGES filtered,
+    deduped edges; one edge more runs the star loop.  Self-loops, null
+    endpoints and duplicates do not count toward the gate."""
+    from kie_invoice_minimal_spark.operators import connected_components as cc
+
+    k = 4
+    monkeypatch.setattr(cc, "SMALL_GRAPH_EDGES", k)
+    at_k = [(1, 2), (2, 3), (-5, 3), (7, 8)]
+    noise = [(9, 9), (None, 1), (1, None), (1, 2), (2, 3)]
+    want = {(1, -5), (2, -5), (3, -5), (-5, -5), (7, 7), (8, 7)}
+    for rows, n_edges, want_rows in (
+        (at_k + noise, k, want),
+        (at_k + noise + [(8, 20)], k + 1, want | {(20, 7)}),
+    ):
+        stats: dict = {}
+        edges = spark.createDataFrame(rows, "u long, v long")
+        got = {(r.node, r.component) for r in cc.connected_components(edges, stats).collect()}
+        assert got == want_rows, n_edges
+        assert stats["input_edges"] == n_edges
+        if n_edges == k:
+            assert stats["rounds"] == 0
+        else:
+            assert stats["rounds"] >= 1
+
+
+def test_link_entities_cc_job_count(spark, brand_mentions, monkeypatch):
+    """Connected components inside link_entities runs at most 8 Spark jobs
+    on the brand fixture (job group around the CC call; the count includes
+    the pre-loop job that computes blocking and the scorer, with its AQE
+    stage jobs).  The star loop ran 26 jobs on a graph this small."""
+    import kie_invoice_minimal_spark.plans.entity_linking as el
+
+    sc = spark.sparkContext
+
+    def grouped_cc(edges, *args, **kwargs):
+        sc.setJobGroup("el-cc", "connected components")
+        try:
+            return connected_components(edges, *args, **kwargs)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+
+    monkeypatch.setattr(el, "connected_components", grouped_cc)
+    assert link_entities(brand_mentions).count() > 0
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    jobs = list(sc.statusTracker().getJobIdsForGroup("el-cc"))
+    assert 0 < len(jobs) <= 8, len(jobs)
