@@ -3,9 +3,12 @@
 The reference prunes the O(n^2) edge space per page with a spatial band
 (|Δy| <= 3·line_height, ``kie_utils.py:133-137``).  Across a 10^12-turn
 corpus the analog is *blocking*: only surfaces that share a MinHash band
-bucket become candidate pairs.  Everything here is JVM-side column algebra —
+bucket become candidate pairs.  The Spark plans are JVM-side column algebra —
 shingles via higher-order functions, MinHash via min(xxhash64(shingle, seed)),
-band keys via hashing the signature slice — no Python.
+band keys via hashing the signature slice — no Python.  Below
+``link_entities``' surface gate the same pairs and features are computed on
+the driver by a numpy twin (:func:`local_candidate_pairs`), pinned against
+the Spark plans in the tests.
 
 Pipeline:
   mentions --(distinct surface)--> surface table   (the big dedup: linking
@@ -23,6 +26,12 @@ caps, overflow -> sub-salt"); AQE skew-join splits the rest.
 
 from __future__ import annotations
 
+import re
+from collections.abc import Sequence
+from typing import NamedTuple
+
+import numpy as np
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -34,6 +43,19 @@ N_BANDS = 8  # bands of r = N_HASHES / N_BANDS rows
 ROWS_PER_BAND = N_HASHES // N_BANDS
 SHINGLE_K = 3
 MAX_BLOCK_SIZE = 50  # candidate blocks larger than this are dropped (counted)
+_P = (1 << 31) - 1  # MinHash modulus: products stay below 2^37
+
+
+def _mh_coef(i: int) -> tuple[int, int]:
+    """(a, b) of the i-th affine MinHash transform (a*h + b) mod _P."""
+    return 2 * i + 3, (7919 * (i + 1)) % _P
+
+
+# diacritic fold of normalize_surface (explicit Vietnamese maps)
+_FOLD_SRC = "àáảãạăằắẳẵặâầấẩẫậèéẻẽẹêềếểễệìíỉĩịòóỏõọôồốổỗộơờớởỡợùúủũụưừứửữựỳýỷỹỵđ"
+_FOLD_DST = "aaaaaaaaaaaaaaaaaeeeeeeeeeeeiiiiiooooooooooooooooouuuuuuuuuuuyyyyyd"
+_FOLD = str.maketrans(_FOLD_SRC, _FOLD_DST)
+_NON_ALNUM = re.compile("[^a-z0-9]")
 
 
 def normalize_surface(col):
@@ -42,11 +64,15 @@ def normalize_surface(col):
     Diacritic stripping uses explicit Vietnamese char maps (translate) so it
     stays JVM-side; the DuckDB twin is strip_accents(lower(..)).
     """
-    src = "àáảãạăằắẳẵặâầấẩẫậèéẻẽẹêềếểễệìíỉĩịòóỏõọôồốổỗộơờớởỡợùúủũụưừứửữựỳýỷỹỵđ"
-    dst = "aaaaaaaaaaaaaaaaaeeeeeeeeeeeiiiiiooooooooooooooooouuuuuuuuuuuyyyyyd"
     return F.regexp_replace(
-        F.translate(F.lower(col), src, dst), "[^a-z0-9]", ""
+        F.translate(F.lower(col), _FOLD_SRC, _FOLD_DST), "[^a-z0-9]", ""
     )
+
+
+def normalize_text(s: str) -> str:
+    """:func:`normalize_surface` of one non-null string, in Python (the
+    driver path; pinned against Spark over every code point)."""
+    return _NON_ALNUM.sub("", s.lower().translate(_FOLD))
 
 
 def _padded(col):
@@ -65,21 +91,11 @@ def shingles(col):
     )
 
 
-def surface_signatures(mentions: DataFrame, surface_col: str = "surface") -> DataFrame:
-    """Distinct surfaces with normalized form, shingle set and MinHash bands.
-
-    Returns: surface, norm, grams (array<string>), band_0..band_{N_BANDS-1}.
-    """
-    return signatures_from_surfaces(
-        mentions.select(F.col(surface_col).alias("surface")).distinct()
-    )
-
-
 def signatures_from_surfaces(surf: DataFrame) -> DataFrame:
-    """Signatures from an ALREADY-DISTINCT ``surface`` table (r9): callers
-    that materialize the distinct-surface set once (link_entities) feed it
-    here directly, so the upstream mention lineage is not re-executed per
-    consumer job."""
+    """Normalized form, shingle set and MinHash bands of an ALREADY-DISTINCT
+    ``surface`` table: surface, norm, grams (array<string>),
+    band_0..band_{N_BANDS-1}.  Callers materialize the distinct-surface set
+    once, so the upstream mention lineage is not re-executed per job."""
     surf = (
         surf.withColumn("norm", normalize_surface(F.col("surface")))
         .withColumn("grams", shingles(F.col("norm")))
@@ -89,14 +105,13 @@ def signatures_from_surfaces(surf: DataFrame) -> DataFrame:
     # arithmetic passes.  P = 2^31-1 keeps products overflow-safe.
     # NB: single-arg lambdas only — a two-arg lambda makes transform() bind
     # the array index to the second parameter.
-    P = (1 << 31) - 1
     surf = surf.withColumn(
-        "hb", F.transform("grams", lambda g: F.pmod(F.xxhash64(g), F.lit(P)))
+        "hb", F.transform("grams", lambda g: F.pmod(F.xxhash64(g), F.lit(_P)))
     )
 
     def _mh(i: int):
-        a, b = 2 * i + 3, (7919 * (i + 1)) % P
-        return lambda h: (h * a + b) % P
+        a, b = _mh_coef(i)
+        return lambda h: (h * a + b) % _P
 
     sig_cols = [
         F.array_min(F.transform("hb", _mh(i))).alias(f"mh_{i}")
@@ -207,4 +222,185 @@ def candidate_pairs_from_surfaces(
         (F.least(la, lb) / F.greatest(F.greatest(la, lb), F.lit(1.0))).alias(
             "len_ratio"
         ),
+    )
+
+
+# --- driver twin: the same pairs and features in numpy ---------------------------
+#
+# Below link_entities' surface gate the distinct surfaces are on the driver,
+# so blocking runs here.  Every gram of a padded normal form is 3 ASCII bytes
+# and every MinHash value a long, so Spark's xxhash64 (XXH64, seed 42) is
+# needed for exactly two input shapes; both are written out below in uint64
+# arithmetic, which wraps as Java's long does.
+
+_X1, _X2, _X3, _X4, _X5 = (
+    np.uint64(c)
+    for c in (
+        0x9E3779B185EBCA87,
+        0xC2B2AE3D27D4EB4F,
+        0x165667B19E3779F9,
+        0x85EBCA77C2B2AE63,
+        0x27D4EB2F165667C5,
+    )
+)
+_SEED = 42  # Spark's xxhash64 seed
+
+
+def _rotl(x: np.ndarray, r: int) -> np.ndarray:
+    return (x << np.uint64(r)) | (x >> np.uint64(64 - r))
+
+
+def _fmix(h: np.ndarray) -> np.ndarray:
+    h = (h ^ (h >> np.uint64(33))) * _X2
+    h = (h ^ (h >> np.uint64(29))) * _X3
+    return (h ^ (h >> np.uint64(32))).view(np.int64)
+
+
+def xxh64_gram(code: np.ndarray) -> np.ndarray:
+    """``xxhash64`` of 3-byte strings, each given as ``b0 << 16 | b1 << 8 | b2``."""
+    c = code.astype(np.uint64)
+    h = np.full(len(c), np.uint64(_SEED) + _X5 + np.uint64(3))
+    for shift in (16, 8, 0):
+        h = _rotl(h ^ ((c >> np.uint64(shift)) & np.uint64(0xFF)) * _X5, 11) * _X1
+    return _fmix(h)
+
+
+def xxh64_long(x: np.ndarray, seed: np.ndarray) -> np.ndarray:
+    """``xxhash64`` of one long column with a per-row seed (a column chain
+    ``xxhash64(c0, c1)`` is ``xxh64_long(c1, xxh64_long(c0, 42))``)."""
+    h = seed.view(np.uint64) + _X5 + np.uint64(8)
+    h = h ^ _rotl(x.view(np.uint64) * _X2, 31) * _X1
+    return _fmix(_rotl(h, 27) * _X1 + _X4)
+
+
+def _ranges(starts: np.ndarray, lengths: np.ndarray) -> np.ndarray:
+    """The concatenation of ``arange(s, s + n)`` over ``zip(starts, lengths)``."""
+    ends = np.cumsum(lengths)
+    return np.repeat(starts - (ends - lengths), lengths) + np.arange(ends[-1] if len(ends) else 0)
+
+
+def _gram_codes(norms: Sequence[str]) -> tuple[np.ndarray, np.ndarray]:
+    """(owner, code) for every 3-gram of every padded normal form, in order,
+    repeats kept: ``code`` packs the gram's 3 ASCII bytes, ``owner`` is the
+    index of its form in ``norms``."""
+    padded = [f"^^{s}$$".encode("ascii") for s in norms]
+    lens = np.fromiter(map(len, padded), np.int64, len(padded))
+    buf = np.frombuffer(b"".join(padded), np.uint8).astype(np.int64)
+    n_grams = lens - (SHINGLE_K - 1)
+    pos = _ranges(np.cumsum(lens) - lens, n_grams)
+    code = buf[pos] << 16 | buf[pos + 1] << 8 | buf[pos + 2]
+    return np.repeat(np.arange(len(norms)), n_grams), code
+
+
+def band_keys(norms: Sequence[str]) -> np.ndarray:
+    """``band_0 .. band_{N_BANDS-1}`` of :func:`signatures_from_surfaces`
+    for normal forms (``[len(norms), N_BANDS]`` int64).  The MinHash min
+    runs over the grams with repeats, which gives the same minimum as over
+    the distinct set."""
+    if not len(norms):
+        return np.empty((0, N_BANDS), np.int64)
+    owner, code = _gram_codes(norms)
+    hb = np.mod(xxh64_gram(code), _P)  # floored, as pmod
+    first = np.flatnonzero(np.r_[True, owner[1:] != owner[:-1]])
+    mh = [
+        np.minimum.reduceat((hb * a + b) % _P, first)
+        for a, b in map(_mh_coef, range(N_HASHES))
+    ]
+    keys = np.empty((len(norms), N_BANDS), np.int64)
+    for band in range(N_BANDS):
+        h = np.full(len(norms), _SEED, np.int64)
+        for j in range(band * ROWS_PER_BAND, (band + 1) * ROWS_PER_BAND):
+            h = xxh64_long(mh[j], h)
+        keys[:, band] = h
+    return keys
+
+
+def _jaccard(norms: Sequence[str], na: np.ndarray, nb: np.ndarray, chunk: int = 1 << 16) -> np.ndarray:
+    """3-gram Jaccard of ``norms[na[i]]`` and ``norms[nb[i]]``: each gram of
+    the first form is looked up in the second's by binary search over the
+    sorted (form, gram) incidence; ``chunk`` pairs at a time."""
+    owner, code = _gram_codes(norms)
+    inc = np.unique(owner << 24 | code)  # distinct grams, form-major
+    cnt = np.bincount(inc >> 24, minlength=len(norms))
+    start = np.cumsum(cnt) - cnt
+    inter = np.empty(len(na))
+    for lo in range(0, len(na), chunk):
+        a, b = na[lo : lo + chunk], nb[lo : lo + chunk]
+        p = np.repeat(np.arange(len(a)), cnt[a])
+        q = b[p] << 24 | inc[_ranges(start[a], cnt[a])] & 0xFFFFFF
+        hit = inc[np.minimum(np.searchsorted(inc, q), len(inc) - 1)] == q
+        inter[lo : lo + chunk] = np.bincount(p, weights=hit, minlength=len(a))
+    union = cnt[na] + cnt[nb] - inter
+    return np.where(union > 0, inter / np.maximum(union, 1), 0.0)
+
+
+class SurfacePairs(NamedTuple):
+    """:func:`candidate_pairs_from_surfaces` computed on the driver, one
+    entry per pair: ``a``/``b`` index the surfaces passed in (surface a <
+    surface b), ``norm_a``/``norm_b`` index ``norms``, the distinct normal
+    forms in sorted order."""
+
+    norms: list[str]
+    a: np.ndarray
+    b: np.ndarray
+    norm_a: np.ndarray
+    norm_b: np.ndarray
+    block_key: np.ndarray
+    jaccard: np.ndarray
+    norm_eq: np.ndarray
+    prefix_eq: np.ndarray
+    len_ratio: np.ndarray
+
+
+def local_candidate_pairs(
+    surfaces: Sequence[str], max_block_size: int = MAX_BLOCK_SIZE
+) -> SurfacePairs:
+    """The pairs and features of :func:`candidate_pairs_from_surfaces` for
+    distinct non-null ``surfaces``, in numpy: the same band keys, the same
+    block-size cap and band self-join, the dedupe that keeps each pair's
+    minimum block key, the same four features."""
+    n = len(surfaces)
+    by_rank = np.array(sorted(range(n), key=surfaces.__getitem__), np.int64)
+    forms = np.array([normalize_text(surfaces[i]) for i in by_rank], object)
+    norms, norm_of = np.unique(forms, return_inverse=True)
+    norms = norms.tolist()
+    # (band, key, rank) rows sorted into runs; rank order is surface order
+    band = np.repeat(np.arange(N_BANDS), n)
+    key = band_keys(norms)[norm_of].T.ravel()
+    rank = np.tile(np.arange(n), N_BANDS)
+    o = np.lexsort((rank, key, band))
+    band, key, rank = band[o], key[o], rank[o]
+    run = np.cumsum((band[1:] != band[:-1]) | (key[1:] != key[:-1]))
+    run = np.r_[0, run] if n else run
+    size = np.bincount(run)[run]
+    keep = (size >= 2) & (size <= max_block_size)
+    run, key, rank = run[keep], key[keep], rank[keep]
+    # the self-join: members d apart in one run, d < max_block_size
+    a, b, key = (
+        np.concatenate(c)
+        for c in zip(*(
+            (rank[i], rank[i + d], key[i])
+            for d in range(1, max(max_block_size, 2))
+            for i in [np.flatnonzero(run[d:] == run[:-d])]
+        ))
+    )
+    pair = a * n + b
+    o = np.lexsort((key, pair))
+    o = o[np.r_[True, pair[o][1:] != pair[o][:-1]]] if len(o) else o
+    a, b, key = a[o], b[o], key[o]
+    na, nb = norm_of[a], norm_of[b]
+    lens = np.fromiter(map(len, norms), np.float64, len(norms))
+    prefix = np.unique(np.array([s[:2] for s in norms], object), return_inverse=True)[1]
+    la, lb = lens[na], lens[nb]
+    return SurfacePairs(
+        norms,
+        by_rank[a],
+        by_rank[b],
+        na,
+        nb,
+        key,
+        _jaccard(norms, na, nb),
+        (na == nb).astype(np.float64),
+        (prefix[na] == prefix[nb]).astype(np.float64),
+        np.minimum(la, lb) / np.maximum(np.maximum(la, lb), 1.0),
     )

@@ -16,11 +16,12 @@ Two paths, chosen by the edge count the pre-loop job already observes:
 
 - **driver** (``n <= SMALL_GRAPH_EDGES``): the checkpointed edges are read
   once with ``toArrow()`` and labelled by ``components_of`` in numpy, then
-  handed back through ``createDataFrame``.  Every graph the registry and
-  the pipelines build today is far below the gate, and on such graphs the
-  star loop below costs jobs, not data (``link_entities`` on the test
-  brand fixture: 26 jobs, against 8 here, 7 of them the pre-loop job that
-  computes blocking and the scorer).  The gate bounds driver memory, not
+  handed back through ``createDataFrame``; the gate is
+  ``session.checkpoint_or_fetch``, shared with entity linking.  Every graph
+  the registry and the pipelines build today is far below the gate, and on
+  such graphs the star loop below costs jobs, not data (26 jobs inside the
+  Spark path of ``link_entities`` on the test brand fixture, against 8
+  here).  The gate bounds driver memory, not
   time: on one box the driver path stays the faster one at every measured
   size (SCALE.md), while its working set grows with the graph (about 130
   bytes per edge in the driver's Python process, toArrow table included).
@@ -46,7 +47,7 @@ import numpy as np
 from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
-from ..session import observation_get
+from ..session import checkpoint_or_fetch, observation_get
 
 MAX_ROUNDS = 25
 # edge count up to which components are labelled on the driver: the
@@ -83,11 +84,10 @@ def components_of(u: np.ndarray, v: np.ndarray) -> tuple[np.ndarray, np.ndarray]
             label = nxt
 
 
-def _driver_components(cur: DataFrame, stats: dict | None) -> DataFrame:
-    """Label the checkpointed edge list ``cur`` on the driver (one job)."""
+def _driver_components(spark, t, stats: dict | None) -> DataFrame:
+    """Label the fetched edge table ``t`` on the driver."""
     import pyarrow as pa
 
-    t = cur.toArrow()
     nodes, comp = components_of(
         t.column("u").to_numpy(), t.column("v").to_numpy()
     )
@@ -96,7 +96,7 @@ def _driver_components(cur: DataFrame, stats: dict | None) -> DataFrame:
         stats["rounds"] = 0
         # the converged star's edges: one per non-root node
         stats["final_edges"] = int(np.count_nonzero(nodes != comp))
-    return cur.sparkSession.createDataFrame(
+    return spark.createDataFrame(
         pa.table({"node": nodes, "component": comp})
     )
 
@@ -160,27 +160,18 @@ def connected_components(edges: DataFrame, stats: dict | None = None) -> DataFra
     ``input_edges`` (filtered, deduped), ``nodes``, ``rounds`` (0 on the
     driver path) and ``final_edges`` (edges of the converged star).
     """
-    spark = edges.sparkSession
     # one pre-loop job: the input edge count rides the initial checkpoint
-    # as an Observation (localCheckpoint fires the query-execution
-    # listener, so it resolves when the job finishes)
-    obs0 = Observation()
-    cur = (
+    # as an Observation; below the gate the edges are read once to the driver
+    cur, n_input, local = checkpoint_or_fetch(
         edges.select(F.col("u").cast("long"), F.col("v").cast("long"))
         .filter(F.col("u") != F.col("v"))
-        .distinct()
-        .observe(obs0, F.count(F.lit(1)).alias("n"))
-        .localCheckpoint()
+        .distinct(),
+        SMALL_GRAPH_EDGES,
     )
-    n_input = int(observation_get(obs0)["n"])
     if stats is not None:
         stats["input_edges"] = n_input
-    if n_input == 0:
-        if stats is not None:
-            stats.update(nodes=0, rounds=0, final_edges=0)
-        return spark.createDataFrame([], "node long, component long")
-    if n_input <= SMALL_GRAPH_EDGES:
-        return _driver_components(cur, stats)
+    if local is not None:
+        return _driver_components(edges.sparkSession, local, stats)
     # lazy over the initial checkpoint — rebuilt inside the final job's
     # roots anti-join instead of paying its own materialization
     nodes = (

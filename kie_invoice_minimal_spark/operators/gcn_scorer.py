@@ -1,4 +1,4 @@
-"""GCN-style candidate scorer — SURVEY.md §2.7 (A1–A8), per Arrow batch.
+"""GCN-style candidate scorer — SURVEY.md §2.7 (A1–A8), batched over blocks.
 
 The reference scores text-span nodes with a 5-layer GatedGCN
 (``models/kie/gated_gcn.py``): node/edge linear encoders (A1), per-edge
@@ -9,31 +9,40 @@ head + softmax/argmax/threshold (A7/A8, ``kie_utils.py:277-311``).
 
 Here the same numerics rank entity-link candidate pairs: within each
 candidate block (the graph analog of one document), nodes are distinct
-surfaces with character-statistic features, edges are the blocked pairs.
-L rounds of gated message passing run **in numpy over the whole Arrow
-batch** (applyInPandas per block group — the north star's "GCN-style
-neighborhood-feature scorer applied per Arrow batch"); the head classifies
-each edge as match/no-match: 2-class logits -> softmax -> keep iff
-argmax==match and p >= SCORE_THS (the reference's pred!=0 ∧ max>=0.5 rule).
+normal forms with character-statistic features, edges are the blocked
+pairs.  :func:`score_pairs` scores any number of blocks in one numpy pass
+as a disjoint union (the ``dgl.batch`` analog): node features are min-max
+normalized per block, as the reference normalizes per graph
+(``kie_utils.py:204-239``), and message passing never crosses a block
+because no edge does.  The head classifies each edge as match/no-match:
+2-class logits -> softmax -> keep iff argmax==match and p >= SCORE_THS
+(the reference's pred!=0 ∧ max>=0.5 rule).
 
-Weights are deterministic (seeded), shipped as Spark broadcast variables —
-the analog of the reference's checkpoint load (``kie_utils.py:15-65``).
-The decisive edge features (3-gram Jaccard, normalized equality, prefix
-match, length ratio) enter the head directly; the GCN term contributes a
-neighborhood-consensus adjustment, exactly how the reference mixes text
-and neighborhood evidence.
+Both entity-linking paths call the kernel: the driver path over all its
+pairs, the Spark path once per whole-block Arrow batch
+(:func:`score_candidates`, ``arrow_groups.map_groups`` on block_key).
 
-Scale notes: blocks are bounded by blocking.MAX_BLOCK_SIZE, so each
-applyInPandas group is small; grouping key = block_key -> even shuffle.
+Weights are deterministic (seeded) module constants — the analog of the
+reference's checkpoint load (``kie_utils.py:15-65``).  The decisive edge
+features (3-gram Jaccard, normalized equality, prefix match, length ratio)
+enter the head directly; the GCN term contributes a neighborhood-consensus
+adjustment, exactly how the reference mixes text and neighborhood evidence.
+
+Scale notes: blocks are bounded by blocking.MAX_BLOCK_SIZE, so a re-cut
+batch is bounded too; the kernel cuts its input into chunks of whole
+blocks of about SCORE_CHUNK pairs, which bounds its working set.
 """
 
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from .arrow_groups import map_groups
 
 N_NODE_FEATS = 10  # mirrors the reference's 10-dim node features (E1)
 HIDDEN = 16
@@ -48,6 +57,8 @@ SCORE_THS = 0.5  # configs.py:36
 # Head weights over [jaccard, norm_eq, prefix2_eq, len_ratio, gcn_cos]
 W_HEAD = np.array([5.0, 3.0, 1.0, 0.5, 0.5], dtype=np.float64)
 B_HEAD = -3.7
+# pairs per kernel pass (whole blocks): 8 MB per float64 [edges, HIDDEN] array
+SCORE_CHUNK = 1 << 15
 
 
 def _weights(seed: int = 42) -> dict[str, np.ndarray]:
@@ -71,30 +82,33 @@ def _sigmoid(x: np.ndarray) -> np.ndarray:
     return 1.0 / (1.0 + np.exp(-np.clip(x, -30, 30)))
 
 
-def _node_features(norms: pd.Series) -> np.ndarray:
-    """10-dim char-statistic node features (the E1 analog: geometry ->
-    string shape).  All vectorized pandas str ops."""
-    s = norms.fillna("")
-    ln = s.str.len().to_numpy(dtype=np.float64)
-    feats = np.stack(
+def node_features(norms: pa.Array) -> np.ndarray:
+    """Raw 10-dim char-statistic features per normal form (the E1 analog:
+    geometry -> string shape), before the per-block normalization."""
+    s = pc.fill_null(norms, "")
+
+    def num(a: pa.Array) -> np.ndarray:
+        return a.to_numpy(zero_copy_only=False).astype(np.float64)
+
+    def count(pattern: str) -> np.ndarray:
+        return num(pc.count_substring_regex(s, pattern))
+
+    ln = num(pc.utf8_length(s))
+    return np.stack(
         [
             ln,
             np.log1p(ln),
-            s.str.count("[aeiou]").to_numpy(dtype=np.float64),
-            s.str.count("[0-9]").to_numpy(dtype=np.float64),
-            s.str.count("[bcdfghjklmnpqrstvwxyz]").to_numpy(dtype=np.float64),
-            (s.str[:1] == "v").to_numpy(dtype=np.float64),
-            (s.str[:1].isin(list("abcdefghijklm"))).to_numpy(dtype=np.float64),
-            s.str.count("a").to_numpy(dtype=np.float64),
-            s.str.count("n").to_numpy(dtype=np.float64),
+            count("[aeiou]"),
+            count("[0-9]"),
+            count("[bcdfghjklmnpqrstvwxyz]"),
+            num(pc.starts_with(s, "v")),
+            num(pc.match_substring_regex(s, "^[a-m]")),
+            count("a"),
+            count("n"),
             np.ones_like(ln),
         ],
         axis=1,
     )
-    # per-graph min-max normalize to [0,1] (ref kie_utils.py:204-239)
-    mn, mx = feats.min(axis=0), feats.max(axis=0)
-    rng = np.where(mx > mn, mx - mn, 1.0)
-    return (feats - mn) / rng
 
 
 def _gcn_embeddings(
@@ -108,45 +122,48 @@ def _gcn_embeddings(
     """L rounds of gated message passing (A2+A3+A4) — pure numpy, batch-wide.
 
     h: [n, HIDDEN] node states; e: [m, HIDDEN] edge states;
-    src/dst: [m] int edge endpoints (both directions already present).
+    src/dst: [m] int edge endpoints (both directions already present, so
+    every node has an in-edge).  Node transforms run per node, then gather
+    to the edges; the in-neighbor sums are segment sums over the edges
+    sorted by ``dst`` (stable, so each node adds in edge order).
     """
-    n = h.shape[0]
+    by_dst = np.argsort(dst, kind="stable")
+    seg = np.searchsorted(dst[by_dst], np.arange(h.shape[0]))
+    src_s, dst_s = src[by_dst], dst[by_dst]
+    e = e[by_dst]
     for _ in range(n_layers):
-        Bh = h @ w["B"]
-        gate_logit = e @ w["C"] + h[src] @ w["D"] + h[dst] @ w["E"]  # A2
+        gate_logit = e @ w["C"] + (h @ w["D"])[src_s] + (h @ w["E"])[dst_s]  # A2
         gate = _sigmoid(gate_logit)
-        num = np.zeros((n, HIDDEN))
-        den = np.zeros((n, HIDDEN))
-        np.add.at(num, dst, gate * Bh[src])  # A3 weighted sum over in-nbrs
-        np.add.at(den, dst, gate)
+        num = np.add.reduceat(gate * (h @ w["B"])[src_s], seg)  # A3 over in-nbrs
+        den = np.add.reduceat(gate, seg)
         h_new = h @ w["A"] + num / (den + 1e-6)
         h = h + np.tanh(h_new)  # residual (A4)
         e = e + np.tanh(gate_logit)
     return h
 
 
-def _score_block(pdf: pd.DataFrame, n_layers: int = N_LAYERS) -> pd.DataFrame:
-    """Score one candidate block: build the local graph, run the GCN,
-    classify each pair.  Pair features (Jaccard etc.) arrive precomputed
-    JVM-side from blocking.candidate_pairs — the UDF is pure numpy."""
-    w = _weights()
-    surfaces = pd.unique(pd.concat([pdf["norm_a"], pdf["norm_b"]], ignore_index=True))
-    idx = {s: i for i, s in enumerate(surfaces)}
-    src = pdf["norm_a"].map(idx).to_numpy()
-    dst = pdf["norm_b"].map(idx).to_numpy()
+_W = _weights()
 
-    jacc = pdf["jaccard"].to_numpy(dtype=np.float64)
-    eq = pdf["norm_eq"].to_numpy(dtype=np.float64)
-    pfx = pdf["prefix_eq"].to_numpy(dtype=np.float64)
-    lratio = pdf["len_ratio"].to_numpy(dtype=np.float64)
 
-    # GCN over the block graph (both directions)
-    hf = _node_features(pd.Series(surfaces))
-    h0 = hf @ w["node_enc"]
+def _score_union(block, node_a, node_b, node_feats, jacc, eq, pfx, lratio, n_layers):
+    """:func:`score_pairs` for pairs sorted by ``block``, in one pass."""
+    m, k = len(block), len(node_feats)
+    bid = np.cumsum(np.r_[0, block[1:] != block[:-1]])
+    # node = (block, form); unique sorts them block-major
+    nodes, inv = np.unique(np.r_[bid * k + node_a, bid * k + node_b], return_inverse=True)
+    src, dst = inv[:m], inv[m:]
+    seg = np.flatnonzero(np.r_[True, np.diff(nodes // k) != 0])
+    seg_of = np.repeat(np.arange(len(seg)), np.diff(np.r_[seg, len(nodes)]))
+    hf = node_feats[nodes % k]
+    mn, mx = np.minimum.reduceat(hf, seg), np.maximum.reduceat(hf, seg)
+    hf = (hf - mn[seg_of]) / np.where(mx > mn, mx - mn, 1.0)[seg_of]
+
+    # GCN over the union of block graphs (both directions)
+    h0 = hf @ _W["node_enc"]
     ef = np.stack([jacc, lratio], axis=1)
-    e0 = np.concatenate([ef, ef], axis=0) @ w["edge_enc"]
+    e0 = np.concatenate([ef, ef], axis=0) @ _W["edge_enc"]
     h = _gcn_embeddings(
-        h0, e0, np.concatenate([src, dst]), np.concatenate([dst, src]), w,
+        h0, e0, np.concatenate([src, dst]), np.concatenate([dst, src]), _W,
         n_layers=n_layers,
     )
     hs, hd = h[src], h[dst]
@@ -154,28 +171,75 @@ def _score_block(pdf: pd.DataFrame, n_layers: int = N_LAYERS) -> pd.DataFrame:
     gcn_cos = (hs * hd).sum(axis=1) / denom
 
     feats = np.stack([jacc, eq, pfx, lratio, gcn_cos], axis=1)
-    logit = feats @ W_HEAD + B_HEAD
-    p_match = _sigmoid(logit)  # softmax over [0, logit] == sigmoid(logit)
-    return pd.DataFrame(
-        {
-            "surface_a": pdf["surface_a"],
-            "surface_b": pdf["surface_b"],
-            "score": p_match,
-            "is_match": p_match >= SCORE_THS,
-        }
-    )
+    return _sigmoid(feats @ W_HEAD + B_HEAD)  # softmax over [0, logit]
+
+
+def score_pairs(
+    block: np.ndarray,
+    node_a: np.ndarray,
+    node_b: np.ndarray,
+    node_feats: np.ndarray,
+    jaccard: np.ndarray,
+    norm_eq: np.ndarray,
+    prefix_eq: np.ndarray,
+    len_ratio: np.ndarray,
+    n_layers: int = N_LAYERS,
+) -> np.ndarray:
+    """P(match) of every candidate pair, in input order.  Pairs with one
+    ``block`` value form one graph; its nodes are the distinct values of
+    ``node_a``/``node_b``, which index the rows of ``node_feats``
+    (:func:`node_features`).  The blocks are scored as a disjoint union in
+    chunks of whole blocks of about SCORE_CHUNK pairs."""
+    p = np.empty(len(block))
+    order = np.argsort(block, kind="stable")
+    sb = block[order]
+    starts = np.flatnonzero(np.r_[True, sb[1:] != sb[:-1]])
+    lo = 0
+    while lo < len(sb):
+        j = np.searchsorted(starts, lo + SCORE_CHUNK)
+        hi = int(starts[j]) if j < len(starts) else len(sb)
+        i = order[lo:hi]
+        p[i] = _score_union(
+            sb[lo:hi], node_a[i], node_b[i], node_feats,
+            jaccard[i], norm_eq[i], prefix_eq[i], len_ratio[i], n_layers,
+        )
+        lo = hi
+    return p
 
 
 SCORED_SCHEMA = "surface_a string, surface_b string, score double, is_match boolean"
 
 
-def score_candidates(pairs: DataFrame) -> DataFrame:
-    """applyInPandas per candidate block — each group is one small graph,
-    the disjoint union across groups is the dgl.batch analog (free: the
-    DataFrame IS the batch, block_key is the graph id)."""
-    return pairs.groupBy("block_key").applyInPandas(
-        lambda _, pdf: _score_block(pdf), schema=SCORED_SCHEMA
+def _score_batch(b: pa.RecordBatch, n_layers: int = N_LAYERS) -> pa.RecordBatch:
+    """Score a batch of candidate pairs (the columns of
+    ``blocking.candidate_pairs``) holding whole blocks."""
+    norms = pc.unique(pa.concat_arrays([b.column("norm_a"), b.column("norm_b")]))
+
+    def col(name: str) -> np.ndarray:
+        return b.column(name).to_numpy(zero_copy_only=False)
+
+    p = score_pairs(
+        col("block_key"),
+        pc.index_in(b.column("norm_a"), norms).to_numpy(),
+        pc.index_in(b.column("norm_b"), norms).to_numpy(),
+        node_features(norms),
+        col("jaccard"),
+        col("norm_eq"),
+        col("prefix_eq"),
+        col("len_ratio"),
+        n_layers,
     )
+    return pa.RecordBatch.from_arrays(
+        [b.column("surface_a"), b.column("surface_b"), pa.array(p), pa.array(p >= SCORE_THS)],
+        names=["surface_a", "surface_b", "score", "is_match"],
+    )
+
+
+def score_candidates(pairs: DataFrame) -> DataFrame:
+    """(surface_a, surface_b, score, is_match) per candidate pair: whole
+    blocks per Arrow batch (``map_groups`` on block_key), each batch scored
+    by one :func:`score_pairs` call."""
+    return map_groups(pairs, "block_key", _score_batch, SCORED_SCHEMA)
 
 
 def accepted_edges(scored: DataFrame) -> DataFrame:

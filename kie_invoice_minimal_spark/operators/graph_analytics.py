@@ -276,7 +276,13 @@ def pagerank_scores(
     # lineage) and is itself checkpointed: all 8 iteration branches and the
     # final ranking reference it, and one tiny narrow job beats re-planning
     # the distinct in every branch
-    nodes = ew.select(F.col("src").alias("node")).distinct().localCheckpoint()
+    # nodes = src ∪ dst (one scan): a dst-only sink is scored like any
+    # other node
+    nodes = (
+        ew.select(F.explode(F.array("src", "dst")).alias("node"))
+        .distinct()
+        .localCheckpoint()
+    )
 
     pr = nodes.withColumn("score", F.lit(PR_SCALE).cast("long"))
     insum_cap = headroom // PR_DAMP_NUM
@@ -392,8 +398,15 @@ def kg_entity_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def pagerank_sql(mentions_sql: str, iters: int = PR_ITERS) -> str:
-    """DuckDB twin: identical integer arithmetic, the fixed iterations
-    unrolled as chained CTEs (pr0..prN) — no recursive CTE needed."""
+    """DuckDB twin of ``pagerank(comention_edges(m))``."""
+    return pagerank_edges_sql(_graph_cte(mentions_sql), iters)
+
+
+def pagerank_edges_sql(graph_cte: str, iters: int = PR_ITERS) -> str:
+    """DuckDB twin of :func:`pagerank` over the ``(src, dst, w)`` relation
+    ``e`` that ``graph_cte`` defines: identical integer arithmetic, the
+    fixed iterations unrolled as chained CTEs (pr0..prN), nodes = src ∪ dst
+    as on the Spark side."""
     itcte = []
     for i in range(1, iters + 1):
         itcte.append(f"""pr{i} AS MATERIALIZED (
@@ -408,9 +421,9 @@ def pagerank_sql(mentions_sql: str, iters: int = PR_ITERS) -> str:
 )""")
     chain = ",\n".join(itcte)
     return f"""
-WITH {_graph_cte(mentions_sql)},
+WITH {graph_cte},
 wout AS MATERIALIZED (SELECT src, CAST(sum(w) AS BIGINT) AS wout FROM e GROUP BY src),
-n AS MATERIALIZED (SELECT src AS node FROM wout),
+n AS MATERIALIZED (SELECT src AS node FROM e UNION SELECT dst FROM e),
 pr0 AS MATERIALIZED (SELECT node, CAST({PR_SCALE} AS BIGINT) AS score FROM n),
 {chain}
 SELECT node AS surface, score AS pagerank_q,

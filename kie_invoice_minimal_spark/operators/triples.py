@@ -5,8 +5,8 @@ builds, per document and per non-OTHER label, the ' '-join of all member
 texts in index order.  Here that is a whole-subject Arrow join emitting the
 ``triples`` table ``(subj, pred, obj, conv_id)``: one hash exchange on the
 subject, a partition-local sort that clusters it, then one ``mapInArrow``
-kernel that re-cuts the batch stream so every subject is whole in one batch,
-sorts that batch on ``(subj, pred, turn_idx, pos, surface)`` and ' '-joins
+kernel (``arrow_groups.map_groups``) that re-cuts the batch stream so every
+subject is whole in one batch, sorts that batch on ``(subj, pred, turn_idx, pos, surface)`` and ' '-joins
 every (subj, pred) run with one pyarrow ``binary_join``.  The flagship
 (``plans/pipeline.extract_triples_df``) runs the same kernel over turns keyed
 by conv_id with the detector inside it; :func:`materialize_triples` runs it
@@ -39,6 +39,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.rules import OTHER
+from .arrow_groups import grouped_batches, map_groups, run_starts
 
 SUBJ_BUCKETS = 64
 SALT_BUCKETS = 8
@@ -47,24 +48,6 @@ _KEY = ("subj", "pred")
 # the order the reference joins a label's texts in; ``surface`` closes it
 # so duplicate (turn_idx, pos) rows join deterministically
 _ORDER = [(c, "ascending") for c in (*_KEY, "turn_idx", "pos", "surface")]
-
-
-def _run_starts(batch: pa.RecordBatch, key: tuple[str, ...]) -> np.ndarray:
-    """Rows 1..n-1 whose ``key`` columns differ from the row before.
-    Null-safe: ``not_equal`` is null when either side is null, so a
-    null <-> non-null change is made a boundary explicitly (null keys form
-    one group of their own, as under SQL GROUP BY)."""
-    n = batch.num_rows
-    change = np.zeros(n - 1, dtype=bool)
-    for name in key:
-        col = batch.column(name)
-        cur, prev = col.slice(1), col.slice(0, n - 1)
-        ne = pc.fill_null(pc.not_equal(cur, prev), False)
-        change |= ne.to_numpy(zero_copy_only=False)
-        if col.null_count:
-            is_null = pc.is_null(col).to_numpy(zero_copy_only=False)
-            change |= is_null[1:] != is_null[:-1]
-    return np.flatnonzero(change) + 1
 
 
 def _join_runs(surface: pa.Array, starts: np.ndarray, end: int) -> pa.Array:
@@ -79,35 +62,13 @@ def _join_runs(surface: pa.Array, starts: np.ndarray, end: int) -> pa.Array:
     return pc.binary_join(runs, " ")
 
 
-def _whole_groups(batches: Iterator[pa.RecordBatch], key: str) -> Iterator[pa.RecordBatch]:
-    """Re-cut a batch stream clustered on ``key`` so that every key group
-    lies whole in exactly one output batch.  The group still open at a
-    batch's end is carried as chunks and concatenated once, when the key
-    changes; every row is copied once, so the carry stays linear."""
-    carry: list[pa.RecordBatch] = []  # the open group's rows
-    for b in batches:
-        if not b.num_rows:
-            continue
-        starts = _run_starts(b, (key,))
-        cut = int(starts[-1]) if len(starts) else 0  # the last group's start
-        if not cut and carry and carry[0].column(key)[:1].equals(b.column(key)[:1]):
-            carry.append(b)
-            continue
-        done = carry + [b.slice(0, cut)]
-        carry = [b.slice(cut)]
-        if sum(c.num_rows for c in done):
-            yield pa.Table.from_batches(done).combine_chunks().to_batches()[0]
-    if carry:
-        yield pa.Table.from_batches(carry).combine_chunks().to_batches()[0]
-
-
 def _join_sorted(m: pa.RecordBatch) -> pa.RecordBatch:
     """(subj, pred, obj, conv_id), one row per (subj, pred) of ``m``, a batch
     of (subj, pred, turn_idx, pos, surface) rows holding whole subjects in
     any order: sort in-batch (nulls first, as Spark sorts), then ' '-join
     every run of the key."""
     m = m.take(pc.sort_indices(m, sort_keys=_ORDER, null_placement="at_start"))
-    starts = np.concatenate(([0], _run_starts(m, _KEY)))
+    starts = np.concatenate(([0], run_starts(m, _KEY)))
     subj, pred = m.select(_KEY).take(starts).columns
     obj = _join_runs(m.column("surface"), starts, m.num_rows)
     return pa.RecordBatch.from_arrays(
@@ -118,33 +79,29 @@ def _join_sorted(m: pa.RecordBatch) -> pa.RecordBatch:
 ToMentions = Callable[[pa.RecordBatch], pa.RecordBatch]
 
 
+def _joined(m: pa.RecordBatch) -> pa.RecordBatch | None:
+    return _join_sorted(m) if m.num_rows else None
+
+
 def _triples_kernel(
     batches: Iterator[pa.RecordBatch], key: str, to_mentions: ToMentions
 ) -> Iterator[pa.RecordBatch]:
     """Triples from a batch stream clustered on the subject column ``key``:
     re-cut into whole subjects, map each batch to (subj, pred, turn_idx,
     pos, surface) rows with ``to_mentions``, join in-batch."""
-    for b in _whole_groups(batches, key):
-        m = to_mentions(b)
-        if m.num_rows:
-            yield _join_sorted(m)
+    return grouped_batches(batches, key, lambda b: _joined(to_mentions(b)))
 
 
 def triples_by_group(rows: DataFrame, key: str, to_mentions: ToMentions) -> DataFrame:
-    """The plan behind both triple entry points: one hash exchange on the
-    subject column ``key``, a partition-local sort that clusters it, then
-    one ``mapInArrow`` running :func:`_triples_kernel`.  Every (subj, pred)
-    run is complete in the batch that joins it, so no state crosses
-    batches but the re-cut's carry."""
+    """The plan behind both triple entry points: :func:`map_groups` on the
+    subject column ``key`` running :func:`_triples_kernel`'s per-batch
+    step.  Every (subj, pred) run is complete in the batch that joins it."""
     subj_t = rows.schema[key].dataType.simpleString()
-
-    def triples(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        return _triples_kernel(batches, key, to_mentions)
-
-    return (
-        rows.repartition(key)
-        .sortWithinPartitions(key)
-        .mapInArrow(triples, f"subj {subj_t}, pred string, obj string, conv_id {subj_t}")
+    return map_groups(
+        rows,
+        key,
+        lambda b: _joined(to_mentions(b)),
+        f"subj {subj_t}, pred string, obj string, conv_id {subj_t}",
     )
 
 

@@ -12,7 +12,10 @@ from __future__ import annotations
 import os
 import time
 
-from pyspark.sql import Observation, SparkSession
+import pyarrow as pa
+
+from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql import functions as F
 
 DEFAULT_SHUFFLE_PARTITIONS = 32
 
@@ -99,3 +102,16 @@ def observation_get(obs: Observation) -> dict:
         time.sleep(pause)
         pause = min(2 * pause, 0.01)
     return obs.get
+
+
+def checkpoint_or_fetch(
+    df: DataFrame, driver_rows: int
+) -> tuple[DataFrame, int, pa.Table | None]:
+    """The driver-path gate: ``df`` materialized once by ``localCheckpoint``
+    with its row count observed on the same job.  Returns ``(checkpoint, n,
+    table)``; ``table`` is the checkpoint read once with ``toArrow()`` when
+    ``n <= driver_rows``, else ``None`` and the caller stays in Spark."""
+    obs = Observation()
+    cur = df.observe(obs, F.count(F.lit(1)).alias("n")).localCheckpoint()
+    n = int(observation_get(obs)["n"])
+    return cur, n, cur.toArrow() if n <= driver_rows else None

@@ -9,7 +9,6 @@ from pyspark.sql import functions as F
 
 from kie_invoice_minimal_spark.functions.rules import ALIAS_GROUPS
 from kie_invoice_minimal_spark.operators.blocking import candidate_pairs, normalize_surface
-from kie_invoice_minimal_spark.operators.connected_components import connected_components
 from kie_invoice_minimal_spark.operators.gcn_scorer import accepted_edges, score_candidates
 from kie_invoice_minimal_spark.operators.mention_detect import detect_mentions_arrow
 from kie_invoice_minimal_spark.plans.entity_linking import alias_triples, link_entities
@@ -79,37 +78,39 @@ def test_scorer_separates(spark, brand_mentions):
         )
 
 
-def test_end_to_end_alias_clusters(spark, brand_mentions):
+def test_end_to_end_alias_clusters(spark, brand_mentions, both_paths):
     """link_entities recovers exactly the planted partition (restricted to
-    surfaces that occur in the corpus)."""
-    emap = link_entities(brand_mentions).collect()
-    got: dict[str, int] = {r.surface: r.entity_id for r in emap}
-    present = set(got)
-    # same group -> same entity; different group -> different entity
-    for gi, grp in enumerate(ALIAS_GROUPS):
-        members = [s for s in grp if s in present]
-        ids = {got[m] for m in members}
-        assert len(ids) == 1, (grp, ids)
-    rep = {}
-    for gi, grp in enumerate(ALIAS_GROUPS):
-        members = [s for s in grp if s in present]
-        if members:
-            rep[gi] = got[members[0]]
-    assert len(set(rep.values())) == len(rep)  # groups stay distinct
-    # canonical surface is stable and within-group
-    canon = {r.surface: r.canonical_surface for r in emap}
-    for gi, grp in enumerate(ALIAS_GROUPS):
-        members = [s for s in grp if s in present]
-        cs = {canon[m] for m in members}
-        assert len(cs) == 1 and cs.pop() in grp
+    surfaces that occur in the corpus), on both paths."""
+    for path in both_paths():
+        emap = link_entities(brand_mentions).collect()
+        got: dict[str, int] = {r.surface: r.entity_id for r in emap}
+        present = set(got)
+        # same group -> same entity; different group -> different entity
+        for gi, grp in enumerate(ALIAS_GROUPS):
+            members = [s for s in grp if s in present]
+            ids = {got[m] for m in members}
+            assert len(ids) == 1, (path, grp, ids)
+        rep = {}
+        for gi, grp in enumerate(ALIAS_GROUPS):
+            members = [s for s in grp if s in present]
+            if members:
+                rep[gi] = got[members[0]]
+        assert len(set(rep.values())) == len(rep), path  # groups stay distinct
+        # canonical surface is stable and within-group
+        canon = {r.surface: r.canonical_surface for r in emap}
+        for gi, grp in enumerate(ALIAS_GROUPS):
+            members = [s for s in grp if s in present]
+            cs = {canon[m] for m in members}
+            assert len(cs) == 1 and cs.pop() in grp, path
 
 
-def test_alias_triples(spark, brand_mentions):
-    emap = link_entities(brand_mentions)
-    rows = alias_triples(emap).collect()
-    assert all(r.pred == "HAS_ALIAS" for r in rows)
-    assert all(r.subj != r.obj for r in rows)
-    assert len(rows) > 0
+def test_alias_triples(spark, brand_mentions, both_paths):
+    for path in both_paths():
+        emap = link_entities(brand_mentions)
+        rows = alias_triples(emap).collect()
+        assert all(r.pred == "HAS_ALIAS" for r in rows), path
+        assert all(r.subj != r.obj for r in rows), path
+        assert len(rows) > 0, path
 
 
 def test_block_size_cap(spark, brand_mentions):
@@ -156,48 +157,37 @@ def test_cc_random_graph_vs_union_find(spark, cc_both_paths):
         assert dict(got) == want_assign, path
 
 
-def test_linking_at_cardinality(spark):
+def test_linking_at_cardinality(spark, cardinality_mentions, both_paths):
     """Linking quality holds at non-toy cardinality: 3k surfaces / 1k alias
     groups of random names — near-total group recovery, near-zero merges."""
-    import random
-    import string
     from collections import defaultdict
 
-    rng = random.Random(7)
-    rows, truth = [], {}
-    for g in range(1000):
-        base = "".join(rng.choice(string.ascii_lowercase) for _ in range(9))
-        for v in [base.capitalize(), base.upper(), base + "-co"]:
-            rows.append((f"c{g % 97}", g % 7, 0, 0, len(v), v, "BRAND"))
-            truth[v] = g
-    m = spark.createDataFrame(
-        rows,
-        "conv_id string, turn_idx int, pos int, span_start int, span_end int,"
-        " surface string, mention_type string",
-    )
-    emap = {r.surface: r.entity_id for r in link_entities(m).collect()}
-    by_group, ent_groups = defaultdict(set), defaultdict(set)
-    for s, gid in truth.items():
-        by_group[gid].add(emap[s])
-        ent_groups[emap[s]].add(gid)
-    split = sum(1 for v in by_group.values() if len(v) > 1)
-    merged = sum(1 for v in ent_groups.values() if len(v) > 1)
-    assert split <= 50, split   # <= 5% LSH miss tolerance
-    assert merged <= 10, merged  # <= 1% false-merge tolerance
+    m, truth = cardinality_mentions
+    for path in both_paths():
+        emap = {r.surface: r.entity_id for r in link_entities(m).collect()}
+        by_group, ent_groups = defaultdict(set), defaultdict(set)
+        for s, gid in truth.items():
+            by_group[gid].add(emap[s])
+            ent_groups[emap[s]].add(gid)
+        split = sum(1 for v in by_group.values() if len(v) > 1)
+        merged = sum(1 for v in ent_groups.values() if len(v) > 1)
+        assert split <= 50, (path, split)   # <= 5% LSH miss tolerance
+        assert merged <= 10, (path, merged)  # <= 1% false-merge tolerance
 
 
-def test_linking_partitioning_invariance(spark, brand_mentions):
+def test_linking_partitioning_invariance(spark, brand_mentions, both_paths):
     """The entity map must not depend on how the input happens to be
     partitioned (shuffle order, group arrival order)."""
-    a = {
-        (r.surface, r.canonical_surface)
-        for r in link_entities(brand_mentions.repartition(3)).collect()
-    }
-    b = {
-        (r.surface, r.canonical_surface)
-        for r in link_entities(brand_mentions.repartition(17)).collect()
-    }
-    assert a == b and len(a) > 0
+    for path in both_paths():
+        a = {
+            (r.surface, r.canonical_surface)
+            for r in link_entities(brand_mentions.repartition(3)).collect()
+        }
+        b = {
+            (r.surface, r.canonical_surface)
+            for r in link_entities(brand_mentions.repartition(17)).collect()
+        }
+        assert a == b and len(a) > 0, path
 
 
 def test_cc_hub_stress_midsize(spark, cc_both_paths):
@@ -246,24 +236,76 @@ def test_cc_gate_boundary(spark, monkeypatch):
             assert stats["rounds"] >= 1
 
 
-def test_link_entities_cc_job_count(spark, brand_mentions, monkeypatch):
-    """Connected components inside link_entities runs at most 8 Spark jobs
-    on the brand fixture (job group around the CC call; the count includes
-    the pre-loop job that computes blocking and the scorer, with its AQE
-    stage jobs).  The star loop ran 26 jobs on a graph this small."""
+def test_link_entities_job_count(spark, brand_mentions):
+    """link_entities on the brand fixture runs at most 4 Spark jobs (job
+    group around the call, listener bus drained): the distinct-surface
+    checkpoint with its AQE stage job, the toArrow read, and one more while
+    the persisted fixture is first computed; blocking, scoring and
+    components then run on the driver.  The Spark path runs 11 here."""
+    sc = spark.sparkContext
+    sc.setJobGroup("el-call", "link_entities")
+    try:
+        emap = link_entities(brand_mentions)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert emap.count() > 0
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    jobs = list(sc.statusTracker().getJobIdsForGroup("el-call"))
+    assert 0 < len(jobs) <= 4, len(jobs)
+
+
+def _emap(df):
+    return sorted((tuple(r) for r in df.collect()), key=repr)
+
+
+def test_link_entities_paths_agree(spark, brand_mentions, cardinality_mentions, both_paths):
+    """Both paths give the same entity map, row for row, on the brand
+    fixture, the sf0.01 BRAND mentions and the 3k set plus a null surface;
+    a null surface keeps its row (None, xxhash64(null) = 42, None)."""
+    from kie_invoice_minimal_spark.sources.transcripts import transcripts_from_documents
+
+    sf = detect_mentions_arrow(transcripts_from_documents(spark, "/root/testdata/sf0.01"))
+    card, _truth = cardinality_mentions
+    null_row = spark.createDataFrame(
+        [("cz", 0, 0, 0, 0, None, "BRAND")], card.schema
+    )
+    for name, m in (
+        ("brand", brand_mentions),
+        ("sf0.01", sf),
+        ("3k+null", card.unionByName(null_row)),
+    ):
+        got = {path: _emap(link_entities(m)) for path in both_paths()}
+        assert got["driver"] == got["distributed"], name
+        assert len(got["driver"]) > 0, name
+        if name == "3k+null":
+            assert (None, 42, None) in got["driver"]
+
+
+def test_link_entities_gate_boundary(spark, monkeypatch):
+    """k distinct surfaces with SMALL_SURFACES = k take the driver path,
+    k + 1 take the Spark path; both give the same map."""
     import kie_invoice_minimal_spark.plans.entity_linking as el
 
-    sc = spark.sparkContext
+    calls = []
+    local = el.local_entity_map
 
-    def grouped_cc(edges, *args, **kwargs):
-        sc.setJobGroup("el-cc", "connected components")
-        try:
-            return connected_components(edges, *args, **kwargs)
-        finally:
-            sc.setLocalProperty("spark.jobGroup.id", None)
+    def spy(t):
+        calls.append(t.num_rows)
+        return local(t)
 
-    monkeypatch.setattr(el, "connected_components", grouped_cc)
-    assert link_entities(brand_mentions).count() > 0
-    sc._jsc.sc().listenerBus().waitUntilEmpty()
-    jobs = list(sc.statusTracker().getJobIdsForGroup("el-cc"))
-    assert 0 < len(jobs) <= 8, len(jobs)
+    monkeypatch.setattr(el, "local_entity_map", spy)
+    surfaces = ["Vinamilk", "VINAMILK", "Vina-milk", "Kinh Đô", "kinhdo", "Acecook"]
+    k = len(surfaces) - 1
+    monkeypatch.setattr(el, "SMALL_SURFACES", k)
+    schema = "surface string, mention_type string"
+    maps = []
+    for n in (k, k + 1):
+        m = spark.createDataFrame([(s, "BRAND") for s in surfaces[:n]] * 2, schema)
+        calls.clear()
+        maps.append(_emap(el.link_entities(m)))
+        assert calls == ([n] if n == k else []), n
+    # the k + 1 map computed on the driver as well agrees with the Spark one
+    monkeypatch.setattr(el, "SMALL_SURFACES", k + 1)
+    m = spark.createDataFrame([(s, "BRAND") for s in surfaces], schema)
+    assert _emap(el.link_entities(m)) == maps[1]
+    assert {r[0]: r[2] for r in maps[1]}["VINAMILK"] == "VINAMILK"

@@ -18,6 +18,8 @@ from kie_invoice_minimal_spark.operators.graph_analytics import (
     PR_DAMP_NUM,
     PR_ITERS,
     PR_SCALE,
+    pagerank,
+    pagerank_edges_sql,
     pagerank_sql,
 )
 
@@ -27,17 +29,12 @@ MENTION = st.tuples(
 )
 
 
-def _python_pagerank(pairs):
-    cs = {(f"c{c}", s) for c, s in pairs}
-    edges = defaultdict(int)
-    for conv_a, sa in cs:
-        for conv_b, sb in cs:
-            if conv_a == conv_b and sa != sb:
-                edges[(sa, sb)] += 1
+def _python_pagerank_edges(edges):
+    """The recurrence over a {(src, dst): w} dict; nodes = src ∪ dst."""
     wout = defaultdict(int)
     for (s, _d), w in edges.items():
         wout[s] += w
-    nodes = sorted(wout)
+    nodes = sorted({x for e in edges for x in e})
     score = {n: PR_SCALE for n in nodes}
     for _ in range(PR_ITERS):
         insum = defaultdict(int)
@@ -48,6 +45,16 @@ def _python_pagerank(pairs):
             for n in nodes
         }
     return score
+
+
+def _python_pagerank(pairs):
+    cs = {(f"c{c}", s) for c, s in pairs}
+    edges = defaultdict(int)
+    for conv_a, sa in cs:
+        for conv_b, sb in cs:
+            if conv_a == conv_b and sa != sb:
+                edges[(sa, sb)] += 1
+    return _python_pagerank_edges(edges)
 
 
 @settings(max_examples=40, deadline=None)
@@ -65,3 +72,45 @@ def test_pagerank_sql_equals_python_reference(pairs):
     sql = pagerank_sql("SELECT conv_id, surface, mention_type FROM fuzz_mentions_pdf")
     got = {r[0]: r[1] for r in con.execute(sql).fetchall()}
     assert got == _python_pagerank(pairs)
+
+
+EDGE = st.tuples(st.sampled_from("abcd"), st.sampled_from("abcdef"), st.integers(1, 4))
+
+
+def _edges_sql(edges) -> tuple[duckdb.DuckDBPyConnection, str]:
+    con = duckdb.connect()
+    con.register(
+        "fuzz_edges_pdf",
+        pd.DataFrame(
+            [(s, d, w) for (s, d), w in edges.items()], columns=["src", "dst", "w"]
+        ).astype({"src": str, "dst": str, "w": "int64"}),
+    )
+    return con, pagerank_edges_sql(
+        "e AS MATERIALIZED (SELECT src, dst, CAST(w AS BIGINT) AS w FROM fuzz_edges_pdf)"
+    )
+
+
+@settings(max_examples=40, deadline=None)
+@given(st.lists(EDGE, min_size=1, max_size=12))
+def test_pagerank_asymmetric_edges_score_sinks(edge_list):
+    """Directed edges whose dst never appears as a src (e, f here): the
+    DuckDB twin scores those sinks too, as the recurrence over
+    nodes = src ∪ dst does."""
+    edges = {(s, d): w for s, d, w in edge_list if s != d}
+    con, sql = _edges_sql(edges)
+    got = {r[0]: r[1] for r in con.execute(sql).fetchall()}
+    assert got == _python_pagerank_edges(edges)
+
+
+def test_pagerank_asymmetric_spark_equals_duckdb(spark):
+    """pagerank(edges) on a directed graph with dst-only sinks equals its
+    DuckDB twin row for row (surface, pagerank_q, rank)."""
+    edges = {("a", "b"): 2, ("b", "a"): 1, ("a", "e"): 3, ("b", "f"): 1, ("c", "e"): 1}
+    df = spark.createDataFrame(
+        [(s, d, w) for (s, d), w in edges.items()], "src string, dst string, w long"
+    )
+    got = sorted(tuple(r) for r in pagerank(df).collect())
+    con, sql = _edges_sql(edges)
+    want = sorted(tuple(r) for r in con.execute(sql).fetchall())
+    assert got == want
+    assert {r[0] for r in got} == {"a", "b", "c", "e", "f"}
