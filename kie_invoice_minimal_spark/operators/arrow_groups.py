@@ -1,13 +1,25 @@
-"""Whole-group Arrow batches: the one grouped Python crossing of the package.
+"""Arrow batch maps: every ``mapInArrow`` of the package crosses here.
 
-``map_groups(rows, key, fn, schema)`` is a hash exchange on ``key``, a
-partition-local sort that clusters it, then one ``mapInArrow`` whose batch
-stream is re-cut so that every key group lies whole in exactly one batch;
-``fn`` maps each such batch.  The triple join (``triples.py``) and the GCN
-scorer (``gcn_scorer.py``) both run on it: a batch is a disjoint union of
-whole groups, so a vectorized kernel handles thousands of small groups per
-call instead of one pandas frame per group (the point of *Accelerating
-Python UDFs in Vectorized Query Execution*, CIDR 2022).
+``map_batches(rows, fn, schema)`` maps each Arrow batch of ``rows`` with
+``fn``.  ``map_groups(rows, key, fn, schema)`` is a hash exchange on
+``key``, a partition-local sort that clusters it, then one ``mapInArrow``
+whose batch stream is re-cut so that every key group lies whole in exactly
+one batch; ``fn`` maps each such batch.  The triple join (``triples.py``)
+and the GCN scorer (``gcn_scorer.py``) both run on it: a batch is a
+disjoint union of whole groups, so a vectorized kernel handles thousands of
+small groups per call instead of one pandas frame per group (the point of
+*Accelerating Python UDFs in Vectorized Query Execution*, CIDR 2022).
+
+Both start with :func:`worker_setup`.  pyspark's worker calls
+``importlib.invalidate_caches()`` at the start of every task, and on
+CPython 3.11 every ``zipimporter`` then re-reads its archive's whole
+directory: ``pyspark.zip``, the py4j zip and the spark-core jar, 16
+importers in a worker, 110-260 ms per task.  ``worker_setup`` makes that
+re-read conditional on the archive having changed
+(:func:`_stamped_invalidate`), once per worker process, from inside the UDF
+body, so the driver never runs it.  A custom ``spark.python.daemon.module`` that preloads instead cannot
+work under ``--py-files``: the daemon starts before those files reach the
+path.  The first task of each worker still pays the re-read.
 
 Scale notes: a re-cut batch is at most one Arrow batch
 (``spark.sql.execution.arrow.maxRecordsPerBatch`` rows) plus one group, so
@@ -16,6 +28,8 @@ groups must be bounded, as conversations and capped candidate blocks are.
 
 from __future__ import annotations
 
+import os
+import zipimport
 from collections.abc import Callable, Iterator
 
 import numpy as np
@@ -25,6 +39,49 @@ import pyarrow.compute as pc
 from pyspark.sql import DataFrame
 
 BatchFn = Callable[[pa.RecordBatch], "pa.RecordBatch | None"]
+BatchStream = Callable[[Iterator[pa.RecordBatch]], Iterator[pa.RecordBatch]]
+
+_STOCK_INVALIDATE = zipimport.zipimporter.invalidate_caches
+# archive path -> (st_mtime_ns, st_size) of the directory last read from it
+_zip_stamps: dict[str, tuple[int, int]] = {}
+
+
+def _stamp(archive: str) -> tuple[int, int] | None:
+    try:
+        st = os.stat(archive)
+    except OSError:
+        return None
+    return st.st_mtime_ns, st.st_size
+
+
+def _stamped_invalidate(self: zipimport.zipimporter) -> None:
+    """``zipimporter.invalidate_caches`` that reuses the directory in
+    ``zipimport._zip_directory_cache`` while the archive's (mtime, size)
+    still match the last read; a changed or vanished archive takes the
+    stock re-read, which also drops a vanished archive from the cache."""
+    stamp = _stamp(self.archive)
+    files = zipimport._zip_directory_cache.get(self.archive)
+    if stamp is not None and files is not None and _zip_stamps.get(self.archive) == stamp:
+        self._files = files
+        return
+    _STOCK_INVALIDATE(self)
+    if stamp is not None and self.archive in zipimport._zip_directory_cache:
+        _zip_stamps[self.archive] = stamp
+    else:
+        _zip_stamps.pop(self.archive, None)
+
+
+def worker_setup() -> None:
+    """Install :func:`_stamped_invalidate` once per process, stamping the
+    archives already cached (read by this task's own invalidate).  Runs in
+    the Python worker; idempotent."""
+    if zipimport.zipimporter.invalidate_caches is _stamped_invalidate:
+        return
+    for archive in zipimport._zip_directory_cache:
+        stamp = _stamp(archive)
+        if stamp is not None:
+            _zip_stamps[archive] = stamp
+    zipimport.zipimporter.invalidate_caches = _stamped_invalidate
 
 
 def run_starts(batch: pa.RecordBatch, key: tuple[str, ...]) -> np.ndarray:
@@ -70,20 +127,41 @@ def whole_groups(batches: Iterator[pa.RecordBatch], key: str) -> Iterator[pa.Rec
 def grouped_batches(
     batches: Iterator[pa.RecordBatch], key: str, fn: BatchFn
 ) -> Iterator[pa.RecordBatch]:
-    """``fn`` over every re-cut batch of a stream clustered on ``key``;
-    ``None`` and empty outputs are dropped."""
-    for b in whole_groups(batches, key):
+    """``fn`` over every re-cut batch of a stream clustered on ``key``."""
+    return _mapped(whole_groups(batches, key), fn)
+
+
+def _mapped(batches: Iterator[pa.RecordBatch], fn: BatchFn) -> Iterator[pa.RecordBatch]:
+    """``fn`` over every batch; ``None`` and empty outputs are dropped."""
+    for b in batches:
         out = fn(b)
         if out is not None and out.num_rows:
             yield out
+
+
+def _map_stream(rows: DataFrame, stream: BatchStream, schema: str) -> DataFrame:
+    """The package's one ``mapInArrow``: :func:`worker_setup`, then
+    ``stream`` over the partition's batches."""
+
+    def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        worker_setup()
+        return stream(batches)
+
+    return rows.mapInArrow(run, schema)
+
+
+def map_batches(rows: DataFrame, fn: BatchFn, schema: str) -> DataFrame:
+    """``fn`` over every Arrow batch of ``rows``: a narrow map, ``schema``
+    is its output schema."""
+    return _map_stream(rows, lambda batches: _mapped(batches, fn), schema)
 
 
 def map_groups(rows: DataFrame, key: str, fn: BatchFn, schema: str) -> DataFrame:
     """``fn`` over whole ``key`` groups of ``rows``: one hash exchange on
     ``key``, a partition-local sort, one ``mapInArrow`` (``schema`` is its
     output schema).  No state crosses batches but the re-cut's carry."""
-
-    def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        return grouped_batches(batches, key, fn)
-
-    return rows.repartition(key).sortWithinPartitions(key).mapInArrow(run, schema)
+    return _map_stream(
+        rows.repartition(key).sortWithinPartitions(key),
+        lambda batches: grouped_batches(batches, key, fn),
+        schema,
+    )

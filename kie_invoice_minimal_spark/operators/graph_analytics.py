@@ -215,6 +215,11 @@ def pagerank(
     central (ties broken by surface; the ranking window runs over the
     entity table, which is orders of magnitude smaller than the corpus).
 
+    Input contract: symmetric edges, each undirected edge as both (a, b)
+    and (b, a), as comention_edges and lifted_edges build them.  A
+    directed list is still defined (nodes = src ∪ dst, a dst-only node is
+    a sink; pinned against the DuckDB twin) but is ranked as directed.
+
     Execution shape (r6 rework): the upstream lineage (scan → detector →
     optionally the whole EL stage) is materialized PROVABLY once — the
     edge table itself is localCheckpoint'd first (one extra tiny job over
@@ -1513,6 +1518,10 @@ def kcore_peel(
     the same fan-out reason).  n_edges counts DIRECTED rows (the
     symmetric edge list carries each undirected edge twice).
 
+    Input contract: symmetric edges, as comention_edges and lifted_edges
+    build them; degree is counted on src, so a node seen only as dst of a
+    directed list has no degree and its edges are dropped in round 1.
+
     INT64 HEADROOM GUARD (r7 next-round item 7): the per-round degree is
     guarded by the same raise_error pattern as pagerank/LPA before the
     ≥k comparison.  Honest scope note: TODAY the degree is a row count
@@ -1638,6 +1647,10 @@ def label_propagation(
     window would sort a celebrity entity's whole label multiset in one
     task.  Labels are re-checkpointed per round: the argmax references
     the score table twice, so uncut lineage doubles per round.
+
+    Input contract: symmetric edges, as comention_edges and lifted_edges
+    build them; the node set is src, so a node seen only as dst of a
+    directed list gets no label.
 
     INT64 HEADROOM GUARD (r7 next-round item 7 — the pagerank guard
     pattern, graph_analytics.py pagerank_scores, extended to this

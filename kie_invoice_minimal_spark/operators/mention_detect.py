@@ -9,14 +9,20 @@ token with the deterministic rule set in :mod:`..functions.rules`.
 
 Two interchangeable implementations, tested for equality:
 
-- :func:`detect_mentions_arrow` — ``mapInArrow`` over :func:`_classify_batch`:
-  pyarrow compute kernels and numpy over whole record batches, zero per-row
-  Python and no pandas conversion (the north rule's required surface).  The
-  Arrow flagship (``plans/pipeline.extract_triples_df``) calls
-  ``_classify_batch`` inside its one triple-join ``mapInArrow`` instead;
-  this map serves ``kg_mentions``, the staged pipeline and streaming.  The
-  model-scoring analog slot: any learned detector (a real NER model) would
-  drop into this same batch function.
+- :func:`detect_mentions_arrow` — ``arrow_groups.map_batches`` over
+  :func:`_classify_batch`: pyarrow compute kernels and numpy over whole
+  record batches, zero per-row Python and no pandas conversion (the north
+  rule's required surface).  Each token is probed once against the label
+  tokens and once against the gazetteers (``index_in``), and the date and
+  weight regexes run only on the ~15 % of tokens that start with an ASCII
+  digit — the only ones either pattern can match (skipping match work whose
+  answer is already known, as in *Exploiting Code Generation for Efficient
+  LIKE Pattern Matching*, VLDB 2023).  The Arrow flagship
+  (``plans/pipeline.extract_triples_df``) calls ``_classify_batch`` inside
+  its one triple-join ``mapInArrow`` instead; this map serves
+  ``kg_mentions``, the staged pipeline and streaming.  The model-scoring
+  analog slot: any learned detector (a real NER model) would drop into this
+  same batch function.
 - :func:`detect_mentions_native` — pure JVM column expressions
   (posexplode + higher-order functions), whole-stage-codegen friendly; the
   fastest path when the rule set is expressible in SQL.
@@ -32,8 +38,6 @@ mention density * corpus size.  Arrow batch size bounds UDF memory.
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
 import numpy as np
 import pyarrow as pa
 import pyarrow.compute as pc
@@ -43,6 +47,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..functions import rules
+from .arrow_groups import map_batches
 
 MENTION_SCHEMA = T.StructType(
     [
@@ -62,18 +67,60 @@ MENTION_SCHEMA_DDL = (
 )
 
 
-_MFG_L = pa.array(rules.MFG_LABEL_TOKENS)
-_EXP_L = pa.array(rules.EXP_LABEL_TOKENS)
-_WT_L = pa.array(rules.WEIGHT_LABEL_TOKENS)
-_BRANDS = pa.array(sorted(rules.BRAND_GAZETTEER))
-_NAMES = pa.array(sorted(rules.NAME_GAZETTEER))
+# Label tokens (lowercased) and gazetteer entries, each probed with one
+# ``index_in``; the match index maps to a label code (index -1, no match,
+# reads the trailing 0).  Codes index _LABELS, 0 = OTHER.
+_LABEL_TOKENS = pa.array(
+    rules.MFG_LABEL_TOKENS + rules.EXP_LABEL_TOKENS + rules.WEIGHT_LABEL_TOKENS
+)
+_LABEL_CODE = np.array(
+    [1] * len(rules.MFG_LABEL_TOKENS)
+    + [2] * len(rules.EXP_LABEL_TOKENS)
+    + [3] * len(rules.WEIGHT_LABEL_TOKENS)
+    + [0]
+)
+_GAZETTEER = pa.array(sorted(rules.BRAND_GAZETTEER) + sorted(rules.NAME_GAZETTEER))
+_GAZETTEER_CODE = np.array(
+    [7] * len(rules.BRAND_GAZETTEER) + [8] * len(rules.NAME_GAZETTEER) + [0]
+)
+# a date's code by the previous token's label code: after MFG_LABEL -> MFG,
+# after EXP_LABEL -> EXP, otherwise OTHER
+_DATE_CODE = np.array([0, 4, 5, 0])
 # RE2 patterns (pyarrow match_substring_regex); identical text to the
-# Python/SQL forms in rules.py
+# Python/SQL forms in rules.py.  Both start with ``^[0-9]``, so they run
+# only on tokens whose first byte is an ASCII digit.
 _DATE_PAT = rules.DATE_RE_SQL
 _WEIGHT_PAT = rules.WEIGHT_RE_SQL
 _LABELS = pa.array(
     [rules.OTHER, "MFG_LABEL", "EXP_LABEL", "WEIGHT_LABEL", "MFG", "EXP", "WEIGHT", "BRAND", "NAME"]
 )
+
+
+def _match_code(tokens: pa.Array, value_set: pa.Array, codes: np.ndarray) -> np.ndarray:
+    """``codes[i]`` where a token equals ``value_set[i]``, else ``codes[-1]``."""
+    idx = pc.fill_null(pc.index_in(tokens, value_set=value_set), -1)
+    return codes[idx.to_numpy()]
+
+
+def _digit_led(tokens: pa.StringArray) -> np.ndarray:
+    """Indices of the tokens whose first byte is an ASCII digit, read from
+    the offsets and data buffers of a string array made by a compute kernel
+    (which always allocates the data buffer)."""
+    _, offsets, data = tokens.buffers()
+    off = np.frombuffer(offsets, np.int32, len(tokens) + 1, tokens.offset * 4)
+    nonempty = np.flatnonzero(off[1:] > off[:-1])
+    first = np.frombuffer(data, np.uint8)[off[nonempty]]
+    return nonempty[(first >= ord("0")) & (first <= ord("9"))]
+
+
+def _regex_hits(tokens: pa.Array, at: np.ndarray, pattern: str) -> np.ndarray:
+    """``match_substring_regex(tokens, pattern)`` evaluated only at ``at``
+    and scattered back over all tokens (False elsewhere)."""
+    hit = np.zeros(len(tokens), dtype=bool)
+    hit[at] = pc.match_substring_regex(pc.take(tokens, at), pattern).to_numpy(
+        zero_copy_only=False
+    )
+    return hit
 
 
 def _classify_batch(batch: pa.RecordBatch) -> pa.RecordBatch:
@@ -82,8 +129,11 @@ def _classify_batch(batch: pa.RecordBatch) -> pa.RecordBatch:
 
     Tokenization, lowering, set membership and regex all run in pyarrow
     compute kernels (C++); the segment arithmetic for positions/spans is
-    numpy.  Outputs are ``pc.take`` gathers over the input columns and the
-    label table — no Python loop over rows or tokens, no pandas.
+    numpy.  Each token is probed once against the 12 label tokens and once
+    against the gazetteers; the date and weight regexes run only on
+    digit-led tokens.  Outputs are ``pc.take`` gathers over the input
+    columns and the label table — no Python loop over rows or tokens, no
+    pandas.
     """
     # null text = no content (never the string 'None')
     texts = pc.fill_null(batch.column("text").cast(pa.string()), "")
@@ -103,33 +153,23 @@ def _classify_batch(batch: pa.RecordBatch) -> pa.RecordBatch:
     span_start = c - base - L
 
     low = pc.utf8_lower(flat)
-    is_mfg_l = pc.is_in(low, value_set=_MFG_L).to_numpy(zero_copy_only=False)
-    is_exp_l = pc.is_in(low, value_set=_EXP_L).to_numpy(zero_copy_only=False)
-    is_wt_l = pc.is_in(low, value_set=_WT_L).to_numpy(zero_copy_only=False)
-    is_date = pc.match_substring_regex(flat, _DATE_PAT).to_numpy(zero_copy_only=False)
-    is_weight = pc.match_substring_regex(low, _WEIGHT_PAT).to_numpy(zero_copy_only=False)
-    is_brand = pc.is_in(flat, value_set=_BRANDS).to_numpy(zero_copy_only=False)
-    is_name = pc.is_in(flat, value_set=_NAMES).to_numpy(zero_copy_only=False)
+    label = _match_code(low, _LABEL_TOKENS, _LABEL_CODE)
+    digit_led = _digit_led(flat)
+    is_date = _regex_hits(flat, digit_led, _DATE_PAT)
+    is_weight = _regex_hits(low, digit_led, _WEIGHT_PAT)
 
-    # previous token's label-membership, shifted within each turn
-    prev_mfg = np.concatenate(([False], is_mfg_l[:-1])) & (pos > 0)
-    prev_exp = np.concatenate(([False], is_exp_l[:-1])) & (pos > 0)
+    # previous token's label code, shifted within each turn
+    prev_label = np.concatenate(([0], label[:-1])) * (pos > 0)
 
-    # first match wins; codes index _LABELS, 0 = OTHER
-    code = np.select(
-        [
-            is_mfg_l,
-            is_exp_l,
-            is_wt_l,
-            is_date & prev_mfg,
-            is_date & prev_exp,
-            is_date,  # unanchored date -> OTHER
-            is_weight,
-            is_brand,
-            is_name,
-        ],
-        [1, 2, 3, 4, 5, 0, 6, 7, 8],
-        default=0,
+    # first match wins: label token, date (anchored or OTHER), weight, gazetteer
+    code = np.where(
+        label > 0,
+        label,
+        np.where(
+            is_date,
+            _DATE_CODE[prev_label],
+            np.where(is_weight, 6, _match_code(flat, _GAZETTEER, _GAZETTEER_CODE)),
+        ),
     )
     keep = np.flatnonzero(code)
     row = np.repeat(np.arange(batch.num_rows), counts)[keep]
@@ -150,12 +190,8 @@ def _classify_batch(batch: pa.RecordBatch) -> pa.RecordBatch:
 def detect_mentions_arrow(transcripts: DataFrame) -> DataFrame:
     """Mention detection as a ``mapInArrow`` over Arrow record batches."""
 
-    def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        for batch in batches:
-            yield _classify_batch(batch)
-
-    return transcripts.select("conv_id", "turn_idx", "text").mapInArrow(
-        run, schema=MENTION_SCHEMA_DDL
+    return map_batches(
+        transcripts.select("conv_id", "turn_idx", "text"), _classify_batch, MENTION_SCHEMA_DDL
     )
 
 

@@ -17,14 +17,14 @@ chunk so metadata-only queries never read the bytes (column pruning).
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
 import numpy as np
 import pyarrow as pa
 import pyarrow.compute as pc
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from .arrow_groups import map_batches
 
 FRAME_STEP = 1000  # fake: one "frame" per 1000 payload bytes
 
@@ -46,6 +46,21 @@ def _fake_decode(n_bytes: np.ndarray) -> dict[str, np.ndarray]:
     }
 
 
+def _decode_batch(batch: pa.RecordBatch) -> pa.RecordBatch:
+    """One Arrow batch of (doc_id, payload) -> the typed metadata."""
+    n = pc.binary_length(batch.column("payload")).cast(pa.int64()).to_numpy()
+    meta = _fake_decode(n)
+    return pa.RecordBatch.from_pydict(
+        {
+            "doc_id": batch.column("doc_id").cast(pa.int64()),
+            "n_bytes": n,
+            "width": meta["width"],
+            "height": meta["height"],
+            "n_frames": meta["n_frames"],
+        }
+    )
+
+
 MEDIA_META_SCHEMA = (
     "doc_id bigint, n_bytes bigint, width bigint, height bigint, n_frames bigint"
 )
@@ -56,21 +71,7 @@ def mm_decode_metadata(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select("doc_id", "text")
     payloads = with_payload(docs).select("doc_id", "payload")
 
-    def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        for batch in batches:
-            n = pc.binary_length(batch.column("payload")).cast(pa.int64()).to_numpy()
-            meta = _fake_decode(n)
-            yield pa.RecordBatch.from_pydict(
-                {
-                    "doc_id": batch.column("doc_id").cast(pa.int64()),
-                    "n_bytes": n,
-                    "width": meta["width"],
-                    "height": meta["height"],
-                    "n_frames": meta["n_frames"],
-                }
-            )
-
-    return payloads.mapInArrow(run, schema=MEDIA_META_SCHEMA)
+    return map_batches(payloads, _decode_batch, MEDIA_META_SCHEMA)
 
 
 # DuckDB twin of the deterministic fake — proves the Spark-side plumbing

@@ -3,8 +3,12 @@
 Arrow execution is mandatory (every Python crossing is a pandas/Arrow UDF —
 the north rule forbids per-row Python), AQE is on for runtime re-planning
 (skew joins, coalescing the shrinking edge lists of the connected-components
-loop), and shuffle partitions default to a local-mode-friendly count that
-callers override for cluster runs.
+loop), ANSI mode is pinned on (integer overflow fails the query instead of
+wrapping; Spark 4's default, stated so that a cluster default cannot turn it
+off), and shuffle partitions default to a local-mode-friendly count that
+callers override for cluster runs.  The Python workers' per-task import
+cost is handled where the crossings are made (``operators/arrow_groups``),
+not by a session option.
 """
 
 from __future__ import annotations
@@ -71,6 +75,9 @@ def get_spark(
         )
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
+        # ANSI mode (Spark 4's default, pinned): integer overflow and invalid
+        # casts fail the query instead of wrapping or yielding null.
+        .config("spark.sql.ansi.enabled", "true")
         # Deterministic session timezone so ts-derived values hash stably.
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "8g"))

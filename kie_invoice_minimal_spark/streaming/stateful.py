@@ -25,6 +25,7 @@ import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
+from ..operators.arrow_groups import worker_setup
 from ..operators.mention_detect import _classify_batch
 
 STATE_SCHEMA = "n_turns bigint, n_mentions bigint, max_turn bigint"
@@ -38,6 +39,7 @@ def _update(
     pdfs: Iterable[pd.DataFrame],
     state: GroupState,
 ) -> Iterator[pd.DataFrame]:
+    worker_setup()
     n_turns, n_mentions, max_turn = (
         state.get if state.exists else (0, 0, -1)
     )

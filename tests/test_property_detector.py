@@ -18,6 +18,7 @@ TOKENS = st.sampled_from(
         "1/2023", "2/12/2025", "13/2024", "500g", "2kg", "1.5l", "0oz",
         "VinaMilk", "vinamilk", "Nestlé", "Sữa-Tươi", "xin", "chao",
         "", " ", "g", "kg", "12/", "/2024", "1//2024", "NSX::",
+        "500G", "2KG", "1.5L", "12abc", "1/2024x", "x1/2024", "١٢/2025",
     ]
 )
 TEXTS = st.lists(TOKENS, min_size=0, max_size=12).map(" ".join)
@@ -50,6 +51,16 @@ def test_batch_classifier_matches_oracle(texts):
         for m in detect_mentions(f"c{i}", i, t)
     )
     assert got == want
+
+
+def test_value_patterns_are_digit_led():
+    """The Arrow detector runs the date and weight regexes only on tokens
+    whose first byte is an ASCII digit; that is sound only while both
+    patterns start with ``^[0-9]``."""
+    from kie_invoice_minimal_spark.functions import rules
+
+    assert rules.DATE_RE_SQL.startswith("^[0-9]")
+    assert rules.WEIGHT_RE_SQL.startswith("^[0-9]")
 
 
 @settings(max_examples=200, deadline=None)
