@@ -1,12 +1,13 @@
 #!/usr/bin/env python
-"""Round-9 optimization measurement harness (bench.py is FROZEN — this is
-the guide §1.4 noop-sink isolation tool it points at).
+"""Per-query measurement harness: the noop-sink isolation tool bench.py
+points at for per-query A/Bs.
 
 Times a SUBSET of ``__spark_entry__.queries()`` with the exact bench.py
 methodology (same session config, same noop sink, min-of-k over fresh
 fn() DataFrames) so per-query A/Bs are comparable to the driver bench,
-and optionally dumps ``.explain("formatted")`` per query for the
-plans/r09 before/after files.
+and optionally dumps ``.explain("formatted")`` per query for before/after
+plan diffs.  Names must be ``queries()`` keys; an unknown name exits
+before the Spark session starts.
 
 Usage:
   python bench_extra.py q1 q2 ...            # time queries, min-of-k
@@ -39,8 +40,11 @@ def plan_of(df) -> str:
 
 
 def main() -> None:
+    qs = entrymod.queries()
     ap = argparse.ArgumentParser()
-    ap.add_argument("names", nargs="+")
+    # every name is checked before the session starts, so a typo cannot
+    # abort a run after the names before it were already timed
+    ap.add_argument("names", nargs="+", choices=qs, metavar="query")
     ap.add_argument("--plans", default=None, help="directory for explain dumps")
     ap.add_argument("--repeats", type=int, default=2)
     ap.add_argument("--suffix", default="", help="plan filename suffix, e.g. _before")
@@ -55,7 +59,6 @@ def main() -> None:
     )
     spark.sparkContext.setLogLevel("ERROR")
 
-    qs = entrymod.queries()
     timings: dict[str, float] = {}
     samples: dict[str, list[float]] = {}
     for name in args.names:

@@ -909,20 +909,23 @@ def kg_canonical_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def kg_canonical_pagerank_staged(spark, sf_dir: str, root: str) -> DataFrame:
-    """Canonical-entity PageRank derived from the STAGED EL snapshots —
-    the production path for the most expensive r4 query (r4 verdict item
-    5): the cold kg_canonical_pagerank pays the blocking→scorer→CC prefix
-    TWICE (pagerank()'s two up-front localCheckpoints — nodes and the
-    edge×wout table — each re-execute the un-materialized EL lineage),
-    while this variant materializes mentions + entity_map ONCE via
-    CheckpointedPipeline and iterates over parquet snapshot reads.  The
-    transcripts snapshot is skipped (snapshot_transcripts=False): the
-    mention stream is this consumer's resume point, so the largest
-    snapshot write is not paid.  Same oracle twin as the cold query —
-    the gate certifies staged == cold, mirroring el_pipeline_staged."""
-    from ..plans.entity_linking import entity_resolved_mentions, staged_snapshots
+    """Canonical-entity PageRank derived from the mentions + entity_map
+    snapshots under ``root``.  The cold kg_canonical_pagerank pays the
+    blocking→scorer→CC prefix in its own lineage; here it is materialized
+    once and PageRank iterates over parquet snapshot reads, and a call on
+    a completed root resumes from them.  Transcripts are not snapshotted:
+    the mention stream is this consumer's resume point, so the largest
+    snapshot write is not paid.  Same oracle twin as the cold query."""
+    from ..plans.entity_linking import entity_resolved_mentions
+    from ..sources.checkpoints import kg_pipeline
+    from ..sources.transcripts import transcripts_from_documents
 
-    done = staged_snapshots(spark, sf_dir, root, snapshot_transcripts=False)
+    done = kg_pipeline(
+        spark,
+        root,
+        lambda sp: transcripts_from_documents(sp, sf_dir),
+        ("mentions", "entity_map"),
+    ).run()
     m = done["mentions"].drop("mention_id")
     emap = done["entity_map"]
     resolved = entity_resolved_mentions(
@@ -931,89 +934,44 @@ def kg_canonical_pagerank_staged(spark, sf_dir: str, root: str) -> DataFrame:
     return pagerank(comention_edges(resolved.drop("canonical_surface")))
 
 
-def kg_canonical_pagerank_derive(spark, sf_dir: str, root: str) -> DataFrame:
-    """Canonical PageRank from EXISTING EL snapshots — the MARGINAL staged
-    path (r5 verdict item 2): kg_canonical_pagerank_staged wipes and
-    rebuilds its snapshot root every invocation, so its timing measures
-    build + derive and buys nothing over cold; the production scenario a
-    nightly analytics job actually hits is "snapshots already exist, pay
-    only the derivation".  This entry's root is PERSISTENT (not wiped):
-    CheckpointedPipeline.run(resume=True) loads completed mentions +
-    entity_map snapshots instead of recomputing, so after the first build
-    (bench warm-up repeat; min-of-k reports the steady state) each call
-    costs two parquet reads + the pagerank lineage — the ≤ 0.5×-of-cold
-    number BENCH_SCALING.md records.  Same oracle twin as the cold query:
-    the gate certifies derive-from-snapshots == cold."""
-    return kg_canonical_pagerank_staged(spark, sf_dir, root)
-
-
 # --- staged graph-family prefix (one capped table + one probe per run) --------------
 
-def graph_snapshots(spark, sf_dir: str, root: str) -> dict[str, DataFrame]:
-    """capped_surfaces + edges snapshots from ONE CheckpointedPipeline run
-    — the staged-snapshot pattern applied one stage EARLIER than
-    staged_snapshots (r7 verdict item 1): every plain-graph entry
-    (pagerank, triangles, k-hop, common neighbors, export, degree
-    distribution, k-core, edge lift, communities) starts from
-    capped_conv_surfaces, and each COLD entry pays its own eager cnt
-    localCheckpoint plus its own scalar fan-out probe — 13 near-identical
-    probe jobs and 13 detector-lineage materializations per suite run; at
-    100× each probe is a full pass over a conversations×surfaces table.
-    Staged, ONE probe and ONE materialization serve every consumer: the
-    capped (conv_id, surface) table is snapshotted with the probe
-    RESOLVED AT BUILD TIME (the parquet IS the post-cap table, so loads
-    re-probe nothing), and the pairing edges are snapshotted beside it
-    for the consumers that start from edges.  Resume is manifest-gated
-    (engine + stage-fn fingerprints, sources/checkpoints.py), so a stale
-    root can never feed the family.  Reference analog: S8 stage
-    materialization, api.py:34,43."""
-    from ..sources.checkpoints import CheckpointedPipeline, Stage
+def kg_entity_pagerank_staged(spark, sf_dir: str, root: str) -> DataFrame:
+    """Entity PageRank from the capped_surfaces + edges snapshots under
+    ``root`` (built on the first call, resumed on later ones).  Same oracle
+    twin as the cold kg_entity_pagerank."""
+    from ..sources.checkpoints import kg_pipeline
     from ..sources.transcripts import transcripts_from_documents
-    from .mention_detect import detect_mentions_arrow
 
-    def s_capped_surfaces(sp, _up):
-        m = detect_mentions_arrow(transcripts_from_documents(sp, sf_dir))
-        return capped_conv_surfaces(m)
-
-    def s_edges(sp, up):
-        return _pair_edges(up["capped_surfaces"])
-
-    return CheckpointedPipeline(
+    done = kg_pipeline(
         spark,
         root,
-        [Stage("capped_surfaces", s_capped_surfaces), Stage("edges", s_edges)],
+        lambda sp: transcripts_from_documents(sp, sf_dir),
+        ("capped_surfaces", "edges"),
     ).run()
-
-
-def kg_entity_pagerank_staged(spark, sf_dir: str, root: str) -> DataFrame:
-    """Entity PageRank from the staged graph snapshots — same oracle twin
-    as the cold kg_entity_pagerank (the gate certifies staged == cold);
-    the entry wrapper wipes the root per invocation so the timing is the
-    self-contained build+derive cost."""
-    return pagerank(graph_snapshots(spark, sf_dir, root)["edges"])
-
-
-def kg_entity_pagerank_derive(spark, sf_dir: str, root: str) -> DataFrame:
-    """The MARGINAL staged path: PageRank from EXISTING graph snapshots
-    (persistent wipe=False root in the entry wrapper; the first call
-    builds, every later one resumes) — what a nightly graph-analytics
-    job over maintained snapshots actually pays.  Same oracle twin as
-    the cold query: the gate certifies derive-from-snapshots == cold."""
-    return kg_entity_pagerank_staged(spark, sf_dir, root)
+    return pagerank(done["edges"])
 
 
 def graph_family_staged(spark, sf_dir: str, root: str) -> dict[str, DataFrame]:
-    """The whole plain-graph family derived from ONE graph_snapshots run
-    — the suite's probe jobs collapse to 1 on this path (pinned by
-    test_r8_graph_stage.py, which counts CAP_PATH_STATS probes across
-    the full family build).  Includes the three r8 training-feed samplers
-    (neighbor/negative/walks): in production the GNN feed derives from the
-    SAME maintained edge snapshots as the analytics, so a training run
-    re-probes and re-materializes nothing.  Canonical-pagerank entries
-    are not here: their capped table is built over ALIAS-RESOLVED
-    mentions, a different upstream (they stage via staged_snapshots
-    instead)."""
-    done = graph_snapshots(spark, sf_dir, root)
+    """The whole plain-graph family derived from one capped_surfaces +
+    edges snapshot build.  Every cold family entry runs its own detector
+    lineage, capped-table checkpoint and fan-out probe; staged, one probe
+    and one materialization serve every consumer, because the snapshot is
+    the post-cap table and a resume re-probes nothing (pinned by
+    test_r8_graph_stage.py, which counts CAP_PATH_STATS probes).  The
+    training-feed samplers (neighbor/negative/walks) derive from the same
+    edge snapshot as the analytics.  Canonical PageRank is not here: its
+    capped table is built over alias-resolved mentions, a different
+    upstream (kg_canonical_pagerank_staged)."""
+    from ..sources.checkpoints import kg_pipeline
+    from ..sources.transcripts import transcripts_from_documents
+
+    done = kg_pipeline(
+        spark,
+        root,
+        lambda sp: transcripts_from_documents(sp, sf_dir),
+        ("capped_surfaces", "edges"),
+    ).run()
     cs, e = done["capped_surfaces"], done["edges"]
     le = lifted_edges_from_surfaces(cs)
     return {

@@ -4,8 +4,8 @@ The reference checkpoints model state to ``.pth`` and resumes with a
 filtered load (``scripts/train_kie.py:256-308``, ``kie_utils.py:38-63``).
 The engine's analog is *stage materialization*: every pipeline stage writes
 its output table as a parquet snapshot plus a ``pipeline_state`` record
-(stage name, status, row count, per-partition lineage counters, input
-fingerprint).  A restarted run loads completed snapshots instead of
+(stage name, status, row count, per-partition lineage counters, code
+fingerprints).  A restarted run loads completed snapshots instead of
 recomputing — kill the job between stages and the rerun produces identical
 outputs (BASELINE.md resumability row).
 
@@ -55,26 +55,16 @@ _CODE_FP: list[str] = []  # per-process cache
 def engine_code_fingerprint() -> str:
     """Deterministic md5 over the engine package's source bytes (sorted
     relpath + contents of every .py under kie_invoice_minimal_spark/) —
-    the snapshot MANIFEST key (r6 ADVICE item 1): a resume must never
-    silently load snapshots built by a DIFFERENT code version (a stale
-    persistent root, a wipe=False derive path surviving a deploy), because
-    stage semantics may have changed while the parquet looks perfectly
-    healthy.  Computed once per process (~one read of the package
-    source); recorded in every stage state and required to MATCH on
-    resume — a mismatched (or missing, i.e. pre-manifest) fingerprint
-    makes the stage read as incomplete, so it recomputes under the
-    current code instead of resuming stale bytes.
+    the snapshot MANIFEST key: a resume must never silently load
+    snapshots built by a DIFFERENT code version (a stale persistent root
+    surviving a deploy), because stage semantics may have changed while
+    the parquet looks perfectly healthy.  Computed once per process;
+    recorded in every stage state and required to MATCH on resume — a
+    mismatched (or missing) fingerprint makes the stage read as
+    incomplete, so it recomputes under the current code.
 
-    SCOPE (r7 ADVICE item 2): the fingerprint covers the ENGINE PACKAGE
-    only (every .py under kie_invoice_minimal_spark/).  A stage callable
-    defined OUTSIDE the package (user code, __spark_entry__.py) is
-    additionally hashed per-stage at write time (its inspect.getsource
-    bytes ride the stage state record — see _write_stage's stage_fn_
-    fingerprint), so an out-of-package stage edit also invalidates its
-    snapshot on resume; stages whose source inspect cannot see (REPL
-    lambdas, exec'd code) record a non-reusable per-process marker and
-    therefore never resume across processes — conservative, never
-    stale."""
+    Scope: the engine package only.  A stage callable defined outside it
+    is hashed separately (stage_fn_fingerprint)."""
     if _CODE_FP:
         return _CODE_FP[0]
     import hashlib
@@ -105,11 +95,9 @@ def engine_code_fingerprint() -> str:
         lower = pkg_root.lower()
         hashed_archive = False
         for ext in (".zip", ".egg"):
-            # r7 ADVICE item 3: a path COMPONENT merely containing
-            # ".zip"/".egg" is not an archive — without the isfile guard
-            # open() raises IsADirectoryError/FileNotFoundError here and
-            # crashes fingerprint computation instead of falling through
-            # to the never-reusable uuid branch
+            # a path COMPONENT merely containing ".zip"/".egg" is not an
+            # archive: skip it and fall through to the never-reusable
+            # uuid branch instead of failing in open()
             if ext in lower:
                 archive = pkg_root[: lower.index(ext) + len(ext)]
                 if not os.path.isfile(archive):
@@ -132,19 +120,13 @@ _PROC_MARKER: list[str] = []  # per-process marker for uninspectable stage fns
 
 def stage_fn_fingerprint(fn) -> str:
     """md5 of a stage callable's SOURCE TEXT — the per-stage half of the
-    resume manifest (r7 ADVICE item 2): engine_code_fingerprint covers
-    only the package's .py files, but CheckpointedPipeline accepts
-    arbitrary callables, so a stage defined in user code
-    (__spark_entry__.py, a notebook module) could change across a deploy
-    while the engine fingerprint stayed put — and its stale snapshot
-    would silently resume.  Hashing inspect.getsource closes that hole
-    for every file-backed OUT-OF-PACKAGE callable; a callable defined
-    INSIDE the package returns the constant "in-package" (every package
-    source byte already moves engine_code_fingerprint, and hashing the
-    same bytes twice would add nothing); callables whose source inspect
-    cannot recover (REPL lambdas, exec'd code) get a process-stable but
-    never-persistent-across-processes marker, so they recompute on every
-    new process rather than ever resuming stale."""
+    resume manifest: CheckpointedPipeline accepts arbitrary callables, and
+    one defined outside the package could change across a deploy while
+    engine_code_fingerprint stayed put.  A callable defined INSIDE the
+    package returns the constant "in-package" (its bytes already move
+    engine_code_fingerprint); one whose source inspect cannot recover
+    (REPL lambdas, exec'd code) gets a per-process marker, so it
+    recomputes in every new process rather than ever resuming stale."""
     import hashlib
     import inspect
 
@@ -277,19 +259,14 @@ class CheckpointedPipeline:
             "n_partitions": len(lineage),
             "partition_rows": lineage,
             # per-stage wall time — the reference's @timer instrumentation
-            # (backend_utils.py:30-40) lifted into the state record.
-            # Split (r2 ADVICE): wall_write_sec is the stage's compute+write
-            # job alone; wall_verify_sec is the footer read + lineage
-            # check that resume-proofs it; wall_sec stays as the total for
-            # backward compatibility with existing pipeline_state consumers.
+            # (backend_utils.py:30-40) lifted into the state record:
+            # wall_write_sec is the compute+write job, wall_verify_sec the
+            # footer read + lineage check, wall_sec their total.
             "wall_write_sec": round(t_written - t_start, 3),
             "wall_verify_sec": round(time.time() - t_written, 3),
             "wall_sec": round(time.time() - t_start, 3),
             "completed_at": time.strftime("%Y-%m-%dT%H:%M:%SZ", time.gmtime()),
-            # resume manifest: stale-code snapshots must not resume —
-            # engine package hash plus this stage callable's source hash
-            # (out-of-package stages change without moving the package
-            # fingerprint; r7 ADVICE item 2)
+            # resume manifest: stale-code snapshots must not resume
             "code_fingerprint": engine_code_fingerprint(),
             "stage_fn_fingerprint": stage_fn_fingerprint(self._stage_fn(name)),
         }
@@ -334,38 +311,60 @@ def kg_pipeline(
     spark: SparkSession,
     root: str,
     transcripts_provider: Callable[[SparkSession], DataFrame],
+    stages: tuple[str, ...] = ("transcripts", "mentions", "entity_map", "triples"),
 ) -> CheckpointedPipeline:
-    """The flagship staged pipeline: transcripts -> mentions -> entity_map ->
-    triples (conversation triples ∪ alias triples)."""
+    """The one stage graph every staged path runs:
+
+        transcripts -> mentions -> entity_map -> triples
+                       mentions -> capped_surfaces -> edges
+
+    ``stages`` names the stages to snapshot; the default is the flagship
+    chain, whose triples are conversation triples ∪ alias triples.  An
+    upstream stage that is not named is computed inline by the named stage
+    that needs it (once per stage run), so a consumer whose resume point is
+    the mention stream or the capped table does not pay for writing the
+    turn-level table.  An unknown stage name raises ``ValueError``."""
+    from ..operators.graph_analytics import _pair_edges, capped_conv_surfaces
     from ..operators.mention_detect import detect_mentions_arrow, with_mention_id
     from ..operators.triples import materialize_triples
     from ..plans.entity_linking import alias_triples, link_entities
 
-    def s_transcripts(sp, _):
-        return transcripts_provider(sp)
-
-    def s_mentions(sp, up):
-        # persisted mentions carry the stable 64-bit id (join-stable lineage
-        # key across resumes)
-        return with_mention_id(detect_mentions_arrow(up["transcripts"]))
-
-    def s_entity_map(sp, up):
-        return link_entities(up["mentions"])
-
-    def s_triples(sp, up):
-        conv = materialize_triples(up["mentions"])
+    def s_triples(up):
         alias = alias_triples(up["entity_map"]).withColumn(
             "conv_id", F.lit(None).cast("string")
         )
-        return conv.unionByName(alias)
+        return materialize_triples(up["mentions"]).unionByName(alias)
+
+    # stage -> (upstream stages, fn({upstream: DataFrame})), in topological
+    # order.  Persisted mentions carry the stable 64-bit id (join-stable
+    # lineage key across resumes).
+    graph = {
+        "transcripts": ((), lambda up: transcripts_provider(spark)),
+        "mentions": (
+            ("transcripts",),
+            lambda up: with_mention_id(detect_mentions_arrow(up["transcripts"])),
+        ),
+        "entity_map": (("mentions",), lambda up: link_entities(up["mentions"])),
+        "triples": (("mentions", "entity_map"), s_triples),
+        "capped_surfaces": (("mentions",), lambda up: capped_conv_surfaces(up["mentions"])),
+        "edges": (("capped_surfaces",), lambda up: _pair_edges(up["capped_surfaces"])),
+    }
+    unknown = [s for s in stages if s not in graph]
+    if unknown:
+        raise ValueError(f"unknown stages {unknown}; the stage graph has {list(graph)}")
+
+    def resolve(up: dict[str, DataFrame], name: str) -> DataFrame:
+        if name not in up:
+            deps, fn = graph[name]
+            up[name] = fn({d: resolve(up, d) for d in deps})
+        return up[name]
 
     return CheckpointedPipeline(
         spark,
         root,
         [
-            Stage("transcripts", s_transcripts),
-            Stage("mentions", s_mentions),
-            Stage("entity_map", s_entity_map),
-            Stage("triples", s_triples),
+            Stage(name, lambda _sp, done, name=name: resolve(dict(done), name))
+            for name in graph
+            if name in stages
         ],
     )

@@ -12,9 +12,9 @@ Cluster usage (the north rule's deployment shape):
 Sandbox usage (no cluster): --synth N generates N deterministic turns
 instead of reading --input; --master local[K] pins parallelism.
 
-Prints one JSON line with wall time, turns/sec and stage metrics — the
-scaling harness (scripts/scaling_bench.py) invokes this at two parallelism
-levels and derives the efficiency figure.
+Prints one JSON line with wall time, turns/sec and stage metrics; running
+it at two parallelism levels (``--master local[N]`` / ``local[4N]``) gives
+the scaling efficiency figure recorded in BENCH_SCALING.md.
 """
 
 from __future__ import annotations

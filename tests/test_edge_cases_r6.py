@@ -83,8 +83,8 @@ def test_markov_single_event_user_emits_nothing(spark, tmp_path):
 
 def test_derive_resumes_from_existing_snapshots_and_equals_cold(spark, tmp_path):
     """The marginal staged path's RESUME branch, exercised directly (the
-    registry gate builds a fresh pid-suffixed root per process, so its
-    green row certifies only the first-build path): a second derive call
+    registry gate builds a fresh root per process, so its green row
+    certifies only the first-build path): a second staged call
     on the same persistent root must (a) load the existing mentions +
     entity_map snapshots without rewriting a single data file, and
     (b) still equal both the first call and the cold query."""
@@ -92,21 +92,21 @@ def test_derive_resumes_from_existing_snapshots_and_equals_cold(spark, tmp_path)
 
     from kie_invoice_minimal_spark.operators.graph_analytics import (
         kg_canonical_pagerank,
-        kg_canonical_pagerank_derive,
+        kg_canonical_pagerank_staged,
     )
 
     sf = "/root/testdata/sf0.001"
     root = str(tmp_path / "derive_root")
 
     first = sorted(
-        tuple(r) for r in kg_canonical_pagerank_derive(spark, sf, root).collect()
+        tuple(r) for r in kg_canonical_pagerank_staged(spark, sf, root).collect()
     )
     data_files = sorted(glob.glob(f"{root}/**/*.parquet", recursive=True))
     assert data_files, "first call must materialize snapshots"
     mtimes = {p: os.path.getmtime(p) for p in data_files}
 
     second = sorted(
-        tuple(r) for r in kg_canonical_pagerank_derive(spark, sf, root).collect()
+        tuple(r) for r in kg_canonical_pagerank_staged(spark, sf, root).collect()
     )
     assert second == first
     # resume proof: the snapshot data files were READ, not rebuilt

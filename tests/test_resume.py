@@ -342,3 +342,28 @@ def test_observation_wait_is_bounded(spark, monkeypatch):
     ran = Observation()
     spark.range(3).observe(ran, _F.count(_F.lit(1)).alias("n")).collect()
     assert session.observation_get(ran) == {"n": 3}
+
+
+def test_stage_graph_has_one_builder():
+    """kg_pipeline is the only place that declares stages: no other package
+    module constructs a CheckpointedPipeline or a Stage."""
+    import os
+    import re
+
+    import kie_invoice_minimal_spark
+
+    pkg = os.path.dirname(kie_invoice_minimal_spark.__file__)
+    builders = set()
+    for dirpath, _dirs, files in os.walk(pkg):
+        for fn in files:
+            if fn.endswith(".py"):
+                path = os.path.join(dirpath, fn)
+                with open(path) as f:
+                    if re.search(r"\bCheckpointedPipeline\(|\bStage\(", f.read()):
+                        builders.add(os.path.relpath(path, pkg))
+    assert builders == {os.path.join("sources", "checkpoints.py")}
+
+
+def test_unknown_stage_name_raises(spark, tmp_path):
+    with pytest.raises(ValueError, match="bogus"):
+        kg_pipeline(spark, str(tmp_path / "ckpt"), _provider(10), stages=("bogus",))
