@@ -149,13 +149,8 @@ def link_entities(mentions: DataFrame, types: tuple[str, ...] = ("BRAND",)) -> D
 def alias_triples(entity_map: DataFrame) -> DataFrame:
     """(subj=canonical, pred='HAS_ALIAS', obj=variant) rows — the KG's
     entity-alias edges, one per non-canonical variant."""
-    return (
-        entity_map.filter(F.col("surface") != F.col("canonical_surface"))
-        .select(
-            F.col("canonical_surface").alias("subj"),
-            F.lit("HAS_ALIAS").alias("pred"),
-            F.col("surface").alias("obj"),
-        )
+    return entity_map.filter("surface != canonical_surface").selectExpr(
+        "canonical_surface AS subj", "'HAS_ALIAS' AS pred", "surface AS obj"
     )
 
 

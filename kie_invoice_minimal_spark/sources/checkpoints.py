@@ -28,7 +28,8 @@ import json
 import os
 import shutil
 import time
-from collections.abc import Callable
+from collections import ChainMap
+from collections.abc import Callable, Mapping, MutableMapping
 from dataclasses import dataclass
 
 import pyarrow.parquet as pq
@@ -46,7 +47,7 @@ _SPARK_SCHEMA_KEY = b"org.apache.spark.sql.parquet.row.metadata"
 class Stage:
     name: str
     # fn(spark, {upstream_name: DataFrame}) -> DataFrame
-    fn: Callable[[SparkSession, dict[str, DataFrame]], DataFrame]
+    fn: Callable[[SparkSession, Mapping[str, DataFrame]], DataFrame]
 
 
 _CODE_FP: list[str] = []  # per-process cache
@@ -143,6 +144,34 @@ def stage_fn_fingerprint(fn) -> str:
             _PROC_MARKER.append(uuid.uuid4().hex)
         return f"uninspectable-{_PROC_MARKER[0]}"
     return hashlib.md5(src.encode()).hexdigest()
+
+
+class _StageOutputs(Mapping):
+    """Stage name -> output DataFrame, in the order stages were added.  A
+    stage added without a DataFrame is loaded by ``load(name)`` on its
+    first access; ``in`` and iteration never load."""
+
+    def __init__(self, load: Callable[[str], DataFrame]):
+        self._load = load
+        self._dfs: dict[str, DataFrame | None] = {}
+
+    def add(self, name: str, df: DataFrame | None = None) -> None:
+        self._dfs[name] = df
+
+    def __getitem__(self, name: str) -> DataFrame:
+        df = self._dfs[name]
+        if df is None:
+            df = self._dfs[name] = self._load(name)
+        return df
+
+    def __contains__(self, name: object) -> bool:
+        return name in self._dfs
+
+    def __iter__(self):
+        return iter(self._dfs)
+
+    def __len__(self) -> int:
+        return len(self._dfs)
 
 
 class CheckpointedPipeline:
@@ -276,26 +305,34 @@ class CheckpointedPipeline:
         os.replace(tmp, self._state_path(name))  # atomic commit
         return back
 
-    def run(self, resume: bool = True) -> dict[str, DataFrame]:
-        """Execute stages in order, skipping completed ones when resuming."""
-        done: dict[str, DataFrame] = {}
+    def run(self, resume: bool = True) -> Mapping[str, DataFrame]:
+        """Execute stages in order, skipping completed ones when resuming.
+
+        Returns every stage's output, keyed and iterated in stage order.  A
+        stage skipped as complete is loaded on first access, not up front,
+        so a resume reads only the snapshots that a recomputed stage or the
+        caller uses."""
+        done = _StageOutputs(self.load)
         for st in self.stages:
             if resume and self.is_complete(st.name):
-                done[st.name] = self.load(st.name)
+                done.add(st.name)
                 continue
             df = st.fn(self.spark, done)
-            done[st.name] = self._write_stage(st.name, df)
+            done.add(st.name, self._write_stage(st.name, df))
         return done
 
     def invalidate(self, stage: str) -> None:
-        """Drop a stage's snapshot + state (forces recompute downstream of a
-        code/data change)."""
-        p = self._state_path(stage)
-        if os.path.exists(p):
-            os.remove(p)
-        d = self._data_dir(stage)
-        if os.path.exists(d):
-            shutil.rmtree(d)
+        """Drop the snapshot and state of ``stage`` and of every stage after
+        it in stage order, so that a resume recomputes the stage and all it
+        can feed rather than loading outputs built from the dropped one."""
+        names = [st.name for st in self.stages]
+        for name in names[names.index(stage) :]:
+            p = self._state_path(name)
+            if os.path.exists(p):
+                os.remove(p)
+            d = self._data_dir(name)
+            if os.path.exists(d):
+                shutil.rmtree(d)
 
     def metrics(self) -> list[dict]:
         """All stage state records (the pipeline_state table)."""
@@ -316,24 +353,30 @@ def kg_pipeline(
     """The one stage graph every staged path runs:
 
         transcripts -> mentions -> entity_map -> triples
+        transcripts ---------------------------> triples
                        mentions -> capped_surfaces -> edges
 
     ``stages`` names the stages to snapshot; the default is the flagship
-    chain, whose triples are conversation triples ∪ alias triples.  An
-    upstream stage that is not named is computed inline by the named stage
-    that needs it (once per stage run), so a consumer whose resume point is
-    the mention stream or the capped table does not pay for writing the
+    chain.  Its triples are the flagship's conversation triples
+    (``extract_triples_df`` over the transcripts: one shuffle of turns and
+    one Arrow crossing that detects and joins, the same rows as
+    ``materialize_triples`` over the mentions) ∪ the alias triples of the
+    entity map, so a triples-only resume reads the transcripts and
+    entity_map snapshots and never the larger mentions one.  An upstream
+    stage that is not named is computed inline by the named stage that
+    needs it (once per stage run), so a consumer whose resume point is the
+    mention stream or the capped table does not pay for writing the
     turn-level table.  An unknown stage name raises ``ValueError``."""
     from ..operators.graph_analytics import _pair_edges, capped_conv_surfaces
     from ..operators.mention_detect import detect_mentions_arrow, with_mention_id
-    from ..operators.triples import materialize_triples
     from ..plans.entity_linking import alias_triples, link_entities
+    from ..plans.pipeline import extract_triples_df
 
     def s_triples(up):
-        alias = alias_triples(up["entity_map"]).withColumn(
-            "conv_id", F.lit(None).cast("string")
+        alias = alias_triples(up["entity_map"]).selectExpr(
+            "subj", "pred", "obj", "CAST(NULL AS STRING) AS conv_id"
         )
-        return materialize_triples(up["mentions"]).unionByName(alias)
+        return extract_triples_df(up["transcripts"]).union(alias)
 
     # stage -> (upstream stages, fn({upstream: DataFrame})), in topological
     # order.  Persisted mentions carry the stable 64-bit id (join-stable
@@ -345,7 +388,7 @@ def kg_pipeline(
             lambda up: with_mention_id(detect_mentions_arrow(up["transcripts"])),
         ),
         "entity_map": (("mentions",), lambda up: link_entities(up["mentions"])),
-        "triples": (("mentions", "entity_map"), s_triples),
+        "triples": (("transcripts", "entity_map"), s_triples),
         "capped_surfaces": (("mentions",), lambda up: capped_conv_surfaces(up["mentions"])),
         "edges": (("capped_surfaces",), lambda up: _pair_edges(up["capped_surfaces"])),
     }
@@ -353,7 +396,7 @@ def kg_pipeline(
     if unknown:
         raise ValueError(f"unknown stages {unknown}; the stage graph has {list(graph)}")
 
-    def resolve(up: dict[str, DataFrame], name: str) -> DataFrame:
+    def resolve(up: MutableMapping[str, DataFrame], name: str) -> DataFrame:
         if name not in up:
             deps, fn = graph[name]
             up[name] = fn({d: resolve(up, d) for d in deps})
@@ -363,7 +406,9 @@ def kg_pipeline(
         spark,
         root,
         [
-            Stage(name, lambda _sp, done, name=name: resolve(dict(done), name))
+            # inline stages land in the ChainMap's own dict; a completed
+            # stage is read through ``done`` only if a named stage needs it
+            Stage(name, lambda _sp, done, name=name: resolve(ChainMap({}, done), name))
             for name in graph
             if name in stages
         ],

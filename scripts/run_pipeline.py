@@ -54,9 +54,12 @@ def main() -> None:
                          "honest steady-state walls; see BENCH_SCALING.md")
     ap.add_argument("--checkpoint-root",
                     help="run the staged checkpointed pipeline (transcripts -> "
-                         "mentions -> entity_map -> triples) rooted here; "
+                         "mentions -> entity_map; transcripts + entity_map -> "
+                         "triples) rooted here, always on the Arrow engine; "
                          "re-running resumes from completed snapshots")
     args = ap.parse_args()
+    if args.checkpoint_root and args.engine == "native":
+        ap.error("--checkpoint-root runs the Arrow detector; --engine native does not apply")
 
     spark = get_spark(app_name="kg-pipeline", master=args.master)
     spark.sparkContext.setLogLevel("ERROR")

@@ -222,7 +222,7 @@ def _group_jobs(spark, group):
 def test_loads_and_verification_run_no_spark_job(spark, tmp_path, monkeypatch):
     """Snapshot schema and lineage come from the parquet footers: a resume
     after ``invalidate("triples")`` runs Spark jobs only inside the triples
-    write (none for the 3 loads or the verification), and a resume of a
+    write (none for the 2 loads or the verification), and a resume of a
     complete root runs none at all."""
     from pyspark.sql.readwriter import DataFrameWriter
 
@@ -254,6 +254,92 @@ def test_loads_and_verification_run_no_spark_job(spark, tmp_path, monkeypatch):
     assert _group_jobs(spark, "ckpt-complete") == []
     assert _group_jobs(spark, "ckpt-write")
     assert _triples(out) == golden
+
+
+def test_invalidate_cascades_downstream(spark, tmp_path):
+    """Invalidating a stage drops every later stage too: a resume rewrites
+    mentions, entity_map and triples, loads no snapshot built from the
+    dropped mentions, and reproduces a cold build's triples."""
+    root = str(tmp_path / "ckpt_cascade")
+    golden = _triples(kg_pipeline(spark, str(tmp_path / "cold"), _provider(300)).run())
+    kg_pipeline(spark, root, _provider(300)).run()
+    p = kg_pipeline(spark, root, _provider(300))
+    p.invalidate("mentions")
+    assert [p.is_complete(s) for s in ("transcripts", "mentions", "entity_map", "triples")] == [
+        True,
+        False,
+        False,
+        False,
+    ]
+
+    written = []
+    write_stage = p._write_stage
+
+    def spy(name, df):
+        written.append(name)
+        return write_stage(name, df)
+
+    p._write_stage = spy
+    assert _triples(p.run(resume=True)) == golden
+    assert written == ["mentions", "entity_map", "triples"]
+
+
+def test_triples_stage_equals_mention_lineage(spark, tmp_path):
+    """The triples stage (conversation triples straight from the transcripts,
+    plus alias triples) equals materialize_triples over the mentions
+    snapshot plus alias triples, row for row, with turns whose text or
+    conv_id is null in the input."""
+    from collections import Counter
+
+    import pyspark.sql.functions as _F
+
+    from kie_invoice_minimal_spark.operators.triples import materialize_triples
+    from kie_invoice_minimal_spark.plans.entity_linking import alias_triples
+
+    def provider(sp):
+        t = synth_transcripts(sp, 400)
+        few = synth_transcripts(sp, 12)
+        return t.unionByName(few.withColumn("text", _F.lit(None).cast("string"))).unionByName(
+            few.withColumn("conv_id", _F.lit(None).cast("string"))
+        )
+
+    out = kg_pipeline(spark, str(tmp_path / "ckpt_lineage"), provider).run()
+    alias = alias_triples(out["entity_map"]).selectExpr(
+        "subj", "pred", "obj", "CAST(NULL AS STRING) AS conv_id"
+    )
+    want = materialize_triples(out["mentions"]).union(alias)
+    got = Counter(map(tuple, out["triples"].collect()))
+    assert got == Counter(map(tuple, want.collect()))
+    assert any(t[0] is None for t in got)  # the null-conv_id turns made triples
+
+
+def test_resume_loads_only_the_snapshots_it_reads(spark, tmp_path, monkeypatch):
+    """A triples-only resume loads the transcripts and entity_map snapshots
+    and not mentions; the returned mapping still lists every stage in
+    order and loads mentions when it is read."""
+    from kie_invoice_minimal_spark.sources.checkpoints import CheckpointedPipeline
+
+    root = str(tmp_path / "ckpt_lazy")
+    golden = _triples(kg_pipeline(spark, root, _provider(300)).run())
+    p = kg_pipeline(spark, root, _provider(300))
+    p.invalidate("triples")
+
+    loaded = []
+    load = CheckpointedPipeline.load
+
+    def spy(self, stage):
+        loaded.append(stage)
+        return load(self, stage)
+
+    monkeypatch.setattr(CheckpointedPipeline, "load", spy)
+    out = p.run()
+    assert sorted(loaded) == ["entity_map", "transcripts"]
+    assert list(out) == ["transcripts", "mentions", "entity_map", "triples"]
+    assert "mentions" in out and len(out) == 4
+    assert _triples(out) == golden
+    assert "mentions" not in loaded
+    assert out["mentions"].count() > 0
+    assert sorted(loaded) == ["entity_map", "mentions", "transcripts"]
 
 
 def _stage_no_rows(sp, up):
