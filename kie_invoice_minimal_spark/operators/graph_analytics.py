@@ -26,13 +26,15 @@ partial-aggregates before the exchange (no single-reducer hub funnel).
 The upstream lineage is cut ONCE (edge×weight localCheckpoint); the
 fixed-count iterations compile into a single linear plan — see
 pagerank()'s docstring for why this differs from connected_components'
-per-round checkpoints.  Overflow headroom: scores
-sum to ≈ N·SCALE; with SCALE = 10^12 the BIGINT budget caps N·w at ~10^5
-× the per-node average — at larger corpora drop SCALE (precision is
-relative rank, not absolute mass).  The bound is now GUARDED, not just
-documented: per-row raise_error checks ride the iteration projections
-(see pagerank()'s docstring), so an approach to the wrap fails the job
-loudly instead of silently corrupting ranks.
+per-round checkpoints.
+
+Overflow: scores sum to ≈ N·SCALE, and the per-edge product score·w must
+stay below 2^63, so SCALE = 10^12 leaves room for N·w up to ~10^5 × the
+per-node average.  The arithmetic relies on ANSI mode (pinned by
+session.get_spark, checked by session.require_ansi on entry): an int64
+overflow in a multiply or a sum raises ARITHMETIC_OVERFLOW and fails the
+job instead of wrapping into wrong ranks.  Drop PR_SCALE as N·SCALE nears
+9.2e18 (precision is relative rank, not absolute mass).
 """
 
 from __future__ import annotations
@@ -40,14 +42,14 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..session import require_ansi
+
 PR_SCALE = 1_000_000_000_000  # 10^12: integer score units
 PR_DAMP_NUM, PR_DAMP_DEN = 85, 100
 PR_BASE = (PR_DAMP_DEN - PR_DAMP_NUM) * PR_SCALE // PR_DAMP_DEN
 PR_ITERS = 8
 PR_TYPES = ("NAME", "BRAND")
 COMENTION_CAP = 32  # per-conversation distinct-surface cap before pairing
-PR_RANK_PARTS = 8  # fallback range-partition count for the two-phase rank
-#                    (used only when spark.sql.shuffle.partitions is unreadable)
 
 
 # Observability counters for the cap decision (tests pin the probe count
@@ -59,51 +61,37 @@ CAP_PATH_STATS = {"probes": 0, "common": 0, "skew": 0}
 def capped_conv_surfaces(mentions: DataFrame, cap: int = COMENTION_CAP) -> DataFrame:
     """(conv_id, surface): each conversation's distinct NAME/BRAND surfaces
     truncated to its top-``cap`` by (mention count DESC, surface ASC) — the
-    fan-out cap that bounds edge GENERATION (r5 verdict item 3).  Without
-    it the pairing below is quadratic in per-conversation distinct
-    entities: downstream consumers cap adjacency (capped_adjacency), but
-    one hot conversation (an agent loop spamming entity lists) would still
-    emit ~d² pair rows before any of those caps apply.  With the cap a
-    conversation contributes at most cap·(cap−1) edges, so total edge rows
-    are O(conversations · cap²) regardless of input skew.
+    fan-out cap that bounds edge GENERATION.  Without it the pairing below
+    is quadratic in per-conversation distinct entities: downstream
+    consumers cap adjacency (capped_adjacency), but one hot conversation
+    (an agent loop spamming entity lists) would still emit ~d² pair rows
+    before any of those caps apply.  With the cap a conversation
+    contributes at most cap·(cap−1) edges, so total edge rows are
+    O(conversations · cap²) regardless of input skew.
 
     EXACT whenever every conversation has ≤ cap distinct surfaces (true at
     every fixture SF: max observed is 6 vs cap 32); above the cap it keeps
     the most-mentioned surfaces — the same deterministic top-N discipline
-    as capped_adjacency, and the same two-level salted selection so no hot
-    conversation sorts its whole vocabulary in one task (per-(conv, salt
-    cell) top-cap, then top-cap over ≤ salt·cap survivors == global
-    top-cap).  Reference analog: the E2 band prune, kie_utils.py:133-137.
+    as capped_adjacency.  Reference analog: the E2 band prune,
+    kie_utils.py:133-137.
 
-    COMMON-PATH REFUND (r6 verdict item 1): the per-conversation count
-    table is localCheckpoint'd once, and a deterministic scalar pre-agg
-    (max distinct surfaces over any conversation — one tiny job over the
-    checkpoint, NOT a second pass over the mention lineage) decides
-    whether the cap can bind at all.  When every conversation is ≤ cap —
-    always true at fixture SFs and for most of a real corpus — the two
-    top-N window shuffles vanish from the plan entirely and the pairing
-    join reads the checkpoint directly (the r6 version paid both windows
-    unconditionally: kg_entity_pagerank 2.34→3.07 s for a cap that never
-    bound).  The checkpoint also makes the pairing self-join's two
-    branches read one materialization instead of re-running the detector
-    lineage per branch.
+    Common path: the per-conversation count table is localCheckpoint'd
+    once, and one tiny job over the checkpoint (max distinct surfaces over
+    any conversation) decides whether the cap can bind at all.  When no
+    conversation exceeds the cap, the checkpoint is returned as is: no
+    top-N window enters the plan, and the pairing self-join's two branches
+    read one materialization instead of re-running the detector lineage.
 
-    PER-CONVERSATION SKEW ROUTING (r7 verdict item 2): when the probe
-    says max_d > cap, the r7 version pushed EVERY conversation through
-    both top-N windows — one agent-loop conversation re-inflicted the
-    full window cost on the whole corpus.  Now only the >cap
-    conversations take the windows: their conv_ids (derived from the cnt
-    checkpoint by the same count the probe aggregated, localCheckpoint'd
-    because the tiny over-cap id set feeds an anti- and a semi-join) are
-    semi-joined to the window branch while the ≤cap majority bypasses
-    via an anti-join, and the two branches union.  The over-cap id table
-    is small by definition (it is the skew set), so AQE turns both
-    joins into broadcasts at runtime — NOT forced, because an
-    adversarial corpus where every conversation is hot would make a
-    forced broadcast OOM the driver.  Value-equal to the r7 all-convs
-    windows (a top-cap window over a ≤cap conversation keeps every row)
-    and to the oracle's single corpus-wide window; pinned by
-    test_r8_cap_routing.py's planted one-hot fixture."""
+    Skew path: only the over-cap conversations take the windows.  Their
+    conv_ids (a small, localCheckpoint'd set) are semi-joined to a
+    two-level salted top-N — per-(conv, salt cell) top-cap, then top-cap
+    over ≤ salt·cap survivors, equal to the global top-cap — so no hot
+    conversation sorts its whole vocabulary in one task; the rest bypass
+    via an anti-join, and the two branches union.  AQE may broadcast the
+    over-cap set at runtime; it is not forced, because a corpus where every
+    conversation is hot would make a forced broadcast exhaust the driver.
+    Value-equal to the oracle's single corpus-wide window; CAP_PATH_STATS
+    counts the probes and the routing (pinned by test_r8_cap_routing.py)."""
     cnt = (
         mentions.filter(F.col("mention_type").isin(*PR_TYPES))
         .groupBy("conv_id", "surface")
@@ -204,12 +192,7 @@ e AS MATERIALIZED (
 )"""
 
 
-MAX_LONG = (1 << 63) - 1
-
-
-def pagerank(
-    edges: DataFrame, iters: int = PR_ITERS, headroom: int = MAX_LONG
-) -> DataFrame:
+def pagerank(edges: DataFrame, iters: int = PR_ITERS) -> DataFrame:
     """Exact-integer weighted PageRank over (src, dst, w) edges.  Returns
     (surface, pagerank_q, rank): pagerank_q in SCALE units, rank 1 = most
     central (ties broken by surface; the ranking window runs over the
@@ -220,60 +203,40 @@ def pagerank(
     directed list is still defined (nodes = src ∪ dst, a dst-only node is
     a sink; pinned against the DuckDB twin) but is ranked as directed.
 
-    Execution shape (r6 rework): the upstream lineage (scan → detector →
-    optionally the whole EL stage) is materialized PROVABLY once — the
-    edge table itself is localCheckpoint'd first (one extra tiny job over
-    the entity-graph-sized edges; r5's single ew-checkpoint job contained
-    the un-checkpointed prefix on BOTH join sides, so "once" relied on
-    Catalyst's ReusedExchange deduping the two src-shuffles — r5 ADVICE
-    item 3); wout, ew and nodes all derive from that checkpoint.  The
-    fixed-count iterations then compile into ONE Catalyst plan with NO
-    per-round lineage cut: unlike connected_components' unbounded
-    convergence loop (driver-checked each round, where per-round
-    localCheckpoint is the right discipline), a FIXED 8-iteration unroll
-    grows the plan linearly — 2 shuffles per iteration, each reading the
-    checkpointed tables (cheap rescans, no recompute) — and one job
-    executes all 16 stages; AQE right-sizes the tiny entity-graph
-    shuffles stage by stage.  Dropping the 8 eager checkpoint jobs cut
-    the iteration tail from 3.3 s to ~0.9 s on a 442-edge graph at
-    local[32] (pure scheduling overhead, not compute).
+    Execution shape: the upstream lineage (scan → detector → optionally
+    the whole EL stage) is materialized once — the edge table itself is
+    localCheckpoint'd first, and wout, ew and nodes all derive from that
+    checkpoint, so neither join side re-runs the prefix.  The fixed-count
+    iterations then compile into ONE Catalyst plan with NO per-round
+    lineage cut: unlike connected_components' unbounded convergence loop
+    (driver-checked each round, where a per-round localCheckpoint is the
+    right discipline), a FIXED 8-iteration unroll grows the plan linearly
+    — 2 shuffles per iteration, each reading the checkpointed tables
+    (cheap rescans, no recompute) — and one job executes all 16 stages;
+    AQE right-sizes the tiny entity-graph shuffles stage by stage.  Eager
+    per-iteration checkpoints cost 3.3 s against ~0.9 s for this shape on
+    a 442-edge graph at local[32] (pure scheduling overhead, not compute).
 
-    The final ranking is TWO-PHASE (r5 verdict item 4): range-partition
-    by (score DESC, node ASC), per-partition row_number, plus broadcast
-    partition-count offsets — no single-partition WindowExec anywhere in
-    the plan (the r5 version's one global Window.orderBy funneled the
-    whole entity table through one task; fine at gazetteer scale,
-    lethal at a billion nodes).  See _global_rank.
+    The final ranking is TWO-PHASE (range partition by (score DESC, node
+    ASC), per-partition row_number, broadcast partition-count offsets), so
+    no single-partition WindowExec funnels the whole entity table through
+    one task.  See _global_rank.
 
-    INT64 HEADROOM GUARD (r6 verdict item 2): score mass ≈ N·SCALE, so at
-    large N the per-edge product score·w and the damping product 85·insum
-    can exceed int64 — and non-ANSI Spark WRAPS silently, corrupting ranks
-    with no red gate.  Two per-row guards ride the existing projections
-    (zero extra shuffles, two bigint compares per edge per iteration):
-    the contribution requires ``score ≤ headroom DIV w`` (so score·w
-    cannot wrap) and the damping update requires
-    ``insum ≤ headroom DIV 85`` (so 85·insum cannot wrap); a violated
-    guard raise_error()s, failing the job loudly — the same hazard class
-    the DECIMAL(38,0) widenings closed in ta_tfidf_topk/kg_edge_lift,
-    guarded here instead of widened because the 8-iteration loop is the
-    hot path and the guard is free until the corpus actually approaches
-    the bound (then: drop PR_SCALE, as the module docstring directs).
-    The residual window — an insum SUM that wraps past 2^64 back to a
-    positive in-range value before the check — requires total score mass
-    ≥ 2^64, i.e. N ≥ 1.8e7 at full SCALE, exactly the regime where the
-    documented SCALE reduction applies.  ``headroom`` is parameterized so
-    tests can trip the guard deterministically; the DuckDB twin needs no
-    guard (HUGEINT-checked arithmetic errors on overflow by itself)."""
-    return _global_rank(pagerank_scores(edges, iters, headroom))
+    Overflow: requires ANSI mode (session.require_ansi raises otherwise).
+    Score mass ≈ N·SCALE, so at large N the per-edge product score·w, the
+    insum sum or the damping product 85·insum can exceed int64; Spark then
+    raises ARITHMETIC_OVERFLOW and the job fails instead of wrapping into
+    wrong ranks, as the DuckDB twin does on its own checked arithmetic.
+    Drop PR_SCALE as N·SCALE nears 9.2e18."""
+    return _global_rank(pagerank_scores(edges, iters))
 
 
-def pagerank_scores(
-    edges: DataFrame, iters: int = PR_ITERS, headroom: int = MAX_LONG
-) -> DataFrame:
+def pagerank_scores(edges: DataFrame, iters: int = PR_ITERS) -> DataFrame:
     """(node, score) after the fixed iterations — the pre-ranking phase of
-    pagerank(), split out so the headroom guard is AUDITABLE in an explain
-    (_global_rank localCheckpoints its input, which cuts the iteration
-    lineage — raise_error included — out of the final plan segment)."""
+    pagerank().  Requires ANSI mode (session.require_ansi raises before
+    any job runs); an int64 overflow in the iterations raises
+    ARITHMETIC_OVERFLOW.  Drop PR_SCALE as N·SCALE nears 9.2e18."""
+    require_ansi(edges.sparkSession)
     e0 = edges.localCheckpoint()
     wout = e0.groupBy("src").agg(F.sum("w").cast("long").alias("wout"))
     ew = e0.join(wout, "src").localCheckpoint()
@@ -290,27 +253,18 @@ def pagerank_scores(
     )
 
     pr = nodes.withColumn("score", F.lit(PR_SCALE).cast("long"))
-    insum_cap = headroom // PR_DAMP_NUM
     # dangling-node coverage via a zero-contribution UNION into the
-    # per-iteration aggregation instead of a nodes LEFT JOIN after it
-    # (r9): sum(c) over contribs ∪ {(node, 0) ∀ nodes} covers every node
-    # with insum >= 0 exactly as coalesce(insum, 0) did — identical
-    # exact-integer values — but drops one join stage from EACH of the 8
-    # unrolled iterations (the union rides the same groupBy exchange;
-    # the zero rows partial-aggregate map-side like everything else).
+    # per-iteration aggregation instead of a nodes LEFT JOIN after it:
+    # sum(c) over contribs ∪ {(node, 0) ∀ nodes} covers every node with
+    # insum >= 0 exactly as coalesce(insum, 0) would — identical
+    # exact-integer values — with one join stage fewer per unrolled
+    # iteration (the union rides the same groupBy exchange; the zero rows
+    # partial-aggregate map-side like everything else).
     zeros = nodes.select("node", F.lit(0).cast("long").alias("c"))
     for _ in range(iters):
         contrib = pr.join(ew, pr.node == ew.src).select(
             F.col("dst").alias("node"),
-            F.expr(
-                f"CASE WHEN score >= 0 AND score <= {headroom} DIV w"
-                f" THEN (score * w) DIV wout"
-                f" ELSE CAST(raise_error(concat("
-                f"'pagerank int64 headroom exceeded: score=',"
-                f" CAST(score AS STRING), ' w=', CAST(w AS STRING),"
-                f" ' — drop PR_SCALE for this corpus size')) AS BIGINT)"
-                f" END"
-            ).alias("c"),
+            F.expr("(score * w) DIV wout").alias("c"),
         )
         insum = (
             contrib.unionByName(zeros)
@@ -320,20 +274,14 @@ def pagerank_scores(
         pr = insum.select(
             "node",
             F.expr(
-                f"CASE WHEN insum >= 0 AND insum <= {insum_cap}"
-                f" THEN CAST({PR_BASE} + ({PR_DAMP_NUM} * insum)"
+                f"CAST({PR_BASE} + ({PR_DAMP_NUM} * insum)"
                 f" DIV {PR_DAMP_DEN} AS BIGINT)"
-                f" ELSE CAST(raise_error(concat("
-                f"'pagerank int64 headroom exceeded: insum=',"
-                f" CAST(insum AS STRING),"
-                f" ' — drop PR_SCALE for this corpus size')) AS BIGINT)"
-                f" END"
             ).alias("score"),
         )
     return pr
 
 
-def _global_rank(pr: DataFrame, n_parts: int | None = None) -> DataFrame:
+def _global_rank(pr: DataFrame) -> DataFrame:
     """Distributed total-order rank over (score DESC, node ASC) — the
     two-phase pattern that replaces a global Window.orderBy (which drags
     the WHOLE table through one task): range-partition on the rank key,
@@ -354,24 +302,15 @@ def _global_rank(pr: DataFrame, n_parts: int | None = None) -> DataFrame:
     it feeds THREE plan branches (the local-rank window and both sides of
     the triangular count join), and without the cut each branch would
     carry the whole upstream iteration lineage — 81 exchange nodes in the
-    audited plan vs 26, correct only via runtime ReusedExchange (the same
-    dedup reliance the r6 e0 checkpoint removed upstream).  The cut also
-    freezes spark_partition_id, making pid assignment trivially stable
-    across the branches.
+    audited plan vs 26, correct only via runtime ReusedExchange.  The cut
+    also freezes spark_partition_id, making pid assignment trivially
+    stable across the branches.
 
-    ``n_parts`` derives from spark.sql.shuffle.partitions (r6 ADVICE
-    item 2: a fixed 8 still sorted N/8 rows per window task — a
-    constant-factor, not asymptotic, bound; the session's shuffle
-    parallelism is the number the operator's other exchanges already
-    scale by).  Output is partition-count-independent (unique total
-    order), so the derivation is value-safe; PR_RANK_PARTS is only the
-    fallback when the conf is unreadable (e.g. set to "auto")."""
-    if n_parts is None:
-        try:
-            n_parts = int(pr.sparkSession.conf.get("spark.sql.shuffle.partitions"))
-        except (TypeError, ValueError):
-            n_parts = PR_RANK_PARTS
-        n_parts = max(1, n_parts)
+    n_parts is spark.sql.shuffle.partitions, the parallelism the
+    operator's other exchanges already scale by (a fixed count would
+    still sort N/n_parts rows per window task); the output does not
+    depend on it (unique total order)."""
+    n_parts = int(pr.sparkSession.conf.get("spark.sql.shuffle.partitions"))
     part = (
         pr.repartitionByRange(n_parts, F.desc("score"), F.asc("node"))
         .withColumn("pid", F.spark_partition_id())
@@ -1448,10 +1387,7 @@ KCORE_PEELS = 4  # fixed peel rounds (bounded compute; convergence is visible
 
 
 def kcore_peel(
-    e: DataFrame,
-    k: int = KCORE_K,
-    peels: int = KCORE_PEELS,
-    headroom: int = MAX_LONG,
+    e: DataFrame, k: int = KCORE_K, peels: int = KCORE_PEELS
 ) -> DataFrame:
     """(peel, n_nodes, n_edges): surviving node / directed-edge counts
     after each of ``peels`` fixed rounds of k-core peeling — drop every
@@ -1480,22 +1416,15 @@ def kcore_peel(
     build them; degree is counted on src, so a node seen only as dst of a
     directed list has no degree and its edges are dropped in round 1.
 
-    INT64 HEADROOM GUARD (r7 next-round item 7): the per-round degree is
-    guarded by the same raise_error pattern as pagerank/LPA before the
-    ≥k comparison.  Honest scope note: TODAY the degree is a row count
-    (Spark's count cannot wrap — a single group would need > 9.2e18
-    rows), so the guard is vacuous on this exact plan; it exists so the
-    survival test's arithmetic keeps the uniform in-plan guard
-    discipline when the degree becomes a weighted sum (the natural
-    extension, and exactly where LPA's sw wraps), and so the explain
-    audit shows the same guarded shape across the whole iterative graph
-    family.  One bigint compare per node per round — free.  The trip
-    test fires it via the parameterized ``headroom``.
+    Overflow: the degree is a row count, which cannot reach int64 (a node
+    would need 9.2e18 incident rows), and no PR_SCALE units enter the
+    arithmetic, so unlike pagerank and label_propagation this operator
+    makes no ANSI check of its own.
     """
     out = None
     cur = e.select("src", "dst").localCheckpoint()
     for i in range(1, peels + 1):
-        deg = _kcore_deg(cur, headroom)
+        deg = cur.groupBy("src").agg(F.count("*").alias("deg"))
         keep = deg.filter(F.col("deg") >= k).select(F.col("src").alias("node"))
         cur = (
             cur.join(keep, cur.src == keep.node, "left_semi")
@@ -1515,23 +1444,6 @@ def kcore_peel(
         )
         out = row if out is None else out.unionByName(row)
     return out
-
-
-def _kcore_deg(cur: DataFrame, headroom: int) -> DataFrame:
-    """One peel round's guarded (src, deg) table — split out so the
-    explain audit can see the raise_error guard (the per-round
-    localCheckpoint cuts it out of kcore_peel's RETURNED plan)."""
-    deg_guard = (
-        f"CASE WHEN deg >= 0 AND deg <= {headroom} THEN deg"
-        f" ELSE CAST(raise_error(concat("
-        f"'kcore_peel int64 headroom exceeded: deg=',"
-        f" CAST(deg AS STRING))) AS BIGINT) END"
-    )
-    return (
-        cur.groupBy("src")
-        .agg(F.count("*").alias("deg"))
-        .select("src", F.expr(deg_guard).alias("deg"))
-    )
 
 
 def kg_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1588,9 +1500,7 @@ LPA_ITERS = 2  # fixed synchronous rounds (determinism bargain as PR_ITERS:
 #                because both dialects stop at the same round)
 
 
-def label_propagation(
-    e: DataFrame, iters: int = LPA_ITERS, headroom: int = MAX_LONG
-) -> DataFrame:
+def label_propagation(e: DataFrame, iters: int = LPA_ITERS) -> DataFrame:
     """(node, label): synchronous weighted label propagation — every node
     starts as its own label; each round it adopts the label carrying the
     MOST total edge weight among its neighbors (ties → lexicographically
@@ -1610,20 +1520,15 @@ def label_propagation(
     build them; the node set is src, so a node seen only as dst of a
     directed list gets no label.
 
-    INT64 HEADROOM GUARD (r7 next-round item 7 — the pagerank guard
-    pattern, graph_analytics.py pagerank_scores, extended to this
-    operator's weight sums): sw = Σw over a hub node's incident labels
-    can exceed int64 at extreme corpus scale, and non-ANSI Spark WRAPS
-    silently — a wrapped sw flips the argmax and silently reassigns
-    communities with no red gate.  One per-row guard rides the existing
-    score projection (zero extra shuffles): a post-sum sw outside
-    [0, headroom] raise_error()s, failing the job loudly.  The residual
-    window — a sum wrapping past 2^64 back into range before the check —
-    requires total weight mass ≥ 2^64, the same documented residual as
-    pagerank's insum guard.  ``headroom`` is parameterized so the trip
-    test can fire it deterministically; the DuckDB twin needs no guard
-    (HUGEINT-checked arithmetic errors on overflow by itself).
+    Overflow: requires ANSI mode (session.require_ansi raises otherwise).
+    sw = Σw over a node's incident labels can exceed int64 at extreme
+    corpus scale; Spark then raises ARITHMETIC_OVERFLOW in the sum and the
+    job fails, where a wrapped sw would flip the argmax and silently
+    reassign communities.  The weights are conversation counts, not
+    PR_SCALE units, so lowering PR_SCALE (pagerank's remedy as N·SCALE
+    nears 9.2e18) does not apply here.
     """
+    require_ansi(e.sparkSession)
     e0 = e.select("src", "dst", "w").localCheckpoint()
     lbl = (
         e0.select(F.col("src").alias("node"))
@@ -1632,7 +1537,11 @@ def label_propagation(
         .localCheckpoint()
     )
     for i in range(iters):
-        scores = _lpa_scores(e0, lbl, headroom)
+        scores = (
+            e0.join(lbl, e0.dst == lbl.node)
+            .groupBy("src", "label")
+            .agg(F.sum("w").cast("long").alias("sw"))
+        )
         best = scores.groupBy("src").agg(F.max("sw").alias("mw"))
         lbl = (
             scores.join(best, "src")
@@ -1641,35 +1550,14 @@ def label_propagation(
             .agg(F.min("label").alias("label"))
             .select(F.col("src").alias("node"), "label")
         )
-        # re-checkpoint per round EXCEPT the last (r9): an intermediate
-        # round's labels feed the next round's argmax (which references
-        # its score table twice — uncut lineage doubles per round), but
-        # the final round's labels feed only the returned projection, so
-        # its eager checkpoint job was pure overhead.
+        # re-checkpoint per round EXCEPT the last: an intermediate round's
+        # labels feed the next round's argmax (which references its score
+        # table twice — uncut lineage doubles per round), but the final
+        # round's labels feed only the returned projection, so an eager
+        # checkpoint job there would be pure overhead.
         if i < iters - 1:
             lbl = lbl.localCheckpoint()
     return lbl
-
-
-def _lpa_scores(e0: DataFrame, lbl: DataFrame, headroom: int) -> DataFrame:
-    """One LPA round's guarded (src, label, sw) score table — split out so
-    the explain audit can see the raise_error guard (the per-round
-    localCheckpoint cuts it out of label_propagation's RETURNED plan; the
-    trip test proves it executes, this function makes it auditable)."""
-    sw_guard = (
-        f"CASE WHEN sw >= 0 AND sw <= {headroom} THEN sw"
-        f" ELSE CAST(raise_error(concat("
-        f"'label_propagation int64 headroom exceeded: sw=',"
-        f" CAST(sw AS STRING),"
-        f" ' — reduce edge weights for this corpus size')) AS BIGINT)"
-        f" END"
-    )
-    return (
-        e0.join(lbl, e0.dst == lbl.node)
-        .groupBy("src", "label")
-        .agg(F.sum("w").cast("long").alias("sw"))
-        .select("src", "label", F.expr(sw_guard).alias("sw"))
-    )
 
 
 LPA_PRUNE_PPM = LIFT_Q  # propagate only over lift > 1 (positive association)
@@ -1897,13 +1785,7 @@ def _dense_node_index(nodes: DataFrame, n_parts: int | None = None) -> DataFrame
     partition-boundary-independent.  localCheckpoint for the same
     three-branch fan-out reason as _global_rank."""
     if n_parts is None:
-        try:
-            n_parts = int(
-                nodes.sparkSession.conf.get("spark.sql.shuffle.partitions")
-            )
-        except (TypeError, ValueError):
-            n_parts = PR_RANK_PARTS
-        n_parts = max(1, n_parts)
+        n_parts = int(nodes.sparkSession.conf.get("spark.sql.shuffle.partitions"))
     part = (
         nodes.repartitionByRange(n_parts, F.asc("node"))
         .withColumn("pid", F.spark_partition_id())

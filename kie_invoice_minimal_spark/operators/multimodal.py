@@ -24,6 +24,7 @@ import pyarrow.compute as pc
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..session import require_ansi
 from .arrow_groups import map_batches
 
 FRAME_STEP = 1000  # fake: one "frame" per 1000 payload bytes
@@ -162,27 +163,27 @@ MM_FRAME_CHARS = 40  # chars per fake frame slice (small enough that fixture
 
 def framed_frame_fps(docs: DataFrame) -> DataFrame:
     """(doc_id, fp): every sampled frame's 60-bit md5 fingerprint — THE
-    single definition of the frame-fingerprint scheme (r7 verdict item:
-    the framing/sampling/guarded-offset expressions previously existed in
-    four places — mm_frame_hash_dedup + _frame_fps on the Spark side and
-    both DuckDB twins — a drift hazard exactly like the duplicated
-    edge-gen SURVEY.md flags in the reference, kie_utils.py:124-150 vs
-    gated_gcn.py:329-362).  Both frame operators and both twins (via
-    frames_sql_cte) now consume this one scheme:
+    single definition of the frame-fingerprint scheme.  Both frame
+    operators (mm_frame_hash_dedup, _frame_fps) consume it, and both
+    DuckDB twins embed its SQL twin frames_sql_cte, so the framing,
+    sampling and offset expressions cannot drift between them (the drift
+    hazard SURVEY.md flags in the reference's duplicated edge generation,
+    kie_utils.py:124-150 vs gated_gcn.py:329-362):
 
     - frame index: every MM_FRAME_SAMPLE_STEP'th index in
       [0, (len-1) DIV MM_FRAME_CHARS]; empty texts emit no frames;
-    - offset guard (r6 ADVICE item 3): fi·CHARS+1 is computed in BIGINT
-      and raise_error()s past INT32 before the substring cast — for
-      texts approaching Spark's 2^31-char limit the bare cast would wrap
-      negative in non-ANSI Spark while DuckDB errors, a cross-engine
-      divergence; below the bound values are unchanged;
+    - offset: fi·CHARS+1 is computed in BIGINT and cast to INT for the
+      substring.  Requires ANSI mode (session.require_ansi raises
+      otherwise): for texts near Spark's 2^31-char limit the cast
+      overflows and raises CAST_OVERFLOW, as DuckDB's twin cast raises a
+      ConversionException, instead of wrapping negative;
     - fp: mdhash over the MM_FRAME_CHARS-char slice (the documented
       environmental decode stub — a real pipeline swaps the slice for
       decoded-frame bytes / perceptual hash; schema and shape identical).
 
     Emits one row per SAMPLED frame (duplicates kept — mm_frame_hash_dedup
     counts frames); set-valued consumers dedup downstream (_frame_fps)."""
+    require_ansi(docs.sparkSession)
     from .text_analysis import mdhash_spark
 
     fr = docs.select(
@@ -199,16 +200,13 @@ def framed_frame_fps(docs: DataFrame) -> DataFrame:
         ).alias("fi"),
         "text",
     )
-    off = (
-        f"CAST(CASE WHEN fi * {MM_FRAME_CHARS} + 1 <= 2147483647"
-        f" THEN fi * {MM_FRAME_CHARS} + 1"
-        f" ELSE CAST(raise_error('frame offset exceeds INT32 range')"
-        f" AS BIGINT) END AS INT)"
-    )
     return fr.select(
         "doc_id",
         mdhash_spark(
-            F.expr(f"substring(text, {off}, {MM_FRAME_CHARS})")
+            F.expr(
+                f"substring(text, CAST(fi * {MM_FRAME_CHARS} + 1 AS INT),"
+                f" {MM_FRAME_CHARS})"
+            )
         ).alias("fp"),
     )
 
@@ -221,10 +219,7 @@ def frames_sql_cte(distinct: bool) -> str:
     from .text_analysis import MDHASH_SQL
 
     fp = MDHASH_SQL(
-        f"substring(text, CAST(CASE WHEN fi * {MM_FRAME_CHARS} + 1 <= 2147483647"
-        f" THEN fi * {MM_FRAME_CHARS} + 1"
-        f" ELSE error('frame offset exceeds INT32 range')"
-        f" END AS INT), {MM_FRAME_CHARS})"
+        f"substring(text, CAST(fi * {MM_FRAME_CHARS} + 1 AS INT), {MM_FRAME_CHARS})"
     )
     kw = "DISTINCT " if distinct else ""
     return f"""fr AS (
@@ -259,10 +254,11 @@ def mm_frame_hash_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     Shape at 100 TB of video: the frame stream is rows ≈ frames/2, the
     fingerprint table aggregates with map-side combine on fp, and the
     ownership join is fp-keyed — no payload bytes cross any shuffle.
-    Framing/sampling/offset-guard semantics live in framed_frame_fps (the
-    single scheme definition; r6 ADVICE item 3's BIGINT offset guard is
-    documented there).  Reference analog: per-crop batched hashing of the
-    detector outputs, kie_utils.py:133-150."""
+    Framing, sampling and the offset cast live in framed_frame_fps (the
+    single scheme definition), which requires ANSI mode so that an offset
+    past INT32 raises CAST_OVERFLOW instead of wrapping.  Reference
+    analog: per-crop batched hashing of the detector outputs,
+    kie_utils.py:133-150."""
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select("doc_id", "text")
     frames = framed_frame_fps(docs)
     nd = frames.groupBy("fp").agg(
@@ -292,7 +288,7 @@ def mm_frame_hash_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _mm_frame_hash_dedup_sql() -> str:
     # fr/frames come from the shared fragment (frames_sql_cte — the one
-    # SQL definition of the frame scheme; error() is raise_error's twin)
+    # SQL definition of the frame scheme)
     return f"""
 WITH {frames_sql_cte(distinct=False)},
 nd AS (SELECT fp, count(DISTINCT doc_id) AS nd FROM frames GROUP BY fp),

@@ -1646,7 +1646,7 @@ def ev_windowed_anomaly(spark: SparkSession, sf_dir: str) -> DataFrame:
     z² = (x−μ)²/σ² with no intermediate rounding; is_anomaly = z2_ppm ≥
     4e6 (|z| ≥ 2).  Moment products widen to DECIMAL(38,0)/HUGEINT
     before multiplying (the stats_linear_fit discipline — (x·n−s)²
-    exceeds int64 headroom at corpus scale).  A type with zero variance
+    exceeds the int64 range at corpus scale).  A type with zero variance
     (or one hour) emits NULL z2/flag — try-divide semantics on both
     engines.
 

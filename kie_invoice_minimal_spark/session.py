@@ -5,10 +5,11 @@ the north rule forbids per-row Python), AQE is on for runtime re-planning
 (skew joins, coalescing the shrinking edge lists of the connected-components
 loop), ANSI mode is pinned on (integer overflow fails the query instead of
 wrapping; Spark 4's default, stated so that a cluster default cannot turn it
-off), and shuffle partitions default to a local-mode-friendly count that
-callers override for cluster runs.  The Python workers' per-task import
-cost is handled where the crossings are made (``operators/arrow_groups``),
-not by a session option.
+off, and checked by ``require_ansi`` where an operator's exact-integer
+arithmetic relies on it), and shuffle partitions default to a
+local-mode-friendly count that callers override for cluster runs.  The
+Python workers' per-task import cost is handled where the crossings are
+made (``operators/arrow_groups``), not by a session option.
 """
 
 from __future__ import annotations
@@ -91,6 +92,22 @@ def get_spark(
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     return builder.getOrCreate()
+
+
+def require_ansi(spark: SparkSession) -> None:
+    """Raise ``RuntimeError`` unless ``spark.sql.ansi.enabled`` is true.
+
+    The exact-integer operators leave overflow to the engine: under ANSI a
+    bigint multiply, ``sum`` or narrowing cast that overflows raises
+    ``ARITHMETIC_OVERFLOW`` / ``CAST_OVERFLOW``, while with ANSI off it
+    wraps silently into wrong values.  A session not built by ``get_spark``
+    (or built with ``extra_conf`` turning ANSI off) must fail here, before
+    any job runs, rather than return wrapped results."""
+    if spark.conf.get("spark.sql.ansi.enabled").strip().lower() != "true":
+        raise RuntimeError(
+            "spark.sql.ansi.enabled must be true: this operator relies on "
+            "ANSI mode to raise on integer overflow instead of wrapping"
+        )
 
 
 def observation_get(obs: Observation) -> dict:

@@ -56,8 +56,8 @@ def test_certification_window_holds_round8_critical_entries():
     names = list(entrymod.queries())
     first50 = set(names[:50])
     critical = {
-        # changed in round 8: per-conversation over-cap routing + the
-        # LPA/k-core headroom guards re-plan every comention-graph consumer
+        # changed in round 8: per-conversation over-cap routing re-plans
+        # every comention-graph consumer
         "kg_entity_pagerank", "kg_canonical_pagerank",
         "kg_canonical_pagerank_staged", "kg_canonical_pagerank_derive",
         "kg_triangle_counts", "kg_khop_counts", "kg_khop_kmv",

@@ -19,10 +19,11 @@ from kie_invoice_minimal_spark.operators.graph_analytics import (
 SF = "/root/testdata/sf0.01"
 
 
-def _star_edges(spark):
-    """hub 'a' connected to b..e, plus one peripheral b-c edge; symmetric."""
-    rows = [("a", x, 1) for x in "bcde"] + [(x, "a", 1) for x in "bcde"]
-    rows += [("b", "c", 1), ("c", "b", 1)]
+def _star_edges(spark, w=1):
+    """hub 'a' connected to b..e, plus one peripheral b-c edge; symmetric,
+    every edge of weight ``w``."""
+    rows = [("a", x, w) for x in "bcde"] + [(x, "a", w) for x in "bcde"]
+    rows += [("b", "c", w), ("c", "b", w)]
     return spark.createDataFrame(rows, "src string, dst string, w long")
 
 
@@ -621,47 +622,72 @@ def test_predicate_stats_invariants(spark):
         assert r.top_share_ppm == top[1] * PS_Q // r.n_mentions
 
 
-# --- round 7: int64 headroom guard + common-path cap refund -------------------------
+# --- int64 overflow fails loudly (ANSI) + capped-surface routing --------------------
 
 
-def test_pagerank_headroom_guard_trips_on_tiny_headroom(spark):
-    """r6 verdict item 2: a deliberately tiny headroom must FAIL the job
-    loudly (raise_error in-plan), never wrap silently — the red gate for
-    the N·SCALE int64 budget."""
+def test_pagerank_overflow_raises(spark):
+    """score·w past int64 must fail the job, never wrap into wrong ranks:
+    with w = 10^7 the hub's contribution score·w exceeds 2^63 (scores are
+    ~10^12 SCALE units)."""
     import pytest
+    from pyspark.errors import ArithmeticException
 
-    with pytest.raises(Exception, match="headroom exceeded"):
-        pagerank(_star_edges(spark), headroom=1000).collect()
+    with pytest.raises(ArithmeticException, match="ARITHMETIC_OVERFLOW"):
+        pagerank(_star_edges(spark, w=10**7)).collect()
 
 
-def test_pagerank_headroom_guard_visible_in_plan(spark):
-    """The guard must ride the iteration projections in the PHYSICAL plan
-    (one raise_error branch per guarded product), not live only in docs.
-    Audited on pagerank_scores — the final pagerank() plan segment starts
-    at _global_rank's localCheckpoint, which cuts the iteration lineage."""
-    import io
-    from contextlib import redirect_stdout
+def test_label_propagation_overflow_raises(spark):
+    """A label's weight sum past int64 must fail the job: a doubled
+    (a, b, 2^62) edge sums to 2^63 (a wrapped sw would flip the argmax).
+    The score table feeds two stages; when AQE sees both fail it raises
+    STAGE_MATERIALIZATION_MULTIPLE_FAILURES, which reaches Python as a
+    Py4JJavaError carrying the same ARITHMETIC_OVERFLOW causes."""
+    import pytest
+    from py4j.protocol import Py4JJavaError
+    from pyspark.errors import ArithmeticException
 
     from kie_invoice_minimal_spark.operators.graph_analytics import (
+        label_propagation,
+    )
+
+    big = 1 << 62
+    e = spark.createDataFrame(
+        [("a", "b", big), ("a", "b", big), ("b", "a", big), ("b", "a", big)],
+        "src string, dst string, w long",
+    )
+    with pytest.raises(
+        (ArithmeticException, Py4JJavaError), match="ARITHMETIC_OVERFLOW"
+    ):
+        label_propagation(e).collect()
+
+
+def test_exact_integer_operators_require_ansi(spark):
+    """With ANSI off an overflow would wrap silently, so each operator
+    that leaves overflow to the engine refuses to plan — before any job
+    runs (the check is its first statement)."""
+    import pytest
+
+    from kie_invoice_minimal_spark.operators.graph_analytics import (
+        label_propagation,
         pagerank_scores,
     )
+    from kie_invoice_minimal_spark.operators.multimodal import framed_frame_fps
 
-    buf = io.StringIO()
-    with redirect_stdout(buf):
-        pagerank_scores(_star_edges(spark)).explain("formatted")
-    assert "raise_error" in buf.getvalue()
-
-
-def test_pagerank_headroom_guard_value_neutral(spark):
-    """Default headroom must not change a single output value vs a run
-    with unlimited-but-explicit headroom (the guard is a check, not a
-    transform)."""
-    a = sorted(tuple(r) for r in pagerank(_star_edges(spark)).collect())
-    b = sorted(
-        tuple(r)
-        for r in pagerank(_star_edges(spark), headroom=(1 << 63) - 1).collect()
+    docs = spark.createDataFrame([("d", "text")], "doc_id string, text string")
+    calls = (
+        lambda: pagerank_scores(_star_edges(spark)),
+        lambda: label_propagation(_star_edges(spark)),
+        lambda: framed_frame_fps(docs),
     )
-    assert a == b
+    key = "spark.sql.ansi.enabled"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "false")
+    try:
+        for call in calls:
+            with pytest.raises(RuntimeError, match=key):
+                call()
+    finally:
+        spark.conf.set(key, old)
 
 
 def test_capped_surfaces_common_path_has_no_windows(spark):
@@ -747,81 +773,3 @@ def test_conv_fanout_matches_python_model(spark):
         assert row.min_d == min(vals) and row.max_d == max(vals)
         assert row.n_over_cap == sum(1 for v in vals if v > COMENTION_CAP)
     assert sum(r.n_over_cap for r in got.values()) == 0  # fixture under cap
-
-
-# --- round 8: headroom guards extended to LPA + k-core -------------------------------
-
-
-def test_lpa_headroom_guard_trips_and_is_value_neutral(spark):
-    """r7 next-round item 7: label_propagation's weight sums get the
-    pagerank guard pattern — a tiny headroom fails the job loudly
-    (silent int64 wrap would flip the argmax and reassign communities);
-    the default headroom changes no output value."""
-    import pytest
-
-    from kie_invoice_minimal_spark.operators.graph_analytics import (
-        label_propagation,
-    )
-
-    with pytest.raises(Exception, match="headroom exceeded"):
-        label_propagation(_star_edges(spark), headroom=0).collect()
-    a = sorted(tuple(r) for r in label_propagation(_star_edges(spark)).collect())
-    b = sorted(
-        tuple(r)
-        for r in label_propagation(
-            _star_edges(spark), headroom=(1 << 63) - 1
-        ).collect()
-    )
-    assert a == b and a  # guard is a check, not a transform
-
-
-def test_kcore_headroom_guard_trips_and_is_value_neutral(spark):
-    import pytest
-
-    from kie_invoice_minimal_spark.operators.graph_analytics import kcore_peel
-
-    # hub degree 4 > headroom 1 -> in-plan raise_error
-    with pytest.raises(Exception, match="headroom exceeded"):
-        kcore_peel(_star_edges(spark), k=1, peels=1, headroom=1).collect()
-    a = sorted(tuple(r) for r in kcore_peel(_star_edges(spark), k=2).collect())
-    b = sorted(
-        tuple(r)
-        for r in kcore_peel(
-            _star_edges(spark), k=2, headroom=(1 << 63) - 1
-        ).collect()
-    )
-    assert a == b and a
-
-
-def test_lpa_and_kcore_guards_visible_in_plan(spark):
-    """The guards must ride the physical plans (raise_error branch per
-    guarded aggregate), mirroring the pagerank explain-audit check.  Both
-    loops localCheckpoint per round — which cuts the guard out of the
-    RETURNED plan (the trip tests prove it executes) — so the audit
-    targets the per-round projection helpers the loops actually call
-    (_lpa_scores / _kcore_deg), the same split pagerank_scores makes for
-    its own auditability."""
-    import io
-    from contextlib import redirect_stdout
-
-    from pyspark.sql import functions as _F
-
-    from kie_invoice_minimal_spark.operators.graph_analytics import (
-        MAX_LONG,
-        _kcore_deg,
-        _lpa_scores,
-    )
-
-    e0 = _star_edges(spark)
-    lbl = e0.select(_F.col("src").alias("node")).distinct().withColumn(
-        "label", _F.col("node")
-    )
-    buf = io.StringIO()
-    with redirect_stdout(buf):
-        _lpa_scores(e0, lbl, MAX_LONG).explain("formatted")
-    assert "raise_error" in buf.getvalue()
-
-    buf2 = io.StringIO()
-    with redirect_stdout(buf2):
-        _kcore_deg(e0, MAX_LONG).explain("formatted")
-    assert "raise_error" in buf2.getvalue()

@@ -152,7 +152,7 @@ def test_ner_slot_rehearsal_full_graph_family_bounded(spark):
     assert hot_nodes == {f"ent_{i:05d}" for i in range(COMENTION_CAP)}
 
     e0 = e.localCheckpoint()
-    # PageRank over the capped graph: every node ranked, guard untripped
+    # PageRank over the capped graph: every node ranked, no overflow
     pr = pagerank(e0).collect()
     assert len(pr) == len({r.src for r in edges})
     # neighborhood features bounded by the adjacency caps
