@@ -1509,12 +1509,13 @@ def label_propagation(e: DataFrame, iters: int = LPA_ITERS) -> DataFrame:
     cannot see (the co-mention graph is one giant component at every
     fixture SF, while communities split it into topical clusters).
 
-    Deterministic argmax WITHOUT a per-node sort window: max weight per
-    node (map-side combined), join back, min label among the ties — two
-    groupBys and one join, hub-proof where a partitionBy(node) ranking
-    window would sort a celebrity entity's whole label multiset in one
-    task.  Labels are re-checkpointed per round: the argmax references
-    the score table twice, so uncut lineage doubles per round.
+    Deterministic argmax WITHOUT a per-node sort window: each round is one
+    groupBy(src, label) summing the weights sw, then one groupBy(src)
+    taking min(struct(-sw, label)) — the largest sw, then the smallest
+    label — so each round's scores are computed once, and a hub's label
+    multiset is reduced by partial aggregation instead of sorted in one
+    task as a partitionBy(node) ranking window would.  sw sums
+    non-negative counts, so its negation cannot overflow.
 
     Input contract: symmetric edges, as comention_edges and lifted_edges
     build them; the node set is src, so a node seen only as dst of a
@@ -1536,27 +1537,15 @@ def label_propagation(e: DataFrame, iters: int = LPA_ITERS) -> DataFrame:
         .withColumn("label", F.col("node"))
         .localCheckpoint()
     )
-    for i in range(iters):
-        scores = (
+    for _ in range(iters):
+        lbl = (
             e0.join(lbl, e0.dst == lbl.node)
             .groupBy("src", "label")
             .agg(F.sum("w").cast("long").alias("sw"))
-        )
-        best = scores.groupBy("src").agg(F.max("sw").alias("mw"))
-        lbl = (
-            scores.join(best, "src")
-            .filter(F.col("sw") == F.col("mw"))
             .groupBy("src")
-            .agg(F.min("label").alias("label"))
-            .select(F.col("src").alias("node"), "label")
+            .agg(F.min(F.struct(-F.col("sw"), F.col("label"))).alias("best"))
+            .select(F.col("src").alias("node"), F.col("best.label").alias("label"))
         )
-        # re-checkpoint per round EXCEPT the last: an intermediate round's
-        # labels feed the next round's argmax (which references its score
-        # table twice — uncut lineage doubles per round), but the final
-        # round's labels feed only the returned projection, so an eager
-        # checkpoint job there would be pure overhead.
-        if i < iters - 1:
-            lbl = lbl.localCheckpoint()
     return lbl
 
 
@@ -1578,10 +1567,10 @@ def kg_communities(spark: SparkSession, sf_dir: str) -> DataFrame:
     sf0.01) — the co-occurrence STRUCTURE, which raw co-mention weight
     cannot see because frequent surfaces co-occur with everything.
 
-    COVERAGE CONTRACT (r6 ADVICE item 4): the output node set is the
-    lift-pruned graph's node set — a surface whose incident edges are ALL
-    lift-pruned (no positively-associated neighbor anywhere) is ABSENT
-    from the output, not emitted as a singleton community.  Consumers
+    Coverage contract: the output node set is the lift-pruned graph's
+    node set — a surface whose incident edges are ALL lift-pruned (no
+    positively-associated neighbor anywhere) is ABSENT from the output,
+    not emitted as a singleton community.  Consumers
     needing full surface coverage must left-join this result onto the
     co-mention node set and treat NULL as "no community evidence"; both
     engines implement the identical subset, so parity holds by

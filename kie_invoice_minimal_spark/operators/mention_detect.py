@@ -12,17 +12,18 @@ Two interchangeable implementations, tested for equality:
 - :func:`detect_mentions_arrow` — ``arrow_groups.map_batches`` over
   :func:`_classify_batch`: pyarrow compute kernels and numpy over whole
   record batches, zero per-row Python and no pandas conversion (the north
-  rule's required surface).  Each token is probed once against the label
-  tokens and once against the gazetteers (``index_in``), and the date and
-  weight regexes run only on the ~15 % of tokens that start with an ASCII
-  digit — the only ones either pattern can match (skipping match work whose
-  answer is already known, as in *Exploiting Code Generation for Efficient
-  LIKE Pattern Matching*, VLDB 2023).  The Arrow flagship
-  (``plans/pipeline.extract_triples_df``) calls ``_classify_batch`` inside
-  its one triple-join ``mapInArrow`` instead; this map serves
-  ``kg_mentions``, the staged pipeline and streaming.  The model-scoring
-  analog slot: any learned detector (a real NER model) would drop into this
-  same batch function.
+  rule's required surface).  Its labels come from :func:`classify_tokens`,
+  the one token classifier, which the Arrow flagship
+  (``plans/pipeline.extract_triples_df``) and the streaming state update
+  call directly.  It dictionary-encodes the tokens and runs every rule that
+  reads a token alone once per distinct token: one ``index_in`` against the
+  label tokens, one against the gazetteers, and the date and weight regexes
+  only on the distinct tokens that start with an ASCII digit, the only ones
+  either pattern can match (skipping work whose answer is already known, as
+  in *Exploiting Code Generation for Efficient LIKE Pattern Matching*,
+  VLDB 2023).  Per token it costs one hash probe and one gather, plus the
+  previous-token rule for dates.  The model-scoring analog slot: any
+  learned detector (a real NER model) would drop into this same function.
 - :func:`detect_mentions_native` — pure JVM column expressions
   (posexplode + higher-order functions), whole-stage-codegen friendly; the
   fastest path when the rule set is expressible in SQL.
@@ -37,6 +38,8 @@ mention density * corpus size.  Arrow batch size bounds UDF memory.
 """
 
 from __future__ import annotations
+
+from typing import NamedTuple
 
 import numpy as np
 import pyarrow as pa
@@ -67,33 +70,40 @@ MENTION_SCHEMA_DDL = (
 )
 
 
+# Label codes index LABELS: 0 = OTHER, then the emitted labels in string
+# order, so sorting on the code sorts on the label string.
+LABELS = pa.array([rules.OTHER, *sorted(rules.EMITTED_LABELS)])
+_CODE = {label: i for i, label in enumerate(LABELS.to_pylist())}
+_DATE = len(_CODE)  # a date whose code depends on the previous token
+
 # Label tokens (lowercased) and gazetteer entries, each probed with one
 # ``index_in``; the match index maps to a label code (index -1, no match,
-# reads the trailing 0).  Codes index _LABELS, 0 = OTHER.
+# reads the trailing 0).
 _LABEL_TOKENS = pa.array(
     rules.MFG_LABEL_TOKENS + rules.EXP_LABEL_TOKENS + rules.WEIGHT_LABEL_TOKENS
 )
 _LABEL_CODE = np.array(
-    [1] * len(rules.MFG_LABEL_TOKENS)
-    + [2] * len(rules.EXP_LABEL_TOKENS)
-    + [3] * len(rules.WEIGHT_LABEL_TOKENS)
+    [_CODE["MFG_LABEL"]] * len(rules.MFG_LABEL_TOKENS)
+    + [_CODE["EXP_LABEL"]] * len(rules.EXP_LABEL_TOKENS)
+    + [_CODE["WEIGHT_LABEL"]] * len(rules.WEIGHT_LABEL_TOKENS)
     + [0]
 )
 _GAZETTEER = pa.array(sorted(rules.BRAND_GAZETTEER) + sorted(rules.NAME_GAZETTEER))
 _GAZETTEER_CODE = np.array(
-    [7] * len(rules.BRAND_GAZETTEER) + [8] * len(rules.NAME_GAZETTEER) + [0]
+    [_CODE["BRAND"]] * len(rules.BRAND_GAZETTEER)
+    + [_CODE["NAME"]] * len(rules.NAME_GAZETTEER)
+    + [0]
 )
-# a date's code by the previous token's label code: after MFG_LABEL -> MFG,
+# a date's code by the previous token's code: after MFG_LABEL -> MFG,
 # after EXP_LABEL -> EXP, otherwise OTHER
-_DATE_CODE = np.array([0, 4, 5, 0])
+_DATE_AFTER = np.zeros(_DATE + 1, dtype=np.int8)
+_DATE_AFTER[_CODE["MFG_LABEL"]] = _CODE["MFG"]
+_DATE_AFTER[_CODE["EXP_LABEL"]] = _CODE["EXP"]
 # RE2 patterns (pyarrow match_substring_regex); identical text to the
 # Python/SQL forms in rules.py.  Both start with ``^[0-9]``, so they run
 # only on tokens whose first byte is an ASCII digit.
 _DATE_PAT = rules.DATE_RE_SQL
 _WEIGHT_PAT = rules.WEIGHT_RE_SQL
-_LABELS = pa.array(
-    [rules.OTHER, "MFG_LABEL", "EXP_LABEL", "WEIGHT_LABEL", "MFG", "EXP", "WEIGHT", "BRAND", "NAME"]
-)
 
 
 def _match_code(tokens: pa.Array, value_set: pa.Array, codes: np.ndarray) -> np.ndarray:
@@ -105,7 +115,7 @@ def _match_code(tokens: pa.Array, value_set: pa.Array, codes: np.ndarray) -> np.
 def _digit_led(tokens: pa.StringArray) -> np.ndarray:
     """Indices of the tokens whose first byte is an ASCII digit, read from
     the offsets and data buffers of a string array made by a compute kernel
-    (which always allocates the data buffer)."""
+    (which always allocates the data buffer, empty or not)."""
     _, offsets, data = tokens.buffers()
     off = np.frombuffer(offsets, np.int32, len(tokens) + 1, tokens.offset * 4)
     nonempty = np.flatnonzero(off[1:] > off[:-1])
@@ -123,65 +133,87 @@ def _regex_hits(tokens: pa.Array, at: np.ndarray, pattern: str) -> np.ndarray:
     return hit
 
 
-def _classify_batch(batch: pa.RecordBatch) -> pa.RecordBatch:
-    """Vectorized rule classifier over one Arrow batch of turns
-    ``(conv_id, turn_idx, text)`` -> the ``mentions`` columns.
-
-    Tokenization, lowering, set membership and regex all run in pyarrow
-    compute kernels (C++); the segment arithmetic for positions/spans is
-    numpy.  Each token is probed once against the 12 label tokens and once
-    against the gazetteers; the date and weight regexes run only on
-    digit-led tokens.  Outputs are ``pc.take`` gathers over the input
-    columns and the label table — no Python loop over rows or tokens, no
-    pandas.
-    """
-    # null text = no content (never the string 'None')
-    texts = pc.fill_null(batch.column("text").cast(pa.string()), "")
-    sp = pc.split_pattern(texts, " ")
-    flat = pc.list_flatten(sp)
-    counts = pc.list_value_length(sp).to_numpy().astype(np.int64)
-
-    n = int(counts.sum())
-    starts = np.cumsum(counts) - counts
-    pos = np.arange(n, dtype=np.int64) - np.repeat(starts, counts)
-
-    # char spans: within-turn cumsum of (len+1) = global cumsum - segment base
-    tok_len = pc.utf8_length(flat).to_numpy().astype(np.int64)
-    L = tok_len + 1
-    c = np.cumsum(L)
-    base = np.repeat(c[starts] - L[starts], counts)
-    span_start = c - base - L
-
-    low = pc.utf8_lower(flat)
+def _value_codes(values: pa.StringArray) -> np.ndarray:
+    """Each token's code by the rules that read the token alone, in
+    priority order (label token, date, weight, gazetteer); ``_DATE`` marks
+    a date, whose code the previous token decides."""
+    low = pc.utf8_lower(values)
     label = _match_code(low, _LABEL_TOKENS, _LABEL_CODE)
-    digit_led = _digit_led(flat)
-    is_date = _regex_hits(flat, digit_led, _DATE_PAT)
-    is_weight = _regex_hits(low, digit_led, _WEIGHT_PAT)
-
-    # previous token's label code, shifted within each turn
-    prev_label = np.concatenate(([0], label[:-1])) * (pos > 0)
-
-    # first match wins: label token, date (anchored or OTHER), weight, gazetteer
-    code = np.where(
+    digit_led = _digit_led(values)
+    return np.where(
         label > 0,
         label,
         np.where(
-            is_date,
-            _DATE_CODE[prev_label],
-            np.where(is_weight, 6, _match_code(flat, _GAZETTEER, _GAZETTEER_CODE)),
+            _regex_hits(values, digit_led, _DATE_PAT),
+            _DATE,
+            np.where(
+                _regex_hits(low, digit_led, _WEIGHT_PAT),
+                _CODE["WEIGHT"],
+                _match_code(values, _GAZETTEER, _GAZETTEER_CODE),
+            ),
         ),
-    )
-    keep = np.flatnonzero(code)
-    row = np.repeat(np.arange(batch.num_rows), counts)[keep]
+    ).astype(np.int8)
+
+
+class Tokens(NamedTuple):
+    """The tokens of a column of texts, in text order.  Token ``i`` is
+    ``values[index[i]]``, text ``r``'s tokens start at ``starts[r]``
+    (``counts[r]`` of them, at least one: an empty or null text is one
+    empty token) and ``code[i]`` indexes :data:`LABELS` (0 = OTHER)."""
+
+    values: pa.StringArray
+    index: np.ndarray
+    starts: np.ndarray
+    counts: np.ndarray
+    code: np.ndarray
+
+    def text_of(self, tokens: np.ndarray) -> np.ndarray:
+        """The text each of the token indices ``tokens`` belongs to."""
+        return np.searchsorted(self.starts, tokens, side="right") - 1
+
+
+def classify_tokens(texts: pa.Array) -> Tokens:
+    """Split texts on single spaces and label every token by the rules of
+    :mod:`..functions.rules`.  Lowering, both ``index_in`` probes and the
+    regexes run once per distinct token (``dictionary_encode``); only the
+    gather back and the previous-token date rule run per token."""
+    # null text = no content (never the string 'None')
+    sp = pc.split_pattern(pc.fill_null(texts.cast(pa.string()), ""), " ")
+    counts = pc.list_value_length(sp).to_numpy().astype(np.int64)
+    starts = np.cumsum(counts) - counts
+    encoded = pc.dictionary_encode(pc.list_flatten(sp))
+    index = encoded.indices.to_numpy()
+    code = _value_codes(encoded.dictionary)[index]
+    date = np.flatnonzero(code == _DATE)
+    tok = Tokens(encoded.dictionary, index, starts, counts, code)
+    if len(date):
+        first = starts[tok.text_of(date)] == date
+        code[date] = np.where(first, 0, _DATE_AFTER[code[date - 1]])
+    return tok
+
+
+def _classify_batch(batch: pa.RecordBatch) -> pa.RecordBatch:
+    """Batch of turns ``(conv_id, turn_idx, text)`` -> the ``mentions``
+    columns, OTHER tokens dropped: :func:`classify_tokens`, then char
+    spans from the within-turn running sum of token lengths."""
+    tok = classify_tokens(batch.column("text"))
+    tok_len = pc.utf8_length(tok.values).to_numpy().astype(np.int64)[tok.index]
+    # char spans: within-turn cumsum of (len+1) = global cumsum - segment base
+    step = tok_len + 1
+    c = np.cumsum(step)
+    span_start = c - np.repeat(c[tok.starts] - step[tok.starts], tok.counts) - step
+
+    keep = np.flatnonzero(tok.code)
+    row = tok.text_of(keep)
     return pa.RecordBatch.from_arrays(
         [
             pc.take(batch.column("conv_id"), row),
             pc.take(batch.column("turn_idx"), row).cast(pa.int32()),
-            pa.array(pos[keep], pa.int32()),
+            pa.array(keep - tok.starts[row], pa.int32()),
             pa.array(span_start[keep], pa.int32()),
             pa.array((span_start + tok_len)[keep], pa.int32()),
-            pc.take(flat, keep),
-            pc.take(_LABELS, code[keep]),
+            pc.take(tok.values, tok.index[keep]),
+            pc.take(LABELS, tok.code[keep]),
         ],
         names=MENTION_SCHEMA.fieldNames(),
     )

@@ -6,11 +6,15 @@ texts in index order.  Here that is a whole-subject Arrow join emitting the
 ``triples`` table ``(subj, pred, obj, conv_id)``: one hash exchange on the
 subject, a partition-local sort that clusters it, then one ``mapInArrow``
 kernel (``arrow_groups.map_groups``) that re-cuts the batch stream so every
-subject is whole in one batch, sorts that batch on ``(subj, pred, turn_idx, pos, surface)`` and ' '-joins
-every (subj, pred) run with one pyarrow ``binary_join``.  The flagship
-(``plans/pipeline.extract_triples_df``) runs the same kernel over turns keyed
-by conv_id with the detector inside it; :func:`materialize_triples` runs it
-over a ``mentions`` table.  The writer partitions by ``(pred, subj_bucket)``
+subject is whole in one batch and joins that batch with
+:func:`_join_sorted`.  The join sorts integer keys only — (subject run,
+pred code, turn_idx, pos), with the surface compared only where all four
+tie (duplicate (conv_id, turn_idx) rows) — and ' '-joins every
+(subj, pred) run with one pyarrow ``binary_join``; subj and pred strings
+are gathered once per triple.  The flagship
+(``plans/pipeline.extract_triples_df``) keys the detector's tokens directly;
+:func:`materialize_triples` maps a ``mentions`` table's subj runs and pred
+strings onto the same keys.  The writer partitions by ``(pred, subj_bucket)``
 with an explicit salt column for hot subjects (north rule: skew handled
 explicitly, not left to AQE alone).
 
@@ -29,7 +33,7 @@ mega-partition.
 
 from __future__ import annotations
 
-from collections.abc import Callable, Iterator
+from collections.abc import Iterator
 
 import numpy as np
 import pyarrow as pa
@@ -39,16 +43,10 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.rules import OTHER
-from .arrow_groups import grouped_batches, map_groups, run_starts
+from .arrow_groups import BatchFn, grouped_batches, map_groups, run_starts
 
 SUBJ_BUCKETS = 64
 SALT_BUCKETS = 8
-
-_KEY = ("subj", "pred")
-# the order the reference joins a label's texts in; ``surface`` closes it
-# so duplicate (turn_idx, pos) rows join deterministically
-_ORDER = [(c, "ascending") for c in (*_KEY, "turn_idx", "pos", "surface")]
-
 
 def _join_runs(surface: pa.Array, starts: np.ndarray, end: int) -> pa.Array:
     """' '-join of ``surface[starts[i]:starts[i+1]]``, the last run ending at
@@ -62,45 +60,105 @@ def _join_runs(surface: pa.Array, starts: np.ndarray, end: int) -> pa.Array:
     return pc.binary_join(runs, " ")
 
 
-def _join_sorted(m: pa.RecordBatch) -> pa.RecordBatch:
-    """(subj, pred, obj, conv_id), one row per (subj, pred) of ``m``, a batch
-    of (subj, pred, turn_idx, pos, surface) rows holding whole subjects in
-    any order: sort in-batch (nulls first, as Spark sorts), then ' '-join
-    every run of the key."""
-    m = m.take(pc.sort_indices(m, sort_keys=_ORDER, null_placement="at_start"))
-    starts = np.concatenate(([0], run_starts(m, _KEY)))
-    subj, pred = m.select(_KEY).take(starts).columns
-    obj = _join_runs(m.column("surface"), starts, m.num_rows)
+def int_keys(col: pa.Array) -> list[np.ndarray]:
+    """Sort keys ordering an integer column as Spark sorts it, nulls first:
+    the values, preceded by a validity key when the column holds nulls."""
+    values = pc.fill_null(col, 0).to_numpy().astype(np.int64)
+    if not col.null_count:
+        return [values]
+    return [pc.is_valid(col).to_numpy(zero_copy_only=False), values]
+
+
+def _group_ids(subj: pa.Array) -> np.ndarray:
+    """Run number of every row of a column clustered on its values."""
+    gid = np.zeros(len(subj), dtype=np.int64)
+    gid[run_starts(pa.RecordBatch.from_arrays([subj], ["subj"]), ("subj",))] = 1
+    return np.cumsum(gid)
+
+
+def _changes(k: np.ndarray) -> np.ndarray:
+    """``k[i + 1] != k[i]`` for every adjacent pair."""
+    return k[1:] != k[:-1]
+
+
+def _join_sorted(
+    subj: pa.Array,
+    at: np.ndarray,
+    pred: np.ndarray,
+    preds: pa.Array,
+    order: list[np.ndarray],
+    surface: pa.Array,
+    surface_at: np.ndarray,
+) -> pa.RecordBatch:
+    """The triples of keyed mentions, one per (subject, pred) run, ordered
+    by subject run, then pred.  Mention ``i`` belongs to the subject
+    ``subj[at[i]]`` (``subj`` clustered on its values), has the pred
+    ``preds[pred[i]]`` (codes ordered as the strings), the order keys
+    ``order[k][i]`` (most significant first) and the surface
+    ``surface[surface_at[i]]``.  A run's obj ' '-joins its surfaces in key
+    order; mentions equal on every key are ordered by surface, nulls first."""
+    keys = [_group_ids(subj)[at], pred, *order]
+    idx = np.lexsort(keys[::-1])
+    changed = [_changes(k[idx]) for k in keys]
+    run = np.concatenate(([True], changed[0] | changed[1]))
+    if not np.logical_or.reduce(changed).all():
+        rank = pc.rank(surface, null_placement="at_start", tiebreaker="dense")
+        keys.append(rank.to_numpy()[surface_at])
+        idx = np.lexsort(keys[::-1])
+    starts = np.flatnonzero(run)
+    subj_out = subj.take(at[idx[starts]])
     return pa.RecordBatch.from_arrays(
-        [subj, pred, obj, subj], names=["subj", "pred", "obj", "conv_id"]
+        [
+            subj_out,
+            preds.take(pred[idx[starts]]),
+            _join_runs(surface.take(surface_at[idx]), starts, len(idx)),
+            subj_out,
+        ],
+        names=["subj", "pred", "obj", "conv_id"],
     )
 
 
-ToMentions = Callable[[pa.RecordBatch], pa.RecordBatch]
-
-
-def _joined(m: pa.RecordBatch) -> pa.RecordBatch | None:
-    return _join_sorted(m) if m.num_rows else None
+def _mention_triples(m: pa.RecordBatch) -> pa.RecordBatch | None:
+    """:func:`_join_sorted` over a batch of (subj, pred, turn_idx, pos,
+    surface) rows holding whole subjects, clustered, with non-null preds:
+    each pred string is coded by its rank among the batch's distinct
+    preds."""
+    if not m.num_rows:
+        return None
+    encoded = pc.dictionary_encode(m.column("pred"))
+    by_string = pc.sort_indices(encoded.dictionary).to_numpy()
+    rank = np.empty(len(by_string), dtype=np.int64)
+    rank[by_string] = np.arange(len(by_string))
+    rows = np.arange(m.num_rows)
+    return _join_sorted(
+        m.column("subj"),
+        rows,
+        rank[encoded.indices.to_numpy()],
+        encoded.dictionary.take(by_string),
+        [*int_keys(m.column("turn_idx")), *int_keys(m.column("pos"))],
+        m.column("surface"),
+        rows,
+    )
 
 
 def _triples_kernel(
-    batches: Iterator[pa.RecordBatch], key: str, to_mentions: ToMentions
+    batches: Iterator[pa.RecordBatch], key: str, to_mentions: BatchFn
 ) -> Iterator[pa.RecordBatch]:
     """Triples from a batch stream clustered on the subject column ``key``:
     re-cut into whole subjects, map each batch to (subj, pred, turn_idx,
     pos, surface) rows with ``to_mentions``, join in-batch."""
-    return grouped_batches(batches, key, lambda b: _joined(to_mentions(b)))
+    return grouped_batches(batches, key, lambda b: _mention_triples(to_mentions(b)))
 
 
-def triples_by_group(rows: DataFrame, key: str, to_mentions: ToMentions) -> DataFrame:
+def triples_by_group(rows: DataFrame, key: str, to_triples: BatchFn) -> DataFrame:
     """The plan behind both triple entry points: :func:`map_groups` on the
-    subject column ``key`` running :func:`_triples_kernel`'s per-batch
-    step.  Every (subj, pred) run is complete in the batch that joins it."""
+    subject column ``key``, ``to_triples`` mapping each batch of whole
+    subjects to its (subj, pred, obj, conv_id) rows."""
     subj_t = rows.schema[key].dataType.simpleString()
     return map_groups(
         rows,
         key,
-        lambda b: _joined(to_mentions(b)),
+        to_triples,
         f"subj {subj_t}, pred string, obj string, conv_id {subj_t}",
     )
 
@@ -117,7 +175,7 @@ def materialize_triples(mentions: DataFrame) -> DataFrame:
         "pos",
         "surface",
     )
-    return triples_by_group(keyed, "subj", lambda b: b)
+    return triples_by_group(keyed, "subj", _mention_triples)
 
 
 def with_partition_keys(triples: DataFrame) -> DataFrame:

@@ -4,29 +4,43 @@ The Spark restatement of the reference's single-process chain
 (``scripts/inference_kie.py:183-246``: detect -> recognize -> label -> emit,
 one document at a time).  On the Arrow engine the turns cross into Python
 once: scan -> ``repartition(conv_id)`` -> partition-local sort on conv_id ->
-one ``mapInArrow`` that re-cuts the stream into whole conversations, runs the
-vectorized mention detector and ' '-joins each label's surfaces in-batch.
-The shuffle carries turns, not mentions.  The native engine detects in JVM
-column expressions and feeds ``triples.materialize_triples``.
+one ``mapInArrow`` that re-cuts the stream into whole conversations,
+labels every token (``mention_detect.classify_tokens``) and ' '-joins each
+label's surfaces in-batch (``triples._join_sorted``) on integer keys; no
+mentions table, span or per-mention string column is built.  The shuffle
+carries turns, not mentions.  The native engine detects in JVM column
+expressions and feeds ``triples.materialize_triples``.
 """
 
 from __future__ import annotations
 
+import numpy as np
 import pyarrow as pa
 
 from pyspark.sql import DataFrame
 
-from ..operators.mention_detect import _classify_batch, detect_mentions_native
-from ..operators.triples import materialize_triples, triples_by_group
+from ..operators.mention_detect import LABELS, classify_tokens, detect_mentions_native
+from ..operators.triples import _join_sorted, int_keys, materialize_triples, triples_by_group
 
 
-def _turn_mentions(turns: pa.RecordBatch) -> pa.RecordBatch:
-    """Detector output keyed for the triple join (subj = conv_id,
-    pred = mention_type)."""
-    m = _classify_batch(turns)
-    return pa.RecordBatch.from_arrays(
-        [m.column(c) for c in ("conv_id", "mention_type", "turn_idx", "pos", "surface")],
-        names=["subj", "pred", "turn_idx", "pos", "surface"],
+def _turn_triples(turns: pa.RecordBatch) -> pa.RecordBatch | None:
+    """The triples of a batch of turns ``(conv_id, turn_idx, text)``
+    holding whole conversations, clustered: every non-OTHER token keyed by
+    (conversation run, label code, turn_idx, pos) straight from
+    :func:`classify_tokens`, then :func:`_join_sorted`."""
+    tok = classify_tokens(turns.column("text"))
+    keep = np.flatnonzero(tok.code)
+    if not len(keep):
+        return None
+    row = tok.text_of(keep)
+    return _join_sorted(
+        turns.column("conv_id"),
+        row,
+        tok.code[keep],
+        LABELS,
+        [*(k[row] for k in int_keys(turns.column("turn_idx"))), keep - tok.starts[row]],
+        tok.values,
+        tok.index[keep],
     )
 
 
@@ -43,4 +57,4 @@ def extract_triples_df(transcripts: DataFrame, engine: str = "arrow") -> DataFra
     if engine != "arrow":
         return materialize_triples(detect_mentions_native(transcripts))
     turns = transcripts.select("conv_id", "turn_idx", "text")
-    return triples_by_group(turns, "conv_id", _turn_mentions)
+    return triples_by_group(turns, "conv_id", _turn_triples)

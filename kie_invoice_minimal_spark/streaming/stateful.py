@@ -8,7 +8,7 @@ emit an updated summary row per conversation per trigger.
 
 This is the ``applyInPandasWithState`` pattern: grouped by conv_id, state =
 (n_turns_seen, n_mentions, max_turn_idx), batch-vectorized update (the
-detector's Arrow classifier runs on the whole group batch), timeout-free.
+detector's token classifier runs on the whole group batch), timeout-free.
 
 Scale notes: state size is O(active conversations) and each value is three
 ints; group key = conv_id so the shuffle matches the batch pipeline's
@@ -19,6 +19,7 @@ from __future__ import annotations
 
 from collections.abc import Iterable, Iterator
 
+import numpy as np
 import pandas as pd
 import pyarrow as pa
 
@@ -26,7 +27,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 from ..operators.arrow_groups import worker_setup
-from ..operators.mention_detect import _classify_batch
+from ..operators.mention_detect import classify_tokens
 
 STATE_SCHEMA = "n_turns bigint, n_mentions bigint, max_turn bigint"
 OUTPUT_SCHEMA = (
@@ -47,10 +48,8 @@ def _update(
         n_turns += len(pdf)
         if len(pdf):
             max_turn = max(max_turn, int(pdf["turn_idx"].max()))
-            turns = pa.RecordBatch.from_pandas(
-                pdf[["conv_id", "turn_idx", "text"]], preserve_index=False
-            )
-            n_mentions += _classify_batch(turns).num_rows
+            text = pa.Array.from_pandas(pdf["text"], type=pa.string())
+            n_mentions += int(np.count_nonzero(classify_tokens(text).code))
     state.update((n_turns, n_mentions, max_turn))
     yield pd.DataFrame(
         {

@@ -4,16 +4,24 @@ and flag anti-patterns (missing pushdown, full-width scans, unexpected
 exchanges, row-at-a-time Python).
 
 Usage: python scripts/explain_audit.py [query_name ...]   (default: headline set)
+       python scripts/explain_audit.py --table      (the PLANS.md table body)
+       python scripts/explain_audit.py --dump DIR   (DIR/<query>.txt, one masked
+                                                     plan per registered query)
+
+Two ``--dump`` directories of the same tree are equal (``diff -r``): the
+dump masks what changes from run to run, so a plan-diff between two trees
+shows only the plans a change moved.
 """
 
 from __future__ import annotations
 
 import io
+import os
 import re
 import sys
 from contextlib import redirect_stdout
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import __spark_entry__ as entrymod  # noqa: E402
 from kie_invoice_minimal_spark.session import get_spark  # noqa: E402
@@ -35,6 +43,17 @@ def plan_of(df) -> str:
     with redirect_stdout(buf):
         df.explain("formatted")
     return buf.getvalue()
+
+
+def mask_plan(plan: str) -> str:
+    """``plan`` with what differs between two runs of the same tree masked:
+    expression ids (``conv_id#123``), exchange plan ids, RDD ids (which
+    count the RDDs the session made before) and the random suffix of
+    ``mkdtemp`` snapshot roots (``kie_staged_el_ab3_x9kq``)."""
+    plan = re.sub(r"#\d+", "#_", plan)
+    plan = re.sub(r"plan_id=\d+", "plan_id=_", plan)
+    plan = re.sub(r"RDD\[\d+\]", "RDD[_]", plan)
+    return re.sub(r"(kie_staged_[a-z]+_)[a-z0-9_]{8}", r"\1XXXXXXXX", plan)
 
 
 def audit(name: str, plan: str) -> list[str]:
@@ -77,6 +96,12 @@ def main() -> None:
         print("|---|---|---|---|---|")
         for name, fn in qs.items():
             print(table_row(name, plan_of(fn(spark, SF_DIR))), flush=True)
+        return
+    if args and args[0] == "--dump":
+        os.makedirs(args[1], exist_ok=True)
+        for name, fn in qs.items():
+            with open(os.path.join(args[1], f"{name}.txt"), "w") as f:
+                f.write(mask_plan(plan_of(fn(spark, SF_DIR))))
         return
     names = args or HEADLINE
     for name in names:

@@ -639,11 +639,9 @@ def test_pagerank_overflow_raises(spark):
 def test_label_propagation_overflow_raises(spark):
     """A label's weight sum past int64 must fail the job: a doubled
     (a, b, 2^62) edge sums to 2^63 (a wrapped sw would flip the argmax).
-    The score table feeds two stages; when AQE sees both fail it raises
-    STAGE_MATERIALIZATION_MULTIPLE_FAILURES, which reaches Python as a
-    Py4JJavaError carrying the same ARITHMETIC_OVERFLOW causes."""
+    Each round's scores feed one aggregate, so one stage fails and the
+    error reaches Python as pyspark's ArithmeticException."""
     import pytest
-    from py4j.protocol import Py4JJavaError
     from pyspark.errors import ArithmeticException
 
     from kie_invoice_minimal_spark.operators.graph_analytics import (
@@ -655,9 +653,7 @@ def test_label_propagation_overflow_raises(spark):
         [("a", "b", big), ("a", "b", big), ("b", "a", big), ("b", "a", big)],
         "src string, dst string, w long",
     )
-    with pytest.raises(
-        (ArithmeticException, Py4JJavaError), match="ARITHMETIC_OVERFLOW"
-    ):
+    with pytest.raises(ArithmeticException, match="ARITHMETIC_OVERFLOW"):
         label_propagation(e).collect()
 
 

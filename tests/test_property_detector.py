@@ -12,7 +12,7 @@ from kie_invoice_minimal_spark.oracle import detect_mentions
 
 import pyarrow as pa
 
-TOKENS = st.sampled_from(
+TOKEN_POOL = (
     [
         "NSX:", "nsx", "HSD:", "exp", "KL:", "weight",
         "1/2023", "2/12/2025", "13/2024", "500g", "2kg", "1.5l", "0oz",
@@ -21,6 +21,7 @@ TOKENS = st.sampled_from(
         "500G", "2KG", "1.5L", "12abc", "1/2024x", "x1/2024", "١٢/2025",
     ]
 )
+TOKENS = st.sampled_from(TOKEN_POOL)
 TEXTS = st.lists(TOKENS, min_size=0, max_size=12).map(" ".join)
 
 
