@@ -165,12 +165,12 @@ def _graph_cte(mentions_sql: str, cap: int = COMENTION_CAP) -> str:
     top-cap per conversation; value-equal to the Spark side's two-level
     salted selection).
 
-    Every level is AS MATERIALIZED (r7): DuckDB inlines plain CTEs, and
-    the pagerank/kcore/LPA oracles reference ``e`` from every unrolled
-    round — inlined, each round re-evaluated the whole mention extraction
-    (the sf0.001 pagerank oracle alone took 15 s; 0.2 s materialized).
-    Same hazard — and same fix — kcore_sql/communities_sql already
-    documented for their per-round CTEs; a hint only, values unchanged."""
+    Every level is AS MATERIALIZED: DuckDB inlines plain CTEs, and the
+    pagerank/kcore/LPA oracles reference ``e`` from every unrolled round,
+    so an inlined prefix re-evaluates the whole mention extraction per
+    round (the sf0.001 pagerank oracle took 15 s inlined, 0.2 s
+    materialized).  kcore_sql/communities_sql materialize their per-round
+    CTEs for the same reason; the hint changes no value."""
     types = ", ".join(f"'{t}'" for t in PR_TYPES)
     return f"""m AS MATERIALIZED ({mentions_sql}),
 cm AS MATERIALIZED (
@@ -532,9 +532,8 @@ def khop_counts(e: DataFrame, cap: int = KHOP_CAP) -> DataFrame:
     (capped_adjacency): both hops traverse each node's top-``cap``
     neighbors by weight, so the wedge self-join materializes at most
     |capped_edges| * cap rows — bounded, hub-proof — instead of the
-    uncapped sum(deg^2) that melts through a celebrity entity (the r4
-    version's flagged scale hazard; its docstring promised this cap
-    without implementing it).  EXACT whenever every degree <= cap
+    uncapped sum(deg^2) that melts through a celebrity entity.  EXACT
+    whenever every degree <= cap
     (n_2hop is monotone non-decreasing in cap, so above the cap it is a
     deterministic lower bound over the strongest-weighted paths).  The
     distance-1 anti-join runs against the FULL edge set — a direct
@@ -832,11 +831,11 @@ def kg_canonical_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..sources.transcripts import transcripts_from_documents
     from .mention_detect import detect_mentions_arrow
 
-    # detector output materialized ONCE (r9): m feeds BOTH the EL stage
-    # and the resolved-mention pairing, which execute as separate jobs
-    # (the EL/CC checkpoints are job boundaries), so without the cut the
-    # Arrow detector re-ran per consumer.  This is the in-query analog of
-    # the mentions snapshot the staged variant persists to parquet.
+    # detector output materialized once: m feeds both the EL stage and
+    # the resolved-mention pairing, which run as separate jobs (the EL/CC
+    # checkpoints are job boundaries), so without the cut the Arrow
+    # detector would run once per consumer.  This is the in-query analog
+    # of the mentions snapshot the staged variant persists to parquet.
     m = detect_mentions_arrow(
         transcripts_from_documents(spark, sf_dir)
     ).localCheckpoint()
@@ -1033,10 +1032,9 @@ def kg_conv_fanout(spark, sf_dir: str) -> DataFrame:
     of per-conversation DISTINCT NAME/BRAND surface counts — the
     conversation-side companion to kg_degree_distribution (which monitors
     node degrees): this is the monitor that tells whether COMENTION_CAP
-    still covers the fan-out mass.  Operationally it closes the loop on
-    the r7 cap refund: capped_conv_surfaces skips its top-N windows when
-    the max fan-out is ≤ cap, and this histogram is how an operator
-    WATCHES that condition corpus-wide — n_over_cap > 0 in any bucket
+    still covers the fan-out mass.  capped_conv_surfaces skips its top-N
+    windows when the max fan-out is ≤ cap, and this histogram is how an
+    operator WATCHES that condition corpus-wide — n_over_cap > 0 in any bucket
     means the skew path (and its truncation-to-top-cap semantics) is
     live, a new high bucket appearing means an agent loop started
     spamming entity lists.  bucket = floor(log2(d)) via length(bin(d))−1,
@@ -2027,10 +2025,9 @@ def random_walks(
 
     from .text_analysis import mdhash_spark
 
-    # (measured non-fix: repartition("src") before this checkpoint does
-    # NOT spare the per-step adjacency exchange — LogicalRDD drops the
-    # partitioning, verified on the step join's executedPlan — so the
-    # plain checkpoint stays)
+    # no repartition("src") before this checkpoint: the checkpoint's
+    # LogicalRDD drops the partitioning, so it would not spare the
+    # per-step adjacency exchange (seen on the step join's executedPlan)
     adj = _indexed_adjacency(e, cap).localCheckpoint()
     cur = (
         adj.select("src")
@@ -2077,10 +2074,9 @@ def random_walks(
         # branch re-states the whole step prefix — correctness would
         # then lean on runtime ReusedExchange instead of the plan.
         # The frontier is bounded at N·walks rows, so the cut is tiny.
-        # The FINAL step is not cut (r9): it feeds only the union, so
-        # its single-consumer lineage runs once either way and the
-        # eager checkpoint job was pure overhead — one job less on the
-        # serial ladder the r8 VERDICT flagged (its item 5).
+        # The final step is not cut: it feeds only the union, so its
+        # single-consumer lineage runs once either way and a checkpoint
+        # would only add one eager job to the serial step ladder.
         if t < length:
             cur = cur.localCheckpoint()
         out.append(cur)

@@ -6,10 +6,13 @@ the north rule forbids per-row Python), AQE is on for runtime re-planning
 loop), ANSI mode is pinned on (integer overflow fails the query instead of
 wrapping; Spark 4's default, stated so that a cluster default cannot turn it
 off, and checked by ``require_ansi`` where an operator's exact-integer
-arithmetic relies on it), and shuffle partitions default to a
-local-mode-friendly count that callers override for cluster runs.  The
-Python workers' per-task import cost is handled where the crossings are
-made (``operators/arrow_groups``), not by a session option.
+arithmetic relies on it), Tungsten pages are a fixed ``PAGE_SIZE``
+instead of Spark's heap-derived size (64 MiB at the 8g heap and 2-4
+slots, committed by every sorting or aggregating task however small its
+partition), and shuffle partitions default to a local-mode-friendly count
+that callers override for cluster runs.  ``extra_conf`` overrides any of
+these.  The Python workers' per-task import cost is handled where the
+crossings are made (``operators/arrow_groups``), not by a session option.
 """
 
 from __future__ import annotations
@@ -23,6 +26,17 @@ from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 DEFAULT_SHUFFLE_PARTITIONS = 32
+
+# Tungsten page size (``spark.buffer.pageSize``) for every sort and
+# aggregate.  Spark's default derives it from the heap (execution memory /
+# slots / 16, clamped to 1-64 MiB): 64 MiB at the 8g heap and 2-4 slots, so
+# every sorting task zero-filled a 64 MiB page (a G1 humongous object that
+# goes straight into RSS) for a partition of a few MB.  A fixed size keeps
+# that cost the same on every box; the 8192-entry page table still lets a
+# task address 32 GiB.  4 MiB less the 16-byte long[] header, as Spark
+# trims its own default under G1 (but not a configured size): a page then
+# fits one 4 MiB region of the 8g heap instead of taking two.
+PAGE_SIZE = f"{(4 << 20) - 16}b"
 
 # Longest wait for an Observation after its action returned.  The metrics
 # arrive through the asynchronous listener bus, normally within
@@ -70,10 +84,7 @@ def get_spark(
         # latency-bound graph family is flat at 256k but pays 8-13% at
         # 128k (many tiny sequential stages x more tasks) — 256k is the
         # measured optimum of that trade.
-        .config(
-            "spark.sql.adaptive.coalescePartitions.minPartitionSize",
-            os.environ.get("SPARK_GRAFT_AQE_MIN_PARTITION_SIZE", "256k"),
-        )
+        .config("spark.sql.adaptive.coalescePartitions.minPartitionSize", "256k")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
         # ANSI mode (Spark 4's default, pinned): integer overflow and invalid
@@ -82,6 +93,7 @@ def get_spark(
         # Deterministic session timezone so ts-derived values hash stably.
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "8g"))
+        .config("spark.buffer.pageSize", PAGE_SIZE)
         .config("spark.ui.enabled", "false")
     )
     # shuffle spill dir: prefer tmpfs when available (models the per-executor

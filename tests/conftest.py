@@ -22,6 +22,32 @@ def spark():
 
 
 @pytest.fixture
+def stage_peak_memory(spark):
+    """``peak(group) -> bytes``: the largest ``peakExecutionMemory`` over
+    the stages of the jobs Spark ran under job group ``group``.  Read from
+    the status store (which the UI-less session keeps too) after draining
+    the listener bus, which delivers stage metrics asynchronously; a
+    skipped stage reports 0."""
+    sc = spark.sparkContext
+
+    def peak(group: str) -> int:
+        jsc = sc._jsc.sc()
+        jsc.listenerBus().waitUntilEmpty()
+        tracker = sc.statusTracker()
+        store = jsc.statusStore()
+        return max(
+            (
+                store.lastStageAttempt(sid).peakExecutionMemory()
+                for jid in tracker.getJobIdsForGroup(group)
+                for sid in tracker.getJobInfo(jid).stageIds
+            ),
+            default=0,
+        )
+
+    return peak
+
+
+@pytest.fixture
 def both_paths(monkeypatch):
     """``for path in both_paths(): ...`` runs the loop body twice: as
     "driver" with every gate constant at its value, and as "distributed"
