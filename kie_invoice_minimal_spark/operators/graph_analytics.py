@@ -58,6 +58,31 @@ COMENTION_CAP = 32  # per-conversation distinct-surface cap before pairing
 CAP_PATH_STATS = {"probes": 0, "common": 0, "skew": 0}
 
 
+def top_n(df: DataFrame, key: str, order: list, n: int, rank: str = "rn") -> DataFrame:
+    """``df`` cut to its first ``n`` rows per ``key`` in ``order``, with
+    each kept row's 1-based position in column ``rank``: one
+    ``row_number()`` window and a ``rank <= n`` filter — every top-N cap
+    in the engine goes through here.
+
+    No hot key sorts its whole group in one task: Spark's optimizer
+    (InferWindowGroupLimit) plans the filter as a Partial
+    WindowGroupLimit that keeps each map task's top-``n`` per key before
+    the exchange, then a Final one after it, so a key ships at most
+    ``n`` rows per map task.  The engine applies that limit only when
+    - the filter sits directly on the rank column (nothing between the
+      window and the filter, as here);
+    - ``n`` ≤ ``spark.sql.optimizer.windowGroupLimitThreshold`` (1000 by
+      default; the largest ``n`` here is relational_ext.SAMPLE_K = 256);
+    - the input is partitioned on more than ``key``, so a hot key's rows
+      are spread over map tasks (on input already clustered by ``key``
+      the Partial limit has no exchange to sit before).  Every caller's
+      input is a groupBy/distinct on (key, item), a checkpoint or a file
+      scan, except capped_conv_surfaces' semi-join (see there).
+    tests/test_plan_properties.py pins the Partial/Final pair."""
+    w = Window.partitionBy(key).orderBy(*order)
+    return df.withColumn(rank, F.row_number().over(w)).filter(F.col(rank) <= n)
+
+
 def capped_conv_surfaces(mentions: DataFrame, cap: int = COMENTION_CAP) -> DataFrame:
     """(conv_id, surface): each conversation's distinct NAME/BRAND surfaces
     truncated to its top-``cap`` by (mention count DESC, surface ASC) — the
@@ -82,14 +107,16 @@ def capped_conv_surfaces(mentions: DataFrame, cap: int = COMENTION_CAP) -> DataF
     top-N window enters the plan, and the pairing self-join's two branches
     read one materialization instead of re-running the detector lineage.
 
-    Skew path: only the over-cap conversations take the windows.  Their
-    conv_ids (a small, localCheckpoint'd set) are semi-joined to a
-    two-level salted top-N — per-(conv, salt cell) top-cap, then top-cap
-    over ≤ salt·cap survivors, equal to the global top-cap — so no hot
-    conversation sorts its whole vocabulary in one task; the rest bypass
-    via an anti-join, and the two branches union.  AQE may broadcast the
-    over-cap set at runtime; it is not forced, because a corpus where every
-    conversation is hot would make a forced broadcast exhaust the driver.
+    Skew path: only the over-cap conversations take the window.  Their
+    conv_ids (a small, localCheckpoint'd set) are semi-joined to one
+    top-cap window (top_n); the rest bypass via an anti-join, and the two
+    branches union.  When the semi-join shuffles on conv_id, that shuffle
+    already gathers each over-cap conversation in one task, so the window
+    adds no exchange and Spark plans only the Final group limit: the task
+    sorts one conversation's distinct surfaces, a count its length
+    bounds.  AQE may broadcast the over-cap set at runtime; it is not
+    forced, because a corpus where every conversation is hot would make a
+    forced broadcast exhaust the driver.
     Value-equal to the oracle's single corpus-wide window; CAP_PATH_STATS
     counts the probes and the routing (pinned by test_r8_cap_routing.py)."""
     cnt = (
@@ -118,20 +145,9 @@ def capped_conv_surfaces(mentions: DataFrame, cap: int = COMENTION_CAP) -> DataF
     )
     below = cnt.join(over, "conv_id", "left_anti").select("conv_id", "surface")
     hot = cnt.join(over, "conv_id", "left_semi")
-    w1 = Window.partitionBy(
-        "conv_id", F.pmod(F.xxhash64("surface"), F.lit(_KHOP_SALT))
-    ).orderBy(F.desc("cnt"), F.asc("surface"))
-    lvl1 = (
-        hot.withColumn("rn", F.row_number().over(w1))
-        .filter(F.col("rn") <= cap)
-        .drop("rn")
-    )
-    w2 = Window.partitionBy("conv_id").orderBy(F.desc("cnt"), F.asc("surface"))
-    capped_hot = (
-        lvl1.withColumn("rn", F.row_number().over(w2))
-        .filter(F.col("rn") <= cap)
-        .select("conv_id", "surface")
-    )
+    capped_hot = top_n(
+        hot, "conv_id", [F.desc("cnt"), F.asc("surface")], cap
+    ).select("conv_id", "surface")
     return below.unionByName(capped_hot)
 
 
@@ -161,9 +177,9 @@ def comention_edges(mentions: DataFrame) -> DataFrame:
 
 def _graph_cte(mentions_sql: str, cap: int = COMENTION_CAP) -> str:
     """Shared DuckDB CTE prefix (m, cm, cs, e) for every graph oracle —
-    mirrors capped_conv_surfaces + comention_edges exactly (single-window
-    top-cap per conversation; value-equal to the Spark side's two-level
-    salted selection).
+    mirrors capped_conv_surfaces + comention_edges exactly (one top-cap
+    window per conversation; the Spark side runs that window only over
+    the conversations above the cap, the only ones it can cut).
 
     Every level is AS MATERIALIZED: DuckDB inlines plain CTEs, and the
     pagerank/kcore/LPA oracles reference ``e`` from every unrolled round,
@@ -491,7 +507,6 @@ FROM deg d LEFT JOIN per_node p USING (node)
 # --- k-hop neighborhood sizes -------------------------------------------------------
 
 KHOP_CAP = 64  # per-node adjacency cap for the 2-hop expansion
-_KHOP_SALT = 16  # salt cells for the two-level top-K (no whole-group sort)
 
 
 def capped_adjacency(e: DataFrame, cap: int = KHOP_CAP) -> DataFrame:
@@ -499,28 +514,10 @@ def capped_adjacency(e: DataFrame, cap: int = KHOP_CAP) -> DataFrame:
     neighbors by (w DESC, dst ASC) — the deterministic degree cap that
     bounds the 2-hop wedge expansion (the same never-materialize-the-
     quadratic-neighborhood principle as the reference's E2 band prune,
-    kie_utils.py:133-137, and blocking.py's block-size caps).
-
-    Two-level selection so no hub sorts its whole adjacency in ONE task:
-    per-(src, salt-cell) top-``cap`` windows over small cells, then a
-    final top-``cap`` over <= salt*cap survivors (any global top-cap row
-    is its cell's top-cap row, so the result EQUALS the global top-cap —
-    the salt never leaks into values, and the DuckDB twin can compute the
-    same set with a single window)."""
-    w1 = Window.partitionBy(
-        "src", F.pmod(F.xxhash64("dst"), F.lit(_KHOP_SALT))
-    ).orderBy(F.desc("w"), F.asc("dst"))
-    lvl1 = (
-        e.withColumn("rn", F.row_number().over(w1))
-        .filter(F.col("rn") <= cap)
-        .drop("rn")
-    )
-    w2 = Window.partitionBy("src").orderBy(F.desc("w"), F.asc("dst"))
-    return (
-        lvl1.withColumn("rn", F.row_number().over(w2))
-        .filter(F.col("rn") <= cap)
-        .select("src", "dst")
-    )
+    kie_utils.py:133-137, and blocking.py's block-size caps).  One
+    top-``cap`` window per src (top_n), so no hub sorts its whole
+    adjacency in one task; the DuckDB twin runs the same window."""
+    return top_n(e, "src", [F.desc("w"), F.asc("dst")], cap).select("src", "dst")
 
 
 def khop_counts(e: DataFrame, cap: int = KHOP_CAP) -> DataFrame:
@@ -578,9 +575,8 @@ def kg_khop_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def khop_sql(mentions_sql: str, cap: int = KHOP_CAP) -> str:
-    """DuckDB twin — the SAME top-(w DESC, dst) adjacency cap, expressed
-    as one window per src (value-equal to the Spark side's two-level
-    selection; see capped_adjacency)."""
+    """DuckDB twin — the SAME top-(w DESC, dst) adjacency cap, one window
+    per src as in capped_adjacency."""
     return f"""
 WITH {_graph_cte(mentions_sql)},
 deg AS (SELECT src AS surface, CAST(count(*) AS BIGINT) AS n_1hop FROM e GROUP BY src),
@@ -625,9 +621,9 @@ def khop_kmv(e: DataFrame, k: int = KHOP_KMV_K) -> DataFrame:
     O(edges·k) — LINEAR in the edge count, a celebrity hub costs
     deg·k sketch rows instead of deg² wedge rows.  Estimate:
     exact n_h when a ball holds < k distinct hashes, else
-    (k−1)·2^60 DIV h_k — integer arithmetic, byte-identical in DuckDB
-    (single-level windows there; the Spark side's two-level salted
-    windows select the same set, so the salt never leaks into values).
+    (k−1)·2^60 DIV h_k — integer arithmetic, byte-identical in DuckDB.
+    Each bottom-k is one window per node (top_n by h), the same window
+    the DuckDB twin runs.
     Accuracy (rel σ ≈ 1/√(k−2) ≈ 27% at k=16) is pinned in
     tests/test_graph_analytics.py against exact ball sizes."""
     from .text_analysis import mdhash_spark
@@ -641,7 +637,7 @@ def khop_kmv(e: DataFrame, k: int = KHOP_KMV_K) -> DataFrame:
         .unionByName(nodes.select("v", mdhash_spark(F.col("v")).alias("h")))
         .distinct()
     )
-    sk1 = _bottom_k(ball1, "v", k)
+    sk1 = top_n(ball1, "v", ["h"], k).drop("rn")
     merged = (
         e.select(F.col("src").alias("u"), F.col("dst").alias("v"))
         .join(sk1, "v")
@@ -649,7 +645,7 @@ def khop_kmv(e: DataFrame, k: int = KHOP_KMV_K) -> DataFrame:
         .unionByName(sk1.select(F.col("v").alias("u"), "h"))
         .distinct()
     )
-    skm = _bottom_k_ranked(merged, "u", k)
+    skm = top_n(merged, "u", ["h"], k)
     kmv = skm.groupBy("u").agg(
         F.count("*").alias("n_h"),
         F.max(F.when(F.col("rn") == k, F.col("h"))).alias("h_k"),
@@ -666,22 +662,6 @@ def khop_kmv(e: DataFrame, k: int = KHOP_KMV_K) -> DataFrame:
         .alias("reach2_est"),
     )
     return deg.join(est, "surface").select("surface", "n_1hop", "reach2_est")
-
-
-def _bottom_k(df: DataFrame, key: str, k: int) -> DataFrame:
-    """bottom-k smallest h per key, two-level (no whole-group sort)."""
-    return _bottom_k_ranked(df, key, k).drop("rn")
-
-
-def _bottom_k_ranked(df: DataFrame, key: str, k: int) -> DataFrame:
-    w1 = Window.partitionBy(key, F.col("h") % _KHOP_SALT).orderBy("h")
-    lvl1 = (
-        df.withColumn("rn", F.row_number().over(w1))
-        .filter(F.col("rn") <= k)
-        .drop("rn")
-    )
-    w2 = Window.partitionBy(key).orderBy("h")
-    return lvl1.withColumn("rn", F.row_number().over(w2)).filter(F.col("rn") <= k)
 
 
 def kg_khop_kmv(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1620,52 +1600,6 @@ NS_FAN1 = 4  # hop-1 fan-out; small so the sf0.01 fixture exercises the
 NS_FAN2 = 2  # SAMPLING branch (degrees > fan), not just pass-through
 
 
-def _dual_sampled_adjacency(e: DataFrame, fan1: int, fan2: int) -> DataFrame:
-    """(src, dst, in1, in2): BOTH hop samples in one pass.  in1 marks
-    each node's top-``fan1`` neighbors by the md5-derived order
-    mdhash('h1', src, dst); in2 the top-``fan2`` by the 'h2'-salted
-    order — the deterministic stand-in for uniform neighbor sampling (a
-    keyed hash over the edge is uniform across re-runs AND reproducible,
-    so training batches are replayable; rand() would break the oracle
-    gate and resume).  The salts decorrelate the hop-1 and hop-2 draws
-    — with one salt hop-2 samples would be a prefix of hop-1's.
-
-    Same two-level selection as capped_adjacency so no hub sorts its
-    whole adjacency in one task — and FUSED: both samples' row_numbers
-    ride the SAME per-(src, salt-cell) exchange (windows that share
-    partitioning share the exchange; only the sort differs), level-1
-    keeps rows surviving EITHER cell-level cut, and the level-2
-    row_numbers over that union ride one exchange by src.  Counting the
-    other sample's survivors cannot perturb a sample's global top-fan:
-    a row outside its cell's top-``fan`` has >= fan cell-mates ordering
-    before it, all of which also survive level 1 — so no such row can
-    precede a true global-top-``fan`` row in the level-2 sort, and
-    row_number over the union EQUALS the single-window top-``fan`` the
-    DuckDB twin runs (the capped_adjacency argument, applied to the
-    union).  4 window exchanges -> 2."""
-    from .text_analysis import mdhash_spark
-
-    k1 = mdhash_spark(F.concat_ws("\x1f", F.lit("h1"), "src", "dst"))
-    k2 = mdhash_spark(F.concat_ws("\x1f", F.lit("h2"), "src", "dst"))
-    cell = F.pmod(F.xxhash64("dst"), F.lit(_KHOP_SALT))
-    wc1 = Window.partitionBy("src", cell).orderBy(k1.asc(), F.asc("dst"))
-    wc2 = Window.partitionBy("src", cell).orderBy(k2.asc(), F.asc("dst"))
-    surv = (
-        e.select("src", "dst")
-        .withColumn("c1", F.row_number().over(wc1))
-        .withColumn("c2", F.row_number().over(wc2))
-        .filter((F.col("c1") <= fan1) | (F.col("c2") <= fan2))
-    )
-    wg1 = Window.partitionBy("src").orderBy(k1.asc(), F.asc("dst"))
-    wg2 = Window.partitionBy("src").orderBy(k2.asc(), F.asc("dst"))
-    return surv.select(
-        "src",
-        "dst",
-        (F.row_number().over(wg1) <= fan1).alias("in1"),
-        (F.row_number().over(wg2) <= fan2).alias("in2"),
-    )
-
-
 def neighbor_sample(
     e: DataFrame, fan1: int = NS_FAN1, fan2: int = NS_FAN2
 ) -> DataFrame:
@@ -1685,15 +1619,21 @@ def neighbor_sample(
     |S1| <= N*fan1 rows joining |S2| <= N*fan2, instead of a per-seed
     re-draw whose candidate set is sum_deg(v) rows).  Revisits (w == u
     or w in S1(u)) are kept, as in GraphSAGE.  Deterministic, so
-    training batches replay byte-identically across restarts."""
-    # one eager cut: the dual sample table is consumed three times
-    # (hop-1 rows, both hop-2 join sides) and is BOUNDED at
-    # N*(fan1+fan2) rows — materialized once, the two window passes
-    # over the full edge set run once instead of per-consumer (the
-    # capped_conv_surfaces precedent)
-    both = _dual_sampled_adjacency(e, fan1, fan2).localCheckpoint()
-    s1 = both.filter(F.col("in1")).select("src", "dst")
-    s2 = both.filter(F.col("in2")).select("src", "dst")
+    training batches replay byte-identically across restarts.
+
+    Each sample is one top-``fan`` window per src (top_n), as in the
+    DuckDB twin; two windows, because a filter that ORs both ranks
+    would hide each rank from Spark's group limit."""
+    from .text_analysis import mdhash_spark
+
+    def sample(fan: int, salt: str) -> DataFrame:
+        key = mdhash_spark(F.concat_ws("\x1f", F.lit(salt), "src", "dst"))
+        return top_n(e, "src", [key, F.asc("dst")], fan).select("src", "dst")
+
+    # one eager cut: S1 feeds the hop-1 rows and the hop-2 join, and is
+    # bounded at N*fan1 rows; S2 has one consumer
+    s1 = sample(fan1, "h1").localCheckpoint()
+    s2 = sample(fan2, "h2")
     hop1 = s1.select(
         F.col("src").alias("seed"),
         F.lit(1).cast("int").alias("hop"),
@@ -1729,8 +1669,8 @@ def kg_neighbor_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
 def neighbor_sample_sql(
     mentions_sql: str, fan1: int = NS_FAN1, fan2: int = NS_FAN2
 ) -> str:
-    """DuckDB twin — single-window top-``fan`` per node (value-equal to
-    the Spark side's two-level selection), same md5 sample order."""
+    """DuckDB twin — the same top-``fan`` window per node and md5 sample
+    order."""
     from .text_analysis import MDHASH_SQL
 
     def samp(fan: int, salt: str) -> str:
@@ -1974,23 +1914,11 @@ def _indexed_adjacency(e: DataFrame, cap: int = RW_CAP) -> DataFrame:
     """(src, j, dst, deg): capped adjacency with a DENSE per-src neighbor
     index j ∈ [1, deg] by (w DESC, dst ASC) and deg = the capped degree —
     the walk transition table (step t moves to neighbor number
-    H mod deg + 1).  Same two-level salted selection as capped_adjacency
-    (no hub sorts its whole adjacency in one task; the level-2
-    row_number over ≤ salt·cap survivors EQUALS the single-window index
-    the DuckDB twin computes); deg is a count over the same src
-    partitioning, so it adds no exchange."""
-    w1 = Window.partitionBy(
-        "src", F.pmod(F.xxhash64("dst"), F.lit(_KHOP_SALT))
-    ).orderBy(F.desc("w"), F.asc("dst"))
-    lvl1 = (
-        e.withColumn("rn", F.row_number().over(w1))
-        .filter(F.col("rn") <= cap)
-        .drop("rn")
-    )
-    w2 = Window.partitionBy("src").orderBy(F.desc("w"), F.asc("dst"))
+    H mod deg + 1).  One top-``cap`` window per src (top_n, as in
+    capped_adjacency) whose row number is j; deg is a count over the same
+    src partitioning, so it adds no exchange."""
     return (
-        lvl1.withColumn("j", F.row_number().over(w2))
-        .filter(F.col("j") <= cap)
+        top_n(e, "src", [F.desc("w"), F.asc("dst")], cap, rank="j")
         .withColumn("deg", F.count("*").over(Window.partitionBy("src")))
         .select("src", "j", "dst", "deg")
     )
@@ -2014,8 +1942,8 @@ def random_walks(
     the symmetric co-mention graph, where every node has deg ≥ 1).
 
     Scale shape: the transition table is the CAPPED indexed adjacency
-    (O(nodes·cap) rows, hub-proof by the same two-level selection as
-    every other cap here), checkpointed ONCE and reused by all
+    (O(nodes·cap) rows, hub-proof by the same top_n window as every
+    other cap here), checkpointed ONCE and reused by all
     ``length`` unrolled steps; each step is one equi-join of the
     N·walks frontier against it on the current node (cap-bounded
     expansion, filtered to exactly one row by the index equality) — a
@@ -2104,9 +2032,8 @@ def random_walks_sql(
     length: int = RW_LEN,
     cap: int = RW_CAP,
 ) -> str:
-    """DuckDB twin — single-window indexed adjacency (value-equal to the
-    two-level Spark build), same keyed-md5 transition, steps unrolled as
-    chained MATERIALIZED CTEs."""
+    """DuckDB twin — the same indexed-adjacency window and keyed-md5
+    transition, steps unrolled as chained MATERIALIZED CTEs."""
     from .text_analysis import MDHASH_SQL
 
     steps = []

@@ -15,6 +15,7 @@ from ..functions import duckdb_oracle
 from ..sources.scan import spread_scan
 from ..sources.transcripts import transcripts_from_documents
 from .mention_detect import detect_mentions_arrow
+from .graph_analytics import top_n
 from .relational import ROUND_DP
 
 # --- R3: text encoding (ref kie_utils.py:68-75, configs.py:54) ---------------
@@ -789,17 +790,15 @@ UNPIVOT_SQL = _unpivot_sql()
 
 KMV_K = 64            # bottom-k size of the distinct sketch (rel σ ≈ 1/√(k−2) ≈ 12.7%)
 SAMPLE_K = 256        # bottom-k sample size of the quantile sketch
-_SKETCH_SALT = 64     # two-level top-k fan-in (same cure as ta_pack_sequences)
 _HASH_SPACE = 1 << 60  # mdhash range: first 15 md5 hex chars = 60 bits
 
 
 def approx_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Approximate distinct users + median value per event_type via
     DETERMINISTIC mergeable sketches that are exactly reproducible across
-    engines (r3 verdict item 2: the HLL/t-digest version was the one
-    permanently-`no_oracle` driver row, because those sketch internals are
-    engine-private; these are pure order statistics of a shared md5 hash,
-    so DuckDB computes byte-identical results and the hash gate applies):
+    engines: HLL/t-digest internals are engine-private, while these are
+    pure order statistics of a shared md5 hash, so DuckDB computes
+    byte-identical results and the hash gate applies:
 
     - ``approx_users``: KMV / bottom-k distinct sketch (Bar-Yossef et al.
       2002) — estimate ``(k−1)·2^60 DIV h_k`` from the k-th smallest
@@ -814,9 +813,9 @@ def approx_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     union), which is what makes them sketches at 100 TB and not a collect.
     Accuracy vs exact values is pinned in tests/test_approx_bounds.py.
 
-    Scale shape: each bottom-k runs TWO-LEVEL — per-(group, h%salt) top-k
-    windows over small cells, then a final top-k over ≤ salt·k survivors —
-    so no window sorts a whole group in a single task.
+    Scale shape: each bottom-k is one window per group (graph_analytics.
+    top_n), which Spark runs as a group limit on both sides of the
+    exchange, so no window sorts a whole group in a single task.
 
     Reference analog: metric profiling in scripts/evaluate.py:119-131.
     """
@@ -830,12 +829,7 @@ def approx_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     du = ev.select(
         "event_type", mdhash_spark(F.col("user_id").cast("string")).alias("h")
     ).distinct()
-    w1 = Window.partitionBy("event_type", F.col("h") % _SKETCH_SALT).orderBy("h")
-    lvl1 = du.withColumn("rn", F.row_number().over(w1)).filter(F.col("rn") <= KMV_K)
-    w2 = Window.partitionBy("event_type").orderBy("h")
-    botk = lvl1.drop("rn").withColumn("rn", F.row_number().over(w2)).filter(
-        F.col("rn") <= KMV_K
-    )
+    botk = top_n(du, "event_type", ["h"], KMV_K)
     kmv = botk.groupBy("event_type").agg(
         F.count("*").alias("n_h"),
         F.max(F.when(F.col("rn") == KMV_K, F.col("h"))).alias("h_k"),
@@ -857,16 +851,7 @@ def approx_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         "event_type", "event_id", "value",
         mdhash_spark(F.col("event_id").cast("string")).alias("hs"),
     )
-    v1 = Window.partitionBy("event_type", F.col("hs") % _SKETCH_SALT).orderBy(
-        "hs", "event_id"
-    )
-    slvl1 = sm.withColumn("rn", F.row_number().over(v1)).filter(
-        F.col("rn") <= SAMPLE_K
-    )
-    v2 = Window.partitionBy("event_type").orderBy("hs", "event_id")
-    samp = slvl1.drop("rn").withColumn("rn", F.row_number().over(v2)).filter(
-        F.col("rn") <= SAMPLE_K
-    )
+    samp = top_n(sm, "event_type", ["hs", "event_id"], SAMPLE_K)
     vw = Window.partitionBy("event_type").orderBy("value", "event_id")
     cw = Window.partitionBy("event_type")
     meds = (
@@ -878,9 +863,8 @@ def approx_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     n_exact = ev.groupBy("event_type").agg(F.count("*").cast("bigint").alias("n"))
     # meds joins LEFT: a group whose `value` column is entirely NULL has no
-    # median sample, and an inner join would silently drop the whole group
-    # from the output (r4 ADVICE item 1) — it keeps its row with a NULL
-    # approx_p50 instead, matching the pre-KMV behavior.
+    # median sample, and an inner join would drop the whole group from the
+    # output; it keeps its row with a NULL approx_p50 instead.
     return users.join(meds, "event_type", "left").join(n_exact, "event_type")
 
 
@@ -895,21 +879,17 @@ def approx_stats_sql() -> str:
 WITH du AS (
   SELECT DISTINCT event_type, {hu} AS h FROM events
 ),
-l1 AS (
-  SELECT event_type, h,
-         row_number() OVER (PARTITION BY event_type, h % {_SKETCH_SALT}
-                            ORDER BY h) AS rn
-  FROM du
-),
-l2 AS (
-  SELECT event_type, h,
-         row_number() OVER (PARTITION BY event_type ORDER BY h) AS rn
-  FROM l1 WHERE rn <= {KMV_K}
+botk AS (
+  SELECT * FROM (
+    SELECT event_type, h,
+           row_number() OVER (PARTITION BY event_type ORDER BY h) AS rn
+    FROM du
+  ) WHERE rn <= {KMV_K}
 ),
 kmv AS (
   SELECT event_type, count(*) AS n_h,
          max(CASE WHEN rn = {KMV_K} THEN h END) AS h_k
-  FROM l2 WHERE rn <= {KMV_K} GROUP BY event_type
+  FROM botk GROUP BY event_type
 ),
 users AS (
   SELECT event_type,
@@ -922,18 +902,13 @@ sm AS (
   SELECT event_type, event_id, value, {he} AS hs
   FROM events WHERE value IS NOT NULL
 ),
-s1 AS (
-  SELECT event_type, event_id, value, hs,
-         row_number() OVER (PARTITION BY event_type, hs % {_SKETCH_SALT}
-                            ORDER BY hs, event_id) AS rn
-  FROM sm
+samp AS (
+  SELECT * FROM (
+    SELECT event_type, event_id, value, hs,
+           row_number() OVER (PARTITION BY event_type ORDER BY hs, event_id) AS rn
+    FROM sm
+  ) WHERE rn <= {SAMPLE_K}
 ),
-s2 AS (
-  SELECT event_type, event_id, value, hs,
-         row_number() OVER (PARTITION BY event_type ORDER BY hs, event_id) AS rn
-  FROM s1 WHERE rn <= {SAMPLE_K}
-),
-samp AS (SELECT * FROM s2 WHERE rn <= {SAMPLE_K}),
 meds AS (
   SELECT event_type, value AS approx_p50
   FROM (

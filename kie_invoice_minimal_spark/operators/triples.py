@@ -33,8 +33,6 @@ mega-partition.
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
 import numpy as np
 import pyarrow as pa
 import pyarrow.compute as pc
@@ -43,7 +41,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.rules import OTHER
-from .arrow_groups import BatchFn, grouped_batches, map_groups, run_starts
+from .arrow_groups import BatchFn, map_groups, run_starts
 
 SUBJ_BUCKETS = 64
 SALT_BUCKETS = 8
@@ -139,15 +137,6 @@ def _mention_triples(m: pa.RecordBatch) -> pa.RecordBatch | None:
         m.column("surface"),
         rows,
     )
-
-
-def _triples_kernel(
-    batches: Iterator[pa.RecordBatch], key: str, to_mentions: BatchFn
-) -> Iterator[pa.RecordBatch]:
-    """Triples from a batch stream clustered on the subject column ``key``:
-    re-cut into whole subjects, map each batch to (subj, pred, turn_idx,
-    pos, surface) rows with ``to_mentions``, join in-batch."""
-    return grouped_batches(batches, key, lambda b: _mention_triples(to_mentions(b)))
 
 
 def triples_by_group(rows: DataFrame, key: str, to_triples: BatchFn) -> DataFrame:

@@ -714,7 +714,7 @@ def test_capped_surfaces_common_path_has_no_windows(spark):
 
 
 def test_capped_surfaces_skew_path_still_windows_and_binds(spark):
-    """Above the cap the skew path (two-level salted top-N) must still
+    """Above the cap the skew path (the top-N window) must still
     engage: same planted hot conversation as the r6 cap test, checked
     against the refunded implementation."""
     from kie_invoice_minimal_spark.operators.graph_analytics import (

@@ -5,6 +5,8 @@
 - The flagship native extraction keeps its single-exchange shape.
 - Scans prune columns: the mention path never reads the documents table's
   text-unrelated payload columns.
+- Every top-N cap is one window with Spark's group limit on both sides of
+  its exchange.
 """
 
 from __future__ import annotations
@@ -159,3 +161,62 @@ def test_pack_heavy_window_is_bucket_partitioned(spark):
     assert re.search(
         r"windowspecdefinition\(bkt#\d+L, doc_id#\d+L ASC", plan
     ), "per-doc cumsum lost its bucket partitioning:\n" + plan
+
+
+_TOP_N_CHAIN = ("WindowGroupLimit", "Sort", "Exchange", "WindowGroupLimit")
+
+
+def _top_n_sites(plan: str) -> set[str]:
+    """The distinct top-N sites of a formatted plan, each named by its
+    Window's Arguments with expression ids masked.  A site is a Window
+    whose child chain is WindowGroupLimit (Final) → Sort → Exchange →
+    WindowGroupLimit (Partial): the group limit runs on both sides of the
+    window's one exchange.  Asserts that every WindowGroupLimit in the
+    plan belongs to such a chain."""
+    tree = plan.split("\n\n")[0].splitlines()
+    nodes = [re.match(r"^([ :|+-]*)(\S.*?) \((\d+)\)$", line) for line in tree]
+    nodes = [(len(m.group(1)), m.group(2), m.group(3)) for m in nodes if m]
+    args = dict(re.findall(r"^\((\d+)\) .*\n(?:.+\n)*?Arguments: (.*)$", plan, re.M))
+    sites, chained = set(), 0
+    for i, (depth, name, nid) in enumerate(nodes):
+        chain = nodes[i + 1 : i + 1 + len(_TOP_N_CHAIN)]
+        if name != "Window" or tuple(n for _, n, _ in chain) != _TOP_N_CHAIN:
+            continue
+        assert [d for d, _, _ in chain] == [depth + 3 * k for k in range(1, 5)], tree
+        assert args[chain[0][2]].endswith(", Final"), args[chain[0][2]]
+        assert args[chain[3][2]].endswith(", Partial"), args[chain[3][2]]
+        sites.add(re.sub(r"#\d+", "#_", args[nid]))
+        chained += 2
+    assert chained == sum(n == "WindowGroupLimit" for _, n, _ in nodes), tree
+    return sites
+
+
+def test_top_n_is_one_window_over_a_group_limit(spark):
+    """Every top-N cap (graph_analytics.top_n) is one row_number Window
+    over a Final WindowGroupLimit, with a Partial WindowGroupLimit below
+    the exchange: Spark's group limit, not a second salted window, keeps a
+    hot key from shipping and sorting its whole group.  With the limit
+    threshold below the caps the optimizer plans no limit, so the sites
+    disappear."""
+    from kie_invoice_minimal_spark.operators import graph_analytics as GA
+    from kie_invoice_minimal_spark.operators.relational_ext import approx_stats
+
+    e = spark.createDataFrame(
+        [("a", "b", 1), ("a", "c", 2), ("b", "a", 1), ("c", "a", 2)],
+        "src string, dst string, w long",
+    )
+    cases = {
+        "capped_adjacency": (lambda: GA.capped_adjacency(e), 1),
+        "khop_kmv": (lambda: GA.khop_kmv(e), 2),  # bottom-k per v, then per u
+        "approx_stats": (lambda: approx_stats(spark, SF), 2),  # KMV + sample
+    }
+    for name, (build, n_sites) in cases.items():
+        assert len(_top_n_sites(_plan(build()))) == n_sites, name
+    key = "spark.sql.optimizer.windowGroupLimitThreshold"
+    old = spark.conf.get(key)
+    spark.conf.set(key, str(GA.KHOP_KMV_K - 1))
+    try:
+        for name, (build, _) in cases.items():
+            assert not _top_n_sites(_plan(build())), name
+    finally:
+        spark.conf.set(key, old)

@@ -4,7 +4,7 @@ item 2 / next-round item 3) and the probe/monitor agreement property
 
 The fixture plants ONE hot conversation (an agent loop spamming entity
 lists) into the real sf0.01 mention stream and proves that (a) only that
-conversation is routed through the two top-N windows, (b) the output is
+conversation is routed through the top-N window, (b) the output is
 byte-identical to the r7 all-conversations-window model, and (c)
 kg_conv_fanout's n_over_cap pins the fixture — the monitor observes
 exactly the decision the cap probe makes."""
@@ -17,7 +17,6 @@ from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from kie_invoice_minimal_spark.operators.graph_analytics import (
-    _KHOP_SALT,
     CAP_PATH_STATS,
     COMENTION_CAP,
     capped_conv_surfaces,
@@ -166,7 +165,7 @@ def test_probe_monitor_agreement_fuzz(spark, profile):
 def test_skew_value_equals_all_window_model_with_weights(spark):
     """Weighted multiplicities + several over-cap convs: the per-conv
     routing must reproduce the all-window model including (cnt DESC,
-    surface ASC) ordering and the salted two-level selection."""
+    surface ASC) ordering through the one top-N window."""
     cap = 3
     rows = []
     # conv A: 6 surfaces with distinct counts (reverse-alphabetical wins)
@@ -191,5 +190,3 @@ def test_skew_value_equals_all_window_model_with_weights(spark):
         ("B", "b0"), ("B", "b1"), ("B", "b2"),
         ("C", "c0"), ("C", "c1"),
     }
-    # agreement holds with the salt in play for every (conv, cell) split
-    assert _KHOP_SALT > 1

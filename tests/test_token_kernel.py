@@ -20,7 +20,7 @@ from kie_invoice_minimal_spark.operators.mention_detect import (
     _classify_batch,
 )
 from kie_invoice_minimal_spark.operators.triples import (
-    _triples_kernel,
+    _mention_triples,
     materialize_triples,
 )
 from kie_invoice_minimal_spark.oracle import detect_mentions, extract_triples
@@ -77,7 +77,9 @@ def _mention_join(turns) -> list[tuple]:
     """Classify, then join the mentions with the kernel behind
     ``materialize_triples``."""
     batches = _turn_batches(turns, max(len(turns), 1))
-    out = _triples_kernel(iter(batches), "conv_id", lambda b: _keyed(_classify_batch(b)))
+    out = grouped_batches(
+        iter(batches), "conv_id", lambda b: _mention_triples(_keyed(_classify_batch(b)))
+    )
     return [tuple(r.values()) for b in out for r in b.to_pylist()]
 
 

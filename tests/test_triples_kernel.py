@@ -12,12 +12,13 @@ import pyarrow as pa
 
 from pyspark.sql import functions as F
 
+from kie_invoice_minimal_spark.operators.arrow_groups import grouped_batches
 from kie_invoice_minimal_spark.operators.mention_detect import (
     MENTION_SCHEMA,
     detect_mentions_arrow,
 )
 from kie_invoice_minimal_spark.operators.triples import (
-    _triples_kernel,
+    _mention_triples,
     materialize_triples,
 )
 from kie_invoice_minimal_spark.oracle import extract_triples
@@ -155,7 +156,7 @@ def test_kernel_matches_grouping_at_any_batch_size():
         for _ in range(2):
             batches.insert(rng.randint(0, len(batches)), pa.RecordBatch.from_pylist([], schema))
 
-        out = list(_triples_kernel(iter(batches), "subj", lambda b: b))
+        out = list(grouped_batches(iter(batches), "subj", _mention_triples))
         subjects = [set(b.column("subj").to_pylist()) for b in out]
         assert sum(map(len, subjects)) == len(set().union(*subjects)), rows
         got = [r for b in out for r in b.to_pylist()]
