@@ -20,7 +20,9 @@ because no edge does.  The head classifies each edge as match/no-match:
 
 Both entity-linking paths call the kernel: the driver path over all its
 pairs, the Spark path once per whole-block Arrow batch
-(:func:`score_candidates`, ``arrow_groups.map_groups`` on block_key).
+(:func:`score_candidates`, ``arrow_groups.map_groups`` on block_key),
+which computes the batch's edge features from its normal forms with
+``blocking.pair_features``, as the driver path does.
 
 Weights are deterministic (seeded) module constants — the analog of the
 reference's checkpoint load (``kie_utils.py:15-65``).  The decisive edge
@@ -43,6 +45,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from .arrow_groups import map_groups
+from .blocking import pair_features
 
 N_NODE_FEATS = 10  # mirrors the reference's 10-dim node features (E1)
 HIDDEN = 16
@@ -212,22 +215,17 @@ SCORED_SCHEMA = "surface_a string, surface_b string, score double, is_match bool
 
 def _score_batch(b: pa.RecordBatch, n_layers: int = N_LAYERS) -> pa.RecordBatch:
     """Score a batch of candidate pairs (the columns of
-    ``blocking.candidate_pairs``) holding whole blocks."""
+    ``blocking.candidate_pairs_from_surfaces``) holding whole blocks."""
     norms = pc.unique(pa.concat_arrays([b.column("norm_a"), b.column("norm_b")]))
-
-    def col(name: str) -> np.ndarray:
-        return b.column(name).to_numpy(zero_copy_only=False)
-
+    na = pc.index_in(b.column("norm_a"), norms).to_numpy()
+    nb = pc.index_in(b.column("norm_b"), norms).to_numpy()
     p = score_pairs(
-        col("block_key"),
-        pc.index_in(b.column("norm_a"), norms).to_numpy(),
-        pc.index_in(b.column("norm_b"), norms).to_numpy(),
+        b.column("block_key").to_numpy(),
+        na,
+        nb,
         node_features(norms),
-        col("jaccard"),
-        col("norm_eq"),
-        col("prefix_eq"),
-        col("len_ratio"),
-        n_layers,
+        *pair_features(norms, na, nb),
+        n_layers=n_layers,
     )
     return pa.RecordBatch.from_arrays(
         [b.column("surface_a"), b.column("surface_b"), pa.array(p), pa.array(p >= SCORE_THS)],

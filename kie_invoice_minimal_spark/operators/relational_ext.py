@@ -1024,7 +1024,7 @@ def el_levenshtein_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     metric complementing Jaccard.  Round 1 ran an unconditioned self-cross
     join over distinct surfaces (quadratic once distinct surfaces hit
     millions); candidates now come from MinHash band blocking over char
-    3-grams of the normalized form (the blocking.candidate_pairs scheme,
+    3-grams of the normalized form (the blocking.band_keys scheme,
     re-derived md5-portable so the DuckDB twin computes identical bands),
     then the levenshtein(norm) <= 3 verify runs only on colliding pairs.
     Norm-equal aliases share every band, so true alias pairs always survive;

@@ -23,11 +23,16 @@ connected components uses too):
   stage job and the read: 3 jobs on the test brand fixture, where the
   Spark path runs 10); at the sizes the pipelines link, the chain is
   bound by job count, not data.
-- **Spark** (above the gate): the same steps as Spark plans over the
-  checkpoint — band self-join, ``score_candidates`` (``mapInArrow`` over
-  whole blocks), distributed connected components, a window minimum.
+- **Spark** (above the gate): the same kernels over the checkpoint —
+  ``blocking.candidate_pairs_from_surfaces`` (band keys per Arrow batch,
+  the capped band self-join on scalar columns), ``score_candidates``
+  (``mapInArrow`` over whole blocks, the pair features computed from the
+  batch's normal forms), distributed connected components, a window
+  minimum.
 
-Both paths give the same map (tested on every fixture).
+Both paths run one blocking kernel (``blocking.band_keys``,
+``blocking.pair_features``) and give the same map (tested on every
+fixture).
 """
 
 from __future__ import annotations
@@ -66,16 +71,7 @@ def local_entity_map(t: pa.Table) -> pa.Table:
     sid = t.column("sid").to_numpy()
     ids = sid[valid]
     p = local_candidate_pairs(names)
-    score = score_pairs(
-        p.block_key,
-        p.norm_a,
-        p.norm_b,
-        node_features(pa.array(p.norms, pa.string())),
-        p.jaccard,
-        p.norm_eq,
-        p.prefix_eq,
-        p.len_ratio,
-    )
+    score = score_pairs(p.block_key, p.norm_a, p.norm_b, node_features(p.norms), *p.features)
     ok = score >= SCORE_THS
     nodes, comp = components_of(ids[p.a[ok]], ids[p.b[ok]])
     # entity_id: the component of the surface's id, else the id itself

@@ -48,6 +48,9 @@ class Stage:
     name: str
     # fn(spark, {upstream_name: DataFrame}) -> DataFrame
     fn: Callable[[SparkSession, Mapping[str, DataFrame]], DataFrame]
+    # the caller's input provider that fn calls, if any: its
+    # provider_fingerprint is recorded in place of fn's stage_fn_fingerprint
+    source: Callable | None = None
 
 
 _CODE_FP: list[str] = []  # per-process cache
@@ -138,12 +141,43 @@ def stage_fn_fingerprint(fn) -> str:
             return "in-package"
         src = inspect.getsource(fn)
     except (OSError, TypeError):
-        if not _PROC_MARKER:
-            import uuid
-
-            _PROC_MARKER.append(uuid.uuid4().hex)
-        return f"uninspectable-{_PROC_MARKER[0]}"
+        return _proc_marker()
     return hashlib.md5(src.encode()).hexdigest()
+
+
+def _proc_marker() -> str:
+    if not _PROC_MARKER:
+        import uuid
+
+        _PROC_MARKER.append(uuid.uuid4().hex)
+    return f"uninspectable-{_PROC_MARKER[0]}"
+
+
+def _plain(v) -> bool:
+    return isinstance(v, (str, int, float, bool, type(None))) or (
+        isinstance(v, tuple) and all(map(_plain, v))
+    )
+
+
+def provider_fingerprint(fn) -> str:
+    """:func:`stage_fn_fingerprint` of an input provider plus the values it
+    captures (closure cells, defaults): ``lambda sp: read(sp, path)`` over
+    another ``path`` reads other input.  Plain values (str, int, float,
+    bool, None, tuples of them) are hashed by ``repr``; any other captured
+    value, or a callable object, fingerprints by this process and identity,
+    so it never resumes in another process."""
+    import hashlib
+
+    values = [c.cell_contents for c in getattr(fn, "__closure__", None) or ()]
+    values += getattr(fn, "__defaults__", None) or ()
+    values += (getattr(fn, "__kwdefaults__", None) or {}).values()
+    if not hasattr(fn, "__code__"):  # a callable object keeps its values elsewhere
+        captured = f"{_proc_marker()}-{id(fn)}"
+    elif all(map(_plain, values)):
+        captured = repr(values)
+    else:
+        captured = f"{_proc_marker()}-{[id(v) for v in values]}"
+    return f"{stage_fn_fingerprint(fn)}:{hashlib.md5(captured.encode()).hexdigest()}"
 
 
 class _StageOutputs(Mapping):
@@ -205,26 +239,30 @@ class CheckpointedPipeline:
             # did not complete — recompute rather than crash the resume
             return None
 
-    def _stage_fn(self, stage: str):
+    def _fn_fingerprint(self, stage: str) -> str | None:
+        """The stage's recorded callable fingerprint: its source's
+        provider_fingerprint, else its fn's stage_fn_fingerprint."""
         for st in self.stages:
             if st.name == stage:
-                return st.fn
+                return provider_fingerprint(st.source) if st.source else stage_fn_fingerprint(st.fn)
         return None
 
     def is_complete(self, stage: str) -> bool:
         """Complete AND built by THIS code version (see
-        engine_code_fingerprint) AND by this stage callable's source (see
-        stage_fn_fingerprint — out-of-package stage edits must also
-        invalidate) — a stale or pre-manifest snapshot reads as
-        incomplete and recomputes rather than resuming silently."""
+        engine_code_fingerprint) AND by this stage callable's source, or
+        by this input provider with these captured values (see
+        stage_fn_fingerprint, provider_fingerprint — out-of-package stage
+        edits and other input must also invalidate) — a stale or
+        pre-manifest snapshot reads as incomplete and recomputes rather
+        than resuming silently."""
         st = self.state(stage)
-        fn = self._stage_fn(stage)
+        fp = self._fn_fingerprint(stage)
         return bool(
             st
             and st.get("status") == "complete"
             and st.get("code_fingerprint") == engine_code_fingerprint()
-            and fn is not None
-            and st.get("stage_fn_fingerprint") == stage_fn_fingerprint(fn)
+            and fp is not None
+            and st.get("stage_fn_fingerprint") == fp
         )
 
     def _footers(self, stage: str) -> dict[str, pq.FileMetaData]:
@@ -297,7 +335,7 @@ class CheckpointedPipeline:
             "completed_at": time.strftime("%Y-%m-%dT%H:%M:%SZ", time.gmtime()),
             # resume manifest: stale-code snapshots must not resume
             "code_fingerprint": engine_code_fingerprint(),
-            "stage_fn_fingerprint": stage_fn_fingerprint(self._stage_fn(name)),
+            "stage_fn_fingerprint": self._fn_fingerprint(name),
         }
         tmp = self._state_path(name) + ".tmp"
         with open(tmp, "w") as f:
@@ -308,15 +346,18 @@ class CheckpointedPipeline:
     def run(self, resume: bool = True) -> Mapping[str, DataFrame]:
         """Execute stages in order, skipping completed ones when resuming.
 
-        Returns every stage's output, keyed and iterated in stage order.  A
-        stage skipped as complete is loaded on first access, not up front,
-        so a resume reads only the snapshots that a recomputed stage or the
-        caller uses."""
+        Stage order is topological, so once a stage recomputes every later
+        stage recomputes too: none loads a snapshot built from an output
+        that has just changed.  Returns every stage's output, keyed and
+        iterated in stage order.  A stage skipped as complete is loaded on
+        first access, not up front, so a resume reads only the snapshots
+        that a recomputed stage or the caller uses."""
         done = _StageOutputs(self.load)
         for st in self.stages:
             if resume and self.is_complete(st.name):
                 done.add(st.name)
                 continue
+            resume = False
             df = st.fn(self.spark, done)
             done.add(st.name, self._write_stage(st.name, df))
         return done
@@ -362,7 +403,10 @@ def kg_pipeline(
     one Arrow crossing that detects and joins, the same rows as
     ``materialize_triples`` over the mentions) ∪ the alias triples of the
     entity map, so a triples-only resume reads the transcripts and
-    entity_map snapshots and never the larger mentions one.  An upstream
+    entity_map snapshots and never the larger mentions one.  The first
+    named stage, which is the one that calls ``transcripts_provider``,
+    records the provider's fingerprint (:func:`provider_fingerprint`), so a
+    root built from other input recomputes every stage.  An upstream
     stage that is not named is computed inline by the named stage that
     needs it (once per stage run), so a consumer whose resume point is the
     mention stream or the capped table does not pay for writing the
@@ -402,14 +446,18 @@ def kg_pipeline(
             up[name] = fn({d: resolve(up, d) for d in deps})
         return up[name]
 
+    names = [name for name in graph if name in stages]
     return CheckpointedPipeline(
         spark,
         root,
         [
             # inline stages land in the ChainMap's own dict; a completed
             # stage is read through ``done`` only if a named stage needs it
-            Stage(name, lambda _sp, done, name=name: resolve(ChainMap({}, done), name))
-            for name in graph
-            if name in stages
+            Stage(
+                name,
+                lambda _sp, done, name=name: resolve(ChainMap({}, done), name),
+                transcripts_provider if name == names[0] else None,
+            )
+            for name in names
         ],
     )

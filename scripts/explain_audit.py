@@ -5,9 +5,12 @@ exchanges, row-at-a-time Python).
 
 Usage: python scripts/explain_audit.py [query_name ...]   (default: headline set)
        python scripts/explain_audit.py --table      (the PLANS.md table body)
-       python scripts/explain_audit.py --dump DIR   (DIR/<query>.txt, one masked
-                                                     plan per registered query)
+       python scripts/explain_audit.py --dump DIR   (DIR/<query>.txt, the masked
+                                                     plans of every registered query)
 
+A query's dump holds the plan of every eager ``localCheckpoint`` job its
+build runs, in order, then its final plan, so work that a change moves
+between a checkpoint job and the final plan shows on both sides of a diff.
 Two ``--dump`` directories of the same tree are equal (``diff -r``): the
 dump masks what changes from run to run, so a plan-diff between two trees
 shows only the plans a change moved.
@@ -20,6 +23,8 @@ import os
 import re
 import sys
 from contextlib import redirect_stdout
+
+from pyspark.sql.classic.dataframe import DataFrame
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
@@ -54,6 +59,29 @@ def mask_plan(plan: str) -> str:
     plan = re.sub(r"plan_id=\d+", "plan_id=_", plan)
     plan = re.sub(r"RDD\[\d+\]", "RDD[_]", plan)
     return re.sub(r"(kie_staged_[a-z]+_)[a-z0-9_]{8}", r"\1XXXXXXXX", plan)
+
+
+def dump(spark, queries, out_dir: str) -> None:
+    """Write ``out_dir/<name>.txt`` per query: the masked plan of every eager
+    ``localCheckpoint`` job its build runs, in order, then its final plan."""
+    os.makedirs(out_dir, exist_ok=True)
+    stock = DataFrame.localCheckpoint
+    for name, fn in queries.items():
+        plans = []
+
+        def recorded(self, eager=True, *args, **kwargs):
+            if eager:
+                plans.append(plan_of(self))
+            return stock(self, eager, *args, **kwargs)
+
+        DataFrame.localCheckpoint = recorded
+        try:
+            plans.append(plan_of(fn(spark, SF_DIR)))
+        finally:
+            DataFrame.localCheckpoint = stock
+        labels = [f"localCheckpoint {i}" for i in range(1, len(plans))] + ["final"]
+        with open(os.path.join(out_dir, f"{name}.txt"), "w") as f:
+            f.write("".join(f"==== {k} ====\n{mask_plan(p)}" for k, p in zip(labels, plans)))
 
 
 def audit(name: str, plan: str) -> list[str]:
@@ -98,10 +126,7 @@ def main() -> None:
             print(table_row(name, plan_of(fn(spark, SF_DIR))), flush=True)
         return
     if args and args[0] == "--dump":
-        os.makedirs(args[1], exist_ok=True)
-        for name, fn in qs.items():
-            with open(os.path.join(args[1], f"{name}.txt"), "w") as f:
-                f.write(mask_plan(plan_of(fn(spark, SF_DIR))))
+        dump(spark, qs, args[1])
         return
     names = args or HEADLINE
     for name in names:

@@ -56,20 +56,21 @@ def main() -> None:
                     help="run the staged checkpointed pipeline (transcripts -> "
                          "mentions -> entity_map; transcripts + entity_map -> "
                          "triples) rooted here, always on the Arrow engine; "
-                         "re-running resumes from completed snapshots")
+                         "re-running with the same input arguments resumes "
+                         "from completed snapshots")
     args = ap.parse_args()
     if args.checkpoint_root and args.engine == "native":
         ap.error("--checkpoint-root runs the Arrow detector; --engine native does not apply")
+    if not (args.synth or args.input):
+        ap.error("need --input or --synth")
 
     spark = get_spark(app_name="kg-pipeline", master=args.master)
     spark.sparkContext.setLogLevel("ERROR")
 
-    if args.synth:
-        transcripts = synth_transcripts(spark, args.synth, partitions=args.partitions)
-    elif args.input:
-        transcripts = spark.read.parquet(args.input)
-    else:
-        ap.error("need --input or --synth")
+    n_synth, input_dir, parts = args.synth, args.input, args.partitions
+
+    def provide(sp):  # plain captured values: a checkpoint root resumes under equal ones
+        return synth_transcripts(sp, n_synth, partitions=parts) if n_synth else sp.read.parquet(input_dir)
 
     detect = detect_mentions_arrow if args.engine == "arrow" else detect_mentions_native
 
@@ -77,7 +78,7 @@ def main() -> None:
         from kie_invoice_minimal_spark.sources.checkpoints import kg_pipeline
 
         t0 = time.time()
-        pipe = kg_pipeline(spark, args.checkpoint_root, lambda sp: transcripts)
+        pipe = kg_pipeline(spark, args.checkpoint_root, provide)
         out = pipe.run(resume=True)
         n_triples = out["triples"].count()
         print(
@@ -109,6 +110,7 @@ def main() -> None:
         )
         warm_triples.write.format("noop").mode("overwrite").save()
 
+    transcripts = provide(spark)
     if args.link_entities:
         mentions = detect(transcripts)
         emap = link_entities(mentions)

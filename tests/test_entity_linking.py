@@ -8,7 +8,8 @@ import pytest
 from pyspark.sql import functions as F
 
 from kie_invoice_minimal_spark.functions.rules import ALIAS_GROUPS
-from kie_invoice_minimal_spark.operators.blocking import candidate_pairs, normalize_surface
+from kie_invoice_minimal_spark.operators import blocking
+from kie_invoice_minimal_spark.operators.blocking import normalize_surface
 from kie_invoice_minimal_spark.operators.gcn_scorer import accepted_edges, score_candidates
 from kie_invoice_minimal_spark.operators.mention_detect import detect_mentions_arrow
 from kie_invoice_minimal_spark.plans.entity_linking import alias_triples, link_entities
@@ -45,6 +46,10 @@ def test_cc_chain_and_star(spark, cc_both_paths):
         assert all(assign[x] == 500 for x in [500, *range(501, 560)]), path
 
 
+def _pairs(mentions):
+    return blocking.candidate_pairs_from_surfaces(mentions.select("surface").distinct())
+
+
 @pytest.fixture(scope="module")
 def brand_mentions(spark):
     t = synth_transcripts(spark, 3000)
@@ -55,7 +60,7 @@ def test_blocking_recall(spark, brand_mentions):
     """Every true alias pair (same group) that co-occurs must be a candidate."""
     pairs = {
         (r.surface_a, r.surface_b)
-        for r in candidate_pairs(brand_mentions).collect()
+        for r in _pairs(brand_mentions).collect()
     }
     present = {r.surface for r in brand_mentions.select("surface").distinct().collect()}
     for grp in ALIAS_GROUPS:
@@ -71,7 +76,7 @@ def test_scorer_separates(spark, brand_mentions):
     for gi, grp in enumerate(ALIAS_GROUPS):
         for s in grp:
             truth[s] = gi
-    edges = accepted_edges(score_candidates(candidate_pairs(brand_mentions)))
+    edges = accepted_edges(score_candidates(_pairs(brand_mentions)))
     for r in edges.collect():
         assert truth[r.surface_a] == truth[r.surface_b], (
             r.surface_a, r.surface_b, r.score,
@@ -113,11 +118,12 @@ def test_alias_triples(spark, brand_mentions, both_paths):
         assert len(rows) > 0, path
 
 
-def test_block_size_cap(spark, brand_mentions):
+def test_block_size_cap(spark, brand_mentions, monkeypatch):
     """Oversized blocks are dropped, not exploded (the spill-avoidance /
     hot-block policy): with a tiny cap, candidate volume shrinks."""
-    full = candidate_pairs(brand_mentions).count()
-    capped = candidate_pairs(brand_mentions, max_block_size=2).count()
+    full = _pairs(brand_mentions).count()
+    monkeypatch.setattr(blocking, "MAX_BLOCK_SIZE", 2)
+    capped = _pairs(brand_mentions).count()
     assert capped < full
     assert capped >= 0
 

@@ -58,3 +58,25 @@ def test_plan_changes_survive_the_mask():
         assert explain_audit.mask_plan(moved) != masked, moved
     assert "kie_staged_el_XXXXXXXX/triples" in masked
     assert "conv_id#_" in masked and "[plan_id=_]" in masked and "RDD[_]" in masked
+
+
+def _stub_query(spark, _sf_dir):
+    """A query whose build runs one eager checkpoint job (an aggregate) and
+    whose final plan joins the checkpoint back."""
+    counts = spark.range(40).selectExpr("id % 3 AS k").groupBy("k").count().localCheckpoint()
+    return counts.join(spark.range(3).withColumnRenamed("id", "k"), "k")
+
+
+def test_dump_holds_checkpoint_plans(spark, tmp_path):
+    """``--dump`` writes the plan of each eager ``localCheckpoint`` job a
+    query's build runs ahead of its final plan, and two dumps of one query
+    mask equal."""
+    for run in ("a", "b"):
+        explain_audit.dump(spark, {"stub": _stub_query}, str(tmp_path / run))
+    a, b = ((tmp_path / run / "stub.txt").read_text() for run in ("a", "b"))
+    assert a == b
+    checkpoint, final = a.split("==== final ====\n")
+    assert checkpoint.startswith("==== localCheckpoint 1 ====\n")
+    assert checkpoint.count("== Physical Plan ==") == final.count("== Physical Plan ==") == 1
+    assert "HashAggregate" in checkpoint and "HashAggregate" not in final
+    assert "Scan ExistingRDD" in final

@@ -17,7 +17,7 @@ import numpy as np
 import pyarrow as pa
 from pyspark.sql import functions as F
 
-from kie_invoice_minimal_spark.operators.blocking import candidate_pairs
+from kie_invoice_minimal_spark.operators.blocking import candidate_pairs_from_surfaces
 from kie_invoice_minimal_spark.operators.gcn_scorer import _score_batch
 from kie_invoice_minimal_spark.operators.mention_detect import detect_mentions_arrow
 from kie_invoice_minimal_spark.sources.transcripts import transcripts_from_documents
@@ -27,7 +27,8 @@ SF_DIR = "/root/testdata/sf0.01"
 
 def test_accepted_edges_depth_invariant_l3_vs_l5(spark):
     m = detect_mentions_arrow(transcripts_from_documents(spark, SF_DIR))
-    pairs = candidate_pairs(m.filter(F.col("mention_type") == "BRAND")).toArrow()
+    brand = m.filter(F.col("mention_type") == "BRAND")
+    pairs = candidate_pairs_from_surfaces(brand.select("surface").distinct()).toArrow()
     assert pairs.num_rows > 0
     batch = pairs.combine_chunks().to_batches()[0]
     s3, s5 = (

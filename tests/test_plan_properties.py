@@ -220,3 +220,37 @@ def test_top_n_is_one_window_over_a_group_limit(spark):
             assert not _top_n_sites(_plan(build())), name
     finally:
         spark.conf.set(key, old)
+
+
+def _exchange_columns(df) -> list[list[tuple[str, str]]]:
+    """(name, type) of the columns each Exchange of ``df``'s physical plan
+    carries (AQE's initial plan, before any stage runs)."""
+
+    def items(seq):
+        it = seq.iterator()
+        while it.hasNext():
+            yield it.next()
+
+    plan = df._jdf.queryExecution().executedPlan()
+    stack = [plan.executedPlan() if plan.nodeName() == "AdaptiveSparkPlan" else plan]
+    out = []
+    while stack:
+        node = stack.pop()
+        if "Exchange" in node.nodeName():
+            out.append([(a.name(), a.dataType().catalogString()) for a in items(node.output())])
+        stack.extend(items(node.children()))
+    return out
+
+
+def test_band_self_join_shuffles_no_arrays(spark):
+    """Above the entity-linking gate, no exchange of the band self-join
+    carries an array column: the grams stay inside the blocking and scoring
+    kernels, and the join moves scalar (surface, norm, band_no, block_key)
+    rows."""
+    from kie_invoice_minimal_spark.operators.blocking import candidate_pairs_from_surfaces
+
+    surf = spark.createDataFrame([("Vinamilk",), ("VINAMILK",), ("Kinh Do",)], "surface string")
+    exchanges = _exchange_columns(candidate_pairs_from_surfaces(surf))
+    assert len(exchanges) >= 3, exchanges
+    arrays = [cols for cols in exchanges if any(t.startswith("array") for _n, t in cols)]
+    assert not arrays, arrays

@@ -3,6 +3,8 @@ triples; completed stages are loaded, not recomputed (BASELINE.md row 6)."""
 
 from __future__ import annotations
 
+import sys
+
 import pytest
 
 from kie_invoice_minimal_spark.sources.checkpoints import kg_pipeline
@@ -17,27 +19,91 @@ def _triples(dfs):
     return sorted(map(tuple, dfs["triples"].collect()))
 
 
-def test_full_run_then_resume_skips_recompute(spark, tmp_path):
+def test_full_run_then_resume_skips_recompute(spark, tmp_path, monkeypatch):
     root = str(tmp_path / "ckpt")
     p1 = kg_pipeline(spark, root, _provider(400))
     out1 = _triples(p1.run())
 
-    # second run must NOT recompute anything: poison the provider (the
-    # transcripts stage calling it would raise) AND poison _write_stage
-    # (ANY recomputed stage must write its snapshot, so a resume that
-    # recomputes trips it).  The stage fns themselves are left alone —
-    # under the r8 per-stage source manifest, REPLACING a stage fn is a
-    # code change and legitimately forces recompute (see
-    # test_changed_stage_fn_source_forces_recompute).
-    def boom(sp):
+    # second run must NOT recompute anything: poison what the provider
+    # calls (the transcripts stage calling it would raise) AND poison
+    # _write_stage (ANY recomputed stage must write its snapshot, so a
+    # resume that recomputes trips it).  The provider itself is an equal
+    # one: another provider, or other captured values, is other input and
+    # legitimately forces recompute (test_other_input_recomputes).
+    def boom(sp, n):
         raise AssertionError("stage recomputed despite checkpoint")
 
-    p2 = kg_pipeline(spark, root, boom)
+    monkeypatch.setattr(sys.modules[__name__], "synth_transcripts", boom)
+    p2 = kg_pipeline(spark, root, _provider(400))
     p2._write_stage = lambda name, df: (_ for _ in ()).throw(
         AssertionError(f"stage {name} recomputed despite checkpoint")
     )
     out2 = _triples(p2.run(resume=True))
     assert out1 == out2
+
+
+def _written(p) -> list[str]:
+    """Stage names ``p.run()`` writes from now on, in order."""
+    names = []
+    write = p._write_stage
+
+    def spy(name, df):
+        names.append(name)
+        return write(name, df)
+
+    p._write_stage = spy
+    return names
+
+
+def test_other_provider_resumes_nothing(spark, tmp_path):
+    """A root built from one transcripts provider does not resume under
+    another: 100 turns, then a provider of 300 returns 300 rows."""
+    root = str(tmp_path / "ckpt_other")
+    kg_pipeline(spark, root, lambda sp: synth_transcripts(sp, 100), ("transcripts",)).run()
+    out = kg_pipeline(spark, root, lambda sp: synth_transcripts(sp, 300), ("transcripts",)).run()
+    assert out["transcripts"].count() == 300
+
+
+def test_other_input_recomputes(spark, tmp_path):
+    """The same provider source over another captured value recomputes
+    every stage, and gives the cold build's triples; a provider over equal
+    captured values (a path, as the benchmark's parquet reader) resumes
+    without writing."""
+    root = str(tmp_path / "ckpt_input")
+    kg_pipeline(spark, root, _provider(100)).run()
+    p = kg_pipeline(spark, root, _provider(300))
+    written = _written(p)
+    out = _triples(p.run())
+    assert written == ["transcripts", "mentions", "entity_map", "triples"]
+    assert out == _triples(kg_pipeline(spark, str(tmp_path / "cold"), _provider(300)).run())
+
+    path = str(tmp_path / "turns")
+    synth_transcripts(spark, 200).write.parquet(path)
+
+    def reader(path):
+        return lambda sp: sp.read.parquet(path)
+
+    kg_pipeline(spark, str(tmp_path / "ckpt_path"), reader(path)).run()
+    again = kg_pipeline(spark, str(tmp_path / "ckpt_path"), reader(path))
+    written = _written(again)
+    again.run()
+    assert written == []
+
+
+def test_provider_fingerprint_captured_values(spark):
+    """Plain captured values fingerprint by value; any other captured value
+    by identity, within this process only."""
+    from kie_invoice_minimal_spark.sources.checkpoints import provider_fingerprint
+
+    assert provider_fingerprint(_provider(5)) == provider_fingerprint(_provider(5))
+    assert provider_fingerprint(_provider(5)) != provider_fingerprint(_provider(6))
+    a, b = spark.range(1), spark.range(1)
+
+    def over(df):
+        return lambda sp: df
+
+    assert provider_fingerprint(over(a)) == provider_fingerprint(over(a))
+    assert provider_fingerprint(over(a)) != provider_fingerprint(over(b))
 
 
 def test_kill_midway_then_resume(spark, tmp_path):
@@ -196,13 +262,15 @@ def test_changed_stage_fn_source_forces_recompute(spark, tmp_path):
         _stage_rows_v2
     )
 
-    # in-package stage fns record the constant (covered by the engine fp)
+    # in-package stage fns record the constant (covered by the engine fp),
+    # except the first, which records its transcripts provider
+    from kie_invoice_minimal_spark.sources.checkpoints import provider_fingerprint
+
     root2 = str(tmp_path / "ckpt_fnfp2")
     kp = kg_pipeline(spark, root2, _provider(50))
     kp.run()
-    assert all(
-        m["stage_fn_fingerprint"] == "in-package" for m in kp.metrics()
-    )
+    recorded = [m["stage_fn_fingerprint"] for m in kp.metrics()]
+    assert recorded == [provider_fingerprint(_provider(50))] + ["in-package"] * 3
 
     # uninspectable callables never resume across processes: the marker is
     # process-stable but embeds a per-process uuid
